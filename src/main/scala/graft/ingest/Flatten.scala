@@ -57,6 +57,12 @@ object Flatten {
               // Spark's cast(struct→string) '{a, b}' rendering.
               case (StringType, _: StructType | _: ArrayType | _: MapType) =>
                 to_json(col(s"reported.$p")).as(p)
+              // A dictionary property: schema-on-read JSON infers an
+              // object as a STRUCT of its keys, and Spark has no
+              // struct→map cast — round-trip through JSON text instead
+              // ({} → empty map, absent → null).
+              case (m: MapType, _: StructType) =>
+                from_json(to_json(col(s"reported.$p")), m).as(p)
               case _ => col(s"reported.$p").cast(f.dataType).as(p)
             }
             case None => lit(null).cast(f.dataType).as(p)

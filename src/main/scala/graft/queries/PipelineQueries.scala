@@ -187,11 +187,10 @@ object PipelineQueries {
         val nationTable = Flatten.flattenNodes(nodeEnvelopes(s, d), kind, model)
         val linkTable = Flatten.flattenEdges(edgeEnvelopes(s, d))
         val base = s"${graft.Tables.scratchRoot}/graft_pipe_${graft.Tables.dirTag(d)}"
-        val paths = TableSink.writeAll(Map(
+        TableSink.writeAll(Map(
           ModelCompiler.tableName(kind.fqn) -> nationTable,
           ModelCompiler.linkTableName("infra_region", "infra_nation") ->
             linkTable), base)
-        TableSink.registerProd(s, paths)
         s.sql(
           """SELECT l.from_id, l.to_id, n.name, n.regionkey, n.region
             |FROM link_infra_region_infra_nation l
@@ -238,8 +237,8 @@ object PipelineQueries {
           s"${graft.Tables.scratchRoot}/graft_envelopes_${graft.Tables.dirTag(d)}_v$DumpVersion"
         ensureDump(d, Seq("region", "nation"), dump)(twoLevelEnvelopes(s, d))
         val env = GraphSource.readEnvelopes(s, dump)
-        val search = GraphSource.parseSearch("is(graph_root) -[1:]->").get
-        GraphSource.evaluate(env, search, maxDepth = 2)
+        val search = GraphSource.parseChain("is(graph_root) -[1:]->").get
+        GraphSource.evaluateChain(env, search, depthCap = 2)
           .select(col("id"), col("reported.name").as("name"))
           .orderBy("id")
       },
@@ -260,9 +259,9 @@ object PipelineQueries {
         ensureDump(d, Seq("region", "nation", "customer"), dump)(
           threeLevelEnvelopes(s, d))
         val env = GraphSource.readEnvelopes(s, dump)
-        val search = GraphSource.parseSearch(
+        val search = GraphSource.parseChain(
           """is(graph_root) and name != "ASIA" -[1:1]->""").get
-        GraphSource.evaluate(env, search)
+        GraphSource.evaluateChain(env, search)
           .select(col("id"), col("reported.name").as("name"))
           .orderBy("id")
       },

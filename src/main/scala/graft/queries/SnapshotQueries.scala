@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
-import graft.sink.SnapshotSwap
+import graft.sink.{SnapshotSwap, TableSink}
 
 /** q_swap_snapshot: the staging→prod atomic swap (P12) exercised
   * end-to-end — write a per-status orders rollup through the swap
@@ -70,8 +70,8 @@ object SnapshotQueries {
         val base = s"${graft.Tables.scratchRoot}/graft_snap_${graft.Tables.dirTag(d)}"
         // First sync: stale snapshot (limited); second sync: full data.
         SnapshotSwap.write(rollup(s, d).limit(1), base, "orders_rollup")
-        SnapshotSwap.writeAndRead(s, rollup(s, d), base, "orders_rollup")
-          .orderBy("o_orderstatus")
+        TableSink.writeAll(Map("orders_rollup" -> rollup(s, d)), base)
+        s.table("orders_rollup").orderBy("o_orderstatus")
       },
       """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
         |CAST(round(sum(o_totalprice) * 100) AS BIGINT) AS sum_price_e2

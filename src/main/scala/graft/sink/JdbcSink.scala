@@ -37,18 +37,15 @@ object JdbcSink {
     // Bounded-pool concurrent staging writes (TableSink.forEachTable):
     // each table lands in its own tmp_ staging table over its own JDBC
     // connections, so the only shared resource is the target DB's
-    // write throughput. The JDBC pool is bounded SEPARATELY from the
-    // parquet sync pool (SPARK_GRAFT_JDBC_POOL, default 4): overwrite
-    // mode issues DROP/CREATE dictionary DDL, which embedded engines
-    // like Derby serialize under lock timeouts — a wide pool turns that
-    // serialization into intermittent lock-timeout SQLExceptions. Each
-    // table additionally retries transient lock/deadlock errors a few
-    // times before failing the sync, so one unlucky DDL collision does
-    // not cancel every in-flight table write.
-    val jdbcPool = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_JDBC_POOL", "4").toInt)
+    // write throughput. The JDBC pool (4) is narrower than the parquet
+    // sync pool: overwrite mode issues DROP/CREATE dictionary DDL, which
+    // embedded engines like Derby serialize under lock timeouts — a wide
+    // pool turns that serialization into intermittent lock-timeout
+    // SQLExceptions. Each table additionally retries transient
+    // lock/deadlock errors a few times before failing the sync, so one
+    // unlucky DDL collision does not cancel every in-flight table write.
     TableSink.forEachTable(tables,
-        tables.values.headOption.map(_.sparkSession), Some(jdbcPool)) {
+        tables.values.headOption.map(_.sparkSession), poolSize = 4) {
       (name, df) => retryTransient(name) {
         val w = TableSink.stringifyNested(df).write
           .mode("overwrite")

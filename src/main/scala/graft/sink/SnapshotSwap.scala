@@ -9,10 +9,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Protocol: write the new snapshot to `<base>/_staging_<table>`, then
   * atomically move it to `<base>/<table>` (previous snapshot moved aside
-  * and dropped only after the new one is in place). Readers that resolve
-  * the prod path before the swap keep reading the old files (parquet
-  * readers hold file handles); readers after the swap see the complete
-  * new snapshot — never a mix.
+  * and dropped only after the new one is in place). A reader that
+  * resolves the prod path after the swap sees the complete new snapshot
+  * — never a mix. A DataFrame or view resolved BEFORE the swap does not
+  * keep the old files alive: it holds the file listing it made, and
+  * reading it after the swap fails with FILE_NOT_EXIST. So
+  * `TableSink.writeAll` re-registers each table's view right after that
+  * table's swap, in the same task: a view is stale only between the two
+  * steps, and a table whose swap never ran keeps serving its previous
+  * snapshot.
   *
   * Directory rename is atomic on local/HDFS filesystems; on object stores
   * you would repoint a view/manifest instead (same contract, documented
@@ -1148,10 +1153,4 @@ object SnapshotSwap {
         "(swept or never published)"))
     spark.read.parquet(s"$base/$snap")
   }
-
-  /** Swap + read back: the consumer-visible contract (a query against
-    * prod sees exactly the last completed sync). */
-  def writeAndRead(spark: SparkSession, df: DataFrame, base: String,
-      table: String): DataFrame =
-    spark.read.parquet(write(df, base, table))
 }

@@ -17,33 +17,28 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   */
 object TableSink {
 
-  /** Sync-write concurrency (SPARK_GRAFT_SYNC_POOL, default 8, 1 =
-    * sequential). A real resoto model has hundreds of kinds, and N
-    * sequential per-table write JOBS serialize cluster utilization at
-    * the sync front door: each small table's write occupies a handful
-    * of task slots while every other slot idles. Spark's scheduler is
+  /** Per-table jobs in flight during a sync (`forEachTable`'s default
+    * pool). A real resoto model has hundreds of kinds, and N sequential
+    * per-table write JOBS serialize cluster utilization at the sync
+    * front door: each small table's write occupies a handful of task
+    * slots while every other slot idles. Spark's scheduler is
     * thread-safe, so submitting the per-table jobs from a bounded pool
-    * keeps ~pool jobs in flight — wall clock approaches
-    * max(largest table, total work / slots) instead of sum(per-table
-    * latency). Bounded (not tables.size) so a 500-kind model doesn't
-    * enqueue 500 concurrent jobs' worth of driver/backend bookkeeping. */
-  private[graft] def syncPool: Int = poolOverride.getOrElse(math.max(1,
-    sys.env.getOrElse("SPARK_GRAFT_SYNC_POOL", "8").toInt))
+    * keeps ~8 jobs in flight — wall clock approaches max(largest table,
+    * total work / slots) instead of sum(per-table latency). Bounded
+    * (not tables.size) so a 500-kind model doesn't enqueue 500
+    * concurrent jobs' worth of driver/backend bookkeeping. */
+  private val SyncPool = 8
 
-  /** In-JVM A/B seam (tools.SyncPoolProbe) — env is fixed per JVM. */
-  @volatile private[graft] var poolOverride: Option[Int] = None
-
-  /** Run `f` over the table map on a bounded worker pool, preserving
-    * per-table failure (first exception rethrown after the pool
-    * drains). The staging reads feeding each `df` are isolated by
+  /** Run `f` over the table map on a pool of at most `poolSize` workers,
+    * preserving per-table failure (first exception rethrown after the
+    * pool drains). The staging reads feeding each `df` are isolated by
     * construction (Sync's two staging scans), so concurrent per-table
     * writes never race on input. */
   private[graft] def forEachTable[A, B](tables: Map[String, A],
-      session: Option[SparkSession] = None,
-      poolSize: Option[Int] = None)(
+      session: Option[SparkSession] = None, poolSize: Int = SyncPool)(
       f: (String, A) => B): Map[String, B] = {
     val items = tables.toSeq
-    val bound = math.min(poolSize.getOrElse(syncPool), math.max(1, items.size))
+    val bound = math.min(poolSize, math.max(1, items.size))
     if (bound <= 1) return items.map { case (n, a) => n -> f(n, a) }.toMap
     val pool = java.util.concurrent.Executors.newFixedThreadPool(bound,
       r => { val t = new Thread(r, "graft-sync-write"); t.setDaemon(true); t })
@@ -131,13 +126,21 @@ object TableSink {
     } finally pool.shutdown()
   }
 
-  /** Write every table through the snapshot-swap protocol; returns the
-    * prod path per table. Per-table writes are submitted concurrently
-    * (bounded pool; each table's staging->prod swap stays atomic and
-    * independent — distinct dirs per table). */
+  /** Publish every table; returns the prod path per table. Publishing
+    * one table is one pooled task: swap it in (`SnapshotSwap.write`),
+    * then register its temp view over the new prod dir with the schema
+    * just written — so no schema-inference job runs, and no view is
+    * left listing files the swap removed (a view lists its files when
+    * registered). Tables publish independently (distinct dirs), so a
+    * failed sync leaves every view readable: tables that published
+    * serve the new rows, all others their previous ones. */
   def writeAll(tables: Map[String, DataFrame], base: String): Map[String, String] =
     forEachTable(tables, tables.values.headOption.map(_.sparkSession)) {
-      (name, df) => SnapshotSwap.write(df, base, name)
+      (name, df) =>
+        val prod = SnapshotSwap.write(df, base, name)
+        df.sparkSession.read.schema(df.schema).parquet(prod)
+          .createOrReplaceTempView(name)
+        prod
     }
 
   /** CSV parity for nested data (the reference's CSV converter maps
@@ -167,14 +170,6 @@ object TableSink {
     }
     ()
   }
-
-  /** Catalog repoint (the "view" half of the swap contract): register
-    * each prod dir as a temp view so spark.sql sees the last completed
-    * sync (P16 over the synced layout). */
-  def registerProd(spark: SparkSession, paths: Map[String, String]): Unit =
-    paths.foreach { case (name, path) =>
-      spark.read.parquet(path).createOrReplaceTempView(name)
-    }
 
   /** Stale-table sweep — the parquet analogue of the reference's
     * `drop_existing_tables` swap option (sql.py:150-151): remove prod

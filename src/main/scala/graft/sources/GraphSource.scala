@@ -103,41 +103,6 @@ object GraphSource {
     require(steps.length == hops.length + 1, "steps must bracket hops")
   }
 
-  /** The classic single-step subset (kept as the stable API):
-    * `is(k) and p op v ...` + one optional trailing traversal. */
-  final case class Search(kind: String,
-      filters: Seq[PropFilter] = Seq.empty,
-      minDepth: Option[Int] = None,
-      maxDepth: Option[Int] = None)
-
-  private val TravRe = """(.*?)\s*-\[(\d+):(\d*)\]->\s*$""".r
-  private val IsRe = """\s*is\(([\w.]+)\)\s*(.*)""".r
-  private val FilterRe =
-    """\s*and\s+([\w.]+)\s*(==|!=|>=|<=|=~|>|<)\s*("[^"]*"|\S+)(.*)""".r
-
-  def parseSearch(expr: String): Option[Search] = scala.util.Try {
-    val (head, minD, maxD) = expr match {
-      case TravRe(h, min, "") => (h, Some(min.toInt), None)
-      case TravRe(h, min, max) => (h, Some(min.toInt), Some(max.toInt))
-      case other => (other, None, None)
-    }
-    head match {
-      case IsRe(kind, rest) =>
-        @annotation.tailrec
-        def filters(s: String, acc: Seq[PropFilter]): Option[Seq[PropFilter]] =
-          s.trim match {
-            case "" => Some(acc)
-            case FilterRe(path, op, value, tail) =>
-              filters(tail, acc :+ PropFilter(path, op,
-                value.stripPrefix("\"").stripSuffix("\""),
-                quoted = value.startsWith("\"")))
-            case _ => None
-          }
-        filters(rest, Seq.empty).map(fs => Search(kind, fs, minD, maxD))
-      case _ => None
-    }
-  }.toOption.flatten
-
   // ---- Tokenizer for the full chain grammar ---------------------------
   private sealed trait Tok
   private final case class TravTok(min: Int, max: Option[Int],
@@ -554,22 +519,6 @@ object GraphSource {
           c.as(f.alias.getOrElse(s"${f.fn}_${f.arg.replace('.', '_')}"))
         }
         base.groupBy(groupCols: _*).agg(aggCols.head, aggCols.tail: _*)
-    }
-  }
-
-  /** Apply a classic single-step search (stable API — delegates to the
-    * chain evaluator): `is(k) and p op v ...` filters nodes of kind k
-    * satisfying every predicate; a `-[min:max]->` suffix returns nodes
-    * whose shortest distance from a matching root lies in [min, max]
-    * (`maxDepth` caps the iteration when the upper bound is open). */
-  def evaluate(envelopes: DataFrame, search: Search,
-      maxDepth: Int = 8): DataFrame = {
-    val pred = AndPred(IsKind(search.kind) +: search.filters.map(PropPred.apply))
-    search.minDepth match {
-      case None => nodes(envelopes).filter(predColumn(pred))
-      case Some(m) => evaluateChain(envelopes,
-        SearchChain(Seq(pred, TruePred),
-          Seq(Traversal(m, search.maxDepth))), maxDepth)
     }
   }
 }

@@ -29,8 +29,8 @@ class EdgeCasesSpec extends SparkSpecBase {
   }
 
   test("graph search over an empty graph returns no nodes") {
-    val out = GraphSource.evaluate(emptyEnvelopes,
-      GraphSource.Search("graph_root", minDepth = Some(2)), maxDepth = 3)
+    val out = GraphSource.evaluateChain(emptyEnvelopes,
+      GraphSource.parseChain("is(graph_root) -[2:]->").get, depthCap = 3)
     assert(out.count() == 0)
   }
 

@@ -136,7 +136,7 @@ class JdbcRetrySpec extends SparkSpecBase {
     val slowDone = new AtomicBoolean(false)
     val tables = Map("bad" -> 0, "slow" -> 1, "queued" -> 2)
     val thrown = intercept[Throwable] {
-      TableSink.forEachTable(tables, session = None, poolSize = Some(2)) {
+      TableSink.forEachTable(tables, session = None, poolSize = 2) {
         (name, _) =>
           name match {
             case "bad" => JdbcSink.retryTransient(name) {

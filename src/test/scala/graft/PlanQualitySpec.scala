@@ -944,11 +944,15 @@ class PlanQualitySpec extends SparkSpecBase {
   }
 
   test("q_stream_mix folds source-domain partials; no corpus re-scan") {
+    // r19: like q_mix_epochs, the totals are a whole-relation window
+    // over the folded source-domain census inside ONE plan, whose only
+    // input is the per-batch partial dirs — the corpus never re-enters.
     val p = planOf("q_stream_mix")
-    assert(p.contains("graft_smix") || p.contains("ExistingRDD"), p)
+    assert(p.contains("graft_smix"), p)
     assert(!"documents\\.parquet".r.findAllIn(p).hasNext, p)
+    assert(p.contains("Window"), p)
     assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("Window"), p)
+    assert(!p.contains("CartesianProduct"), p)
   }
 
   test("q_stream_pipeline: answer folds batch partials; no envelope re-scan") {

@@ -586,14 +586,13 @@ class SnapshotSwapSpec extends SparkSpecBase {
     assert(row.getString(3) == """{"x":1}""")
   }
 
-  test("writeAll + registerProd: catalog sees the last completed sync") {
+  test("writeAll publishes: catalog sees the last completed sync") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_sink").toString
     val tables = Map(
       "ka" -> Seq(("x", 1)).toDF("id", "n"),
       "kb" -> Seq(("y", 2), ("z", 3)).toDF("id", "n"))
-    val paths = TableSink.writeAll(tables, base)
-    TableSink.registerProd(spark, paths)
+    TableSink.writeAll(tables, base)
     assert(spark.sql("SELECT count(*) FROM kb").collect().head.getLong(0) == 2)
     assert(spark.sql("SELECT n FROM ka").collect().head.getInt(0) == 1)
   }

@@ -22,25 +22,29 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("search parser handles the reference default") {
-    assert(GraphSource.parseSearch("is(graph_root) -[2:]->") ==
-      Some(GraphSource.Search("graph_root", minDepth = Some(2))))
-    assert(GraphSource.parseSearch("is(aws.ec2_instance)") ==
-      Some(GraphSource.Search("aws.ec2_instance")))
-    assert(GraphSource.parseSearch("name == foo") == None)
+    import GraphSource._
+    assert(parseChain("is(graph_root) -[2:]->") ==
+      Some(SearchChain(Seq(IsKind("graph_root"), TruePred),
+        Seq(Traversal(2, None)))))
+    assert(parseChain("is(aws.ec2_instance)") ==
+      Some(SearchChain(Seq(IsKind("aws.ec2_instance")), Seq.empty)))
+    assert(parseChain("is(graph_root) -[2:") == None)
   }
 
   test("search parser handles bounded traversal and property filters") {
-    assert(GraphSource.parseSearch("is(graph_root) -[2:5]->") ==
-      Some(GraphSource.Search("graph_root", minDepth = Some(2),
-        maxDepth = Some(5))))
-    assert(GraphSource.parseSearch(
+    import GraphSource._
+    assert(parseChain("is(graph_root) -[2:5]->") ==
+      Some(SearchChain(Seq(IsKind("graph_root"), TruePred),
+        Seq(Traversal(2, Some(5))))))
+    assert(parseChain(
       """is(cloud) and name == "aws" and cores > 2 -[1:3]->""") ==
-      Some(GraphSource.Search("cloud",
-        Seq(GraphSource.PropFilter("name", "==", "aws", quoted = true),
-          GraphSource.PropFilter("cores", ">", "2")),
-        Some(1), Some(3))))
+      Some(SearchChain(
+        Seq(AndPred(Seq(IsKind("cloud"),
+          PropPred(PropFilter("name", "==", "aws", quoted = true)),
+          PropPred(PropFilter("cores", ">", "2")))), TruePred),
+        Seq(Traversal(1, Some(3))))))
     // A malformed filter tail must fail the whole parse, not be dropped.
-    assert(GraphSource.parseSearch("is(cloud) garbage") == None)
+    assert(parseChain("is(cloud) garbage") == None)
   }
 
   test("chain parser handles or/not/parens and chained traversals") {
@@ -170,29 +174,29 @@ class SourcesSpec extends SparkSpecBase {
   }
 
   test("is(kind) filters nodes") {
-    val out = GraphSource.evaluate(envelopes,
-      GraphSource.Search("account"))
+    val out = GraphSource.evaluateChain(envelopes,
+      GraphSource.parseChain("is(account)").get)
     assert(out.select("id").collect().map(_.getString(0)).sorted
       .toSeq == Seq("a1", "a2"))
   }
 
   test("is(graph_root) -[2:]-> returns depth>=2 descendants") {
-    val out = GraphSource.evaluate(envelopes,
-      GraphSource.Search("graph_root", minDepth = Some(2)), maxDepth = 4)
+    val out = GraphSource.evaluateChain(envelopes,
+      GraphSource.parseChain("is(graph_root) -[2:]->").get, depthCap = 4)
     assert(out.select("id").collect().map(_.getString(0)).sorted
       .toSeq == Seq("a1", "a2"))
   }
 
   test("bounded -[1:1]-> prunes the deeper level") {
-    val out = GraphSource.evaluate(envelopes,
-      GraphSource.parseSearch("is(graph_root) -[1:1]->").get)
+    val out = GraphSource.evaluateChain(envelopes,
+      GraphSource.parseChain("is(graph_root) -[1:1]->").get)
     assert(out.select("id").collect().map(_.getString(0)).toSeq ==
       Seq("c1"))
   }
 
   test("property filter restricts the root set") {
-    val out = GraphSource.evaluate(envelopes,
-      GraphSource.parseSearch("""is(account) and id == "a1"""").get)
+    val out = GraphSource.evaluateChain(envelopes,
+      GraphSource.parseChain("""is(account) and id == "a1"""").get)
     assert(out.select("id").collect().map(_.getString(0)).toSeq ==
       Seq("a1"))
   }

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.{col, udf}
 import graft.model.{Kind, Model, ModelCompiler, Property}
 
 /** End-to-end sync golden: a multi-kind graph flows through model
@@ -166,5 +167,113 @@ class SyncE2ESpec extends SparkSpecBase {
     // edge stage.
     assert(paths.contains("link_example_region_example_instance"))
     assert(spark.table("link_example_region_example_instance").count() == 0)
+  }
+
+  /** The multi-kind model plus a dictionary property and a nested
+    * complex-kind property on every resource. */
+  private val richModel = Model((model.kinds.values.toSeq.map {
+    case k if k.fqn == "resource" => k.copy(properties = k.properties ++ Seq(
+      Property("tags", "dictionary[string, string]"),
+      Property("spec", "example_spec")))
+    case k => k
+  } :+ Kind("example_spec", aggregateRoot = false, properties = Seq(
+    Property("arch", "string"), Property("cores", "int32")))): _*)
+
+  test("dictionary property syncs as a map: struct input, {} and absent") {
+    val env = spark.read.json(spark.createDataset(Seq(
+      node("example_region", "r1", ""","tags":{"env":"prod","n":3}"""),
+      node("example_region", "r2", ""","tags":{}"""),
+      node("example_region", "r3")))(
+      org.apache.spark.sql.Encoders.STRING))
+    val base = Files.createTempDirectory("graft_sync_dict").toString
+    graft.Sync.toParquet(spark, env, richModel, base)
+    val tags = spark.table("example_region").select("_id", "tags")
+      .collect().map(r => r.getString(0) ->
+        Option(r.getMap[String, String](1)).map(_.toMap)).toMap
+    assert(tags == Map(
+      "r1" -> Some(Map("env" -> "prod", "n" -> "3")),
+      "r2" -> Some(Map.empty[String, String]),
+      "r3" -> None))
+  }
+
+  test("every published view has its prod dir's schema") {
+    val nested = """"tags":{"env":"prod"},"spec":{"arch":"x86","cores":2},"""
+    val env = spark.read.json(spark.createDataset(
+      lines.map(_.replace("\"name\":", nested + "\"name\":")))(
+      org.apache.spark.sql.Encoders.STRING))
+    // A base-declared successor with no observed edge: an empty link
+    // table rides along.
+    val m = Model((richModel.kinds.values.toSeq.map {
+      case k if k.fqn == "example_volume" =>
+        k.copy(successorKinds = Map("default" -> Seq("example_region")))
+      case k => k
+    }): _*)
+    val base = Files.createTempDirectory("graft_sync_schema").toString
+    val paths = graft.Sync.toParquet(spark, env, m, base)
+    assert(paths.contains("link_example_volume_example_region"))
+    assert(spark.table("link_example_volume_example_region").count() == 0)
+    assert(spark.table("example_instance").schema("tags").dataType
+      .isInstanceOf[org.apache.spark.sql.types.MapType])
+    assert(spark.table("example_instance").schema("spec").dataType
+      .isInstanceOf[org.apache.spark.sql.types.StructType])
+    paths.foreach { case (t0, p) =>
+      assert(spark.table(t0).schema == spark.read.parquet(p).schema, t0)
+    }
+  }
+
+  test("a failed re-sync leaves every view readable") {
+    import spark.implicits._
+    def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))
+    val base = Files.createTempDirectory("graft_sync_fail").toString
+    graft.Sync.toParquet(spark, env(lines), model, base)
+    def rows(t0: String) =
+      spark.table(t0).select("_id").as[String].collect().sorted.toSeq
+    val layout = Seq("example_region", "example_instance", "example_volume")
+    val before = layout.map(t0 => t0 -> rows(t0)).toMap
+
+    // The second sync: new rows for every kind. The volume write fails
+    // mid-write, once both sibling tables have been swapped in.
+    val next = graft.Sync.tables(env(Seq(
+      node("example_region", "r9"),
+      node("example_instance", "i9", ""","cores":1"""),
+      node("example_volume", "v9", ""","capacity":1"""))), model)
+    val siblings = Seq("example_region", "example_instance")
+    val old = siblings.map(t0 => t0 -> SyncE2ESpec.listing(base, t0)).toMap
+    val boom = udf { (id: String) =>
+      val deadline = System.nanoTime() + 60000000000L
+      def swapped = siblings.forall { t0 =>
+        scala.util.Try(SyncE2ESpec.listing(base, t0)).toOption
+          .exists(_ != old(t0))
+      }
+      while (!swapped && System.nanoTime() < deadline) Thread.sleep(10L)
+      if (id != null) throw new RuntimeException("injected volume failure")
+      id
+    }
+    val bad = next("example_volume").withColumn("_id", boom(col("_id")))
+    val thrown = intercept[Exception] {
+      graft.sink.TableSink.writeAll(
+        siblings.map(t0 => t0 -> next(t0)).toMap + ("example_volume" -> bad),
+        base)
+    }
+    assert(Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("injected volume failure")), thrown.toString)
+
+    // Published tables serve the new rows; the failed table and the
+    // untouched link tables keep serving the previous sync's.
+    assert(rows("example_region") == Seq("r9"))
+    assert(rows("example_instance") == Seq("i9"))
+    assert(rows("example_volume") == before("example_volume"))
+    assert(spark.table("link_example_instance_example_volume").count() == 2)
+  }
+}
+
+object SyncE2ESpec {
+  /** File names in a table's prod dir: a new set means it was swapped. */
+  def listing(base: String, table: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(Paths.get(base, table))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSet
+    finally ls.close()
   }
 }

@@ -115,55 +115,52 @@ class SyncPoolFailureSpec extends SparkSpecBase {
     }
     val bad = spark.range(0, 800, 1, 1).select(boom($"id").as("v"))
 
-    graft.sink.TableSink.poolOverride = Some(8)
-    try {
-      val thrown = intercept[Throwable] {
-        graft.sink.TableSink.writeAll(siblings + ("bad" -> bad), base)
-      }
-      // The ROOT failure is reachable from what surfaced (the first
-      // rethrow may be a sibling's cancellation error only if drain
-      // ordering broke — the injected boom must be in the chain).
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Nil
-        else t.getMessage +: (messages(t.getCause) ++
-          t.getSuppressed.toSeq.flatMap(messages))
-      assert(messages(thrown).exists(m =>
-        m != null && m.contains("injected sync failure")), thrown.toString)
+    val thrown = intercept[Throwable] {
+      graft.sink.TableSink.writeAll(siblings + ("bad" -> bad), base)
+    }
+    // The ROOT failure is reachable from what surfaced (the first
+    // rethrow may be a sibling's cancellation error only if drain
+    // ordering broke — the injected boom must be in the chain).
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else t.getMessage +: (messages(t.getCause) ++
+        t.getSuppressed.toSeq.flatMap(messages))
+    assert(messages(thrown).exists(m =>
+      m != null && m.contains("injected sync failure")), thrown.toString)
 
-      // (a) No zombie writes: by rethrow time the pool has drained and
-      // the job group is cancelled, so the on-disk census is STABLE —
-      // no part- file appears or grows afterwards (poll-until-stable,
-      // not a fixed sleep).
-      val before = census(base)
-      val settled = stableCensus(base)
-      // Zombie signature: a file APPEARED or GREW after the rethrow. A
-      // file disappearing (a cancelled task's late attempt-dir cleanup)
-      // is not a write and is tolerated.
-      val zombies = settled.filter { case (f, sz) =>
-        before.get(f) match {
-          case None        => true
-          case Some(prior) => sz > prior
-        }
+    // (a) No zombie writes: by rethrow time the pool has drained and
+    // the job group is cancelled, so the on-disk census is STABLE —
+    // no part- file appears or grows afterwards (poll-until-stable,
+    // not a fixed sleep).
+    val before = census(base)
+    val settled = stableCensus(base)
+    // Zombie signature: a file APPEARED or GREW after the rethrow. A
+    // file disappearing (a cancelled task's late attempt-dir cleanup)
+    // is not a write and is tolerated.
+    val zombies = settled.filter { case (f, sz) =>
+      before.get(f) match {
+        case None        => true
+        case Some(prior) => sz > prior
       }
-      assert(zombies.isEmpty,
-        s"files appeared or grew after the sync failure surfaced: $zombies")
-      // The FAILED table itself is never published (its swap never
-      // ran); siblings that completed before the failure MAY be — each
-      // table's staging->prod swap is atomic and independent by design.
-      assert(!Files.isDirectory(Paths.get(base, "bad")),
-        "the failed table must not have been promoted to prod")
+    }
+    assert(zombies.isEmpty,
+      s"files appeared or grew after the sync failure surfaced: $zombies")
+    // The FAILED table itself is never published (its swap never
+    // ran); siblings that completed before the failure MAY be — each
+    // table's staging->prod swap is atomic and independent by design.
+    assert(!Files.isDirectory(Paths.get(base, "bad")),
+      "the failed table must not have been promoted to prod")
 
-      // (b) A retry of the same sync (bad table fixed) succeeds into
-      // the same base, proving the failed attempt left no poisoned
-      // staging state behind.
-      val fixed = siblings + ("bad" ->
-        spark.range(0, 800, 1, 8).select($"id".as("v")))
-      val paths = graft.sink.TableSink.writeAll(fixed, base)
-      assert(paths.keySet == fixed.keySet)
-      paths.foreach { case (_, p) =>
-        assert(spark.read.parquet(p).count() == 800L)
-      }
-    } finally graft.sink.TableSink.poolOverride = None
+    // (b) A retry of the same sync (bad table fixed) succeeds into
+    // the same base, proving the failed attempt left no poisoned
+    // staging state behind.
+    val fixed = siblings + ("bad" ->
+      spark.range(0, 800, 1, 8).select($"id".as("v")))
+    val paths = graft.sink.TableSink.writeAll(fixed, base)
+    assert(paths.keySet == fixed.keySet)
+    paths.foreach { case (_, p) =>
+      assert(spark.read.parquet(p).count() == 800L)
+    }
   }
 }
 
