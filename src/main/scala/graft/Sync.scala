@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ingest.Flatten
 import graft.model.{Model, ModelCompiler}
-import graft.sink.{JdbcSink, TableSink}
+import graft.sink.{JdbcSink, SnapshotSwap, TableSink}
 
 /** Top-level sync façade — the engine's equivalent of the reference's
   * `collect_sql` / `collect_to_file` entry points
@@ -88,33 +88,39 @@ object Sync {
     * staging nodes partitioned by kind, once keying+staging edges
     * partitioned by kind pair); every per-kind flatten job then reads
     * only its own partition directory (partition pruning), instead of
-    * N full input scans for N kinds. */
+    * N full input scans for N kinds. The two stages are removed once
+    * the tables are written (or the write failed): they are a full copy
+    * of the envelopes, and nothing reads them after the publish. */
   def toParquet(spark: SparkSession, envelopes: DataFrame, model: Model,
       baseDir: String, dropExisting: Boolean = false): Map[String, String] = {
     val nodeStage = s"$baseDir/_ingest_nodes"
     val edgeStage = s"$baseDir/_ingest_edges"
 
-    // Scan 1: nodes staged once, partitioned by kind.
-    nodeRows(envelopes)
-      .write.mode("overwrite").partitionBy("node_kind").parquet(nodeStage)
-    val stagedNodes = spark.read.parquet(nodeStage)
+    val paths = try {
+      // Scan 1: nodes staged once, partitioned by kind.
+      nodeRows(envelopes)
+        .write.mode("overwrite").partitionBy("node_kind").parquet(nodeStage)
+      val stagedNodes = spark.read.parquet(nodeStage)
 
-    // Scan 2: edges keyed against the staged node->kind map, staged
-    // partitioned by kind pair.
-    keyedEdges(envelopes, stagedNodes)
-      .write.mode("overwrite").partitionBy("from_kind", "to_kind")
-      .parquet(edgeStage)
-    // Explicit schema: an edge-free graph (legal — a single node syncs
-    // fine in the reference) stages zero parquet files, and schema
-    // inference over an empty dir throws UNABLE_TO_INFER_SCHEMA.
-    val stagedEdges = spark.read
-      .schema(StructType(ModelCompiler.linkSchema.fields ++ Seq(
-        StructField("from_kind", StringType),
-        StructField("to_kind", StringType))))
-      .parquet(edgeStage)
+      // Scan 2: edges keyed against the staged node->kind map, staged
+      // partitioned by kind pair.
+      keyedEdges(envelopes, stagedNodes)
+        .write.mode("overwrite").partitionBy("from_kind", "to_kind")
+        .parquet(edgeStage)
+      // Explicit schema: an edge-free graph (legal — a single node
+      // syncs fine in the reference) stages zero parquet files, and
+      // schema inference over an empty dir throws UNABLE_TO_INFER_SCHEMA.
+      val stagedEdges = spark.read
+        .schema(StructType(ModelCompiler.linkSchema.fields ++ Seq(
+          StructField("from_kind", StringType),
+          StructField("to_kind", StringType))))
+        .parquet(edgeStage)
 
-    val paths = TableSink.writeAll(plan(stagedNodes, stagedEdges, model),
-      baseDir)
+      TableSink.writeAll(plan(stagedNodes, stagedEdges, model), baseDir)
+    } finally Seq(nodeStage, edgeStage).foreach(p =>
+      // Best effort: a stage left behind is overwritten by the next
+      // sync, and must not mask the write's own error.
+      scala.util.Try(SnapshotSwap.rm(java.nio.file.Paths.get(p))))
     // The reference's drop_existing_tables analogue (sql.py:150-151):
     // prod dirs for tables absent from this sync are swept, so a kind
     // that left the model stops being queryable.

@@ -33,6 +33,48 @@ object Flatten {
   private def hasField(schema: StructType, path: Seq[String]): Boolean =
     fieldType(schema, path).isDefined
 
+  private def hasStruct(t: DataType): Boolean = t match {
+    case _: StructType => true
+    case ArrayType(e, _) => hasStruct(e)
+    case _ => false
+  }
+
+  /** `c`, of the input type `in`, as the compiled type `out`. Complex
+    * values are rebuilt BY NAME, recursively: `cast` maps struct fields
+    * by position, but JSON inference orders an object's keys
+    * alphabetically, so a complex kind declared (zone, arch) would
+    * silently swap its values, and a declared field absent from the
+    * input would fail the cast. Each declared struct field is looked up
+    * by name (a typed null when the input never carries it), arrays of
+    * structs rebuild each element, and everything else casts. */
+  private def conform(c: Column, in: DataType, out: DataType): Column =
+    (out, in) match {
+      // A property whose compiled type degraded to "StringType holding
+      // JSON text" (any / recursive complex kind / unknown kind —
+      // ModelCompiler.toDataType) must carry parseable JSON like the
+      // reference's JSON column, not Spark's cast(struct→string)
+      // '{a, b}' rendering.
+      case (StringType, _: StructType | _: ArrayType | _: MapType) =>
+        to_json(c)
+      // A dictionary property: schema-on-read JSON infers an object as
+      // a STRUCT of its keys, and Spark has no struct→map cast —
+      // round-trip through JSON text instead ({} → empty map, absent →
+      // null).
+      case (m: MapType, _: StructType) => from_json(to_json(c), m)
+      case (o: StructType, i: StructType) =>
+        val fields = o.fields.toSeq.map { f =>
+          i.fields.find(_.name == f.name) match {
+            case Some(fi) => conform(c.getField(f.name), fi.dataType,
+              f.dataType).as(f.name)
+            case None => lit(null).cast(f.dataType).as(f.name)
+          }
+        }
+        when(c.isNotNull, struct(fields: _*))
+      case (ArrayType(oe, _), ArrayType(ie, _)) if hasStruct(oe) =>
+        transform(c, x => conform(x, ie, oe))
+      case _ => c.cast(out)
+    }
+
   /** Project a node-envelope DataFrame to the compiled schema of `kind`.
     * Known properties are lifted from `reported`; properties absent from
     * the input schema are padded with typed nulls. */
@@ -49,22 +91,8 @@ object Flatten {
           else lit(null).cast(StringType).as(c)
         case p =>
           fieldType(inSchema, Seq("reported", p)) match {
-            case Some(inType) => (f.dataType, inType) match {
-              // A property whose compiled type degraded to "StringType
-              // holding JSON text" (any / recursive complex kind /
-              // unknown kind — ModelCompiler.toDataType) must carry
-              // parseable JSON like the reference's JSON column, not
-              // Spark's cast(struct→string) '{a, b}' rendering.
-              case (StringType, _: StructType | _: ArrayType | _: MapType) =>
-                to_json(col(s"reported.$p")).as(p)
-              // A dictionary property: schema-on-read JSON infers an
-              // object as a STRUCT of its keys, and Spark has no
-              // struct→map cast — round-trip through JSON text instead
-              // ({} → empty map, absent → null).
-              case (m: MapType, _: StructType) =>
-                from_json(to_json(col(s"reported.$p")), m).as(p)
-              case _ => col(s"reported.$p").cast(f.dataType).as(p)
-            }
+            case Some(inType) =>
+              conform(col(s"reported.$p"), inType, f.dataType).as(p)
             case None => lit(null).cast(f.dataType).as(p)
           }
       }

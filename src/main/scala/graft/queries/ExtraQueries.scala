@@ -297,7 +297,13 @@ object ExtraQueries {
     * The spread HASHES on a caller-supplied high-cardinality key
     * instead of round-robin: keyless repartition first pays a local
     * sort of its input (sortBeforeRepartition, guide §2.5) — measured
-    * 1.27 vs 1.00 s on the spread alone, census 1.66 vs 1.29 s. */
+    * 1.27 vs 1.00 s on the spread alone, census 1.66 vs 1.29 s.
+    *
+    * Precondition: `df` has NO exchange (a scan plus projections, like
+    * profileCanon's input). The partition count is read from `df.rdd`
+    * while the plan is built; under AQE that forces every upstream
+    * query stage of a plan with an exchange to execute just to answer
+    * it. */
   private def spreadIfNarrow(df: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism

@@ -129,9 +129,10 @@ object Selection {
     *
     * `weight` (r19) generalizes every per-row count to a weight sum:
     * rank k then means "the smallest value whose CUMULATIVE WEIGHT
-    * reaches k" — the weighted-median/percentile kernel (weights must
-    * be non-negative longs; the default lit(1L) is bit-identical to
-    * the unweighted behavior since sum(1) = count). */
+    * reaches k" — the weighted-median/percentile kernel (the default
+    * lit(1L) is bit-identical to the unweighted behavior since sum(1)
+    * = count). A null weight counts as 0; a negative weight breaks the
+    * monotone narrowing and is rejected by the first census pass. */
   def groupedKth(df: DataFrame, grp: String, c: String,
       ranks: Map[String, Seq[Long]], buckets: Int = 1 << 14,
       weight: Column = lit(1L))
@@ -141,6 +142,7 @@ object Selection {
       s"groupedKth needs buckets >= 2 to narrow intervals; got $buckets")
     ranks.foreach { case (g, ks) => ks.foreach(k =>
       require(k >= 1, s"ranks are 1-based positive; got $k for $g")) }
+    val wt = coalesce(weight, lit(0L))
     // State: (group, rankIdx) -> inclusive interval + residual rank.
     case class St(g: String, idx: Int, var lo: Long, var hi: Long,
       var kk: Long, var done: Boolean = false, var res: Long = 0L)
@@ -149,9 +151,13 @@ object Selection {
     // group domain is high-cardinality.
     val wanted = ranks.keySet.toSeq
     val mm = df.filter(col(grp).isin(wanted: _*))
-      .groupBy(col(grp)).agg(min(col(c)), max(col(c)), sum(weight))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3))).toMap
+      .groupBy(col(grp)).agg(min(col(c)), max(col(c)), sum(wt), min(wt))
+      .collect().map { r =>
+        require(r.getLong(4) >= 0L,
+          s"weights must be non-negative; group ${r.getString(0)} has " +
+            s"weight ${r.getLong(4)}")
+        r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))
+      }.toMap
     val states = ranks.toSeq.flatMap { case (g, ks) =>
       val (mn, mx, n) = mm.getOrElse(g,
         sys.error(s"group $g absent from the relation"))
@@ -166,7 +172,7 @@ object Selection {
       .map(_.g).distinct
     if (straddling.nonEmpty) {
       val negs = df.filter(col(grp).isin(straddling: _*) && col(c) < 0)
-        .groupBy(col(grp)).agg(sum(weight)).collect()
+        .groupBy(col(grp)).agg(sum(wt)).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       states.filter(s => s.lo < 0 && s.hi >= 0).foreach { s =>
         val neg = negs.getOrElse(s.g, 0L)
@@ -186,7 +192,7 @@ object Selection {
       // Row fan-out is ≤ states-per-group (≤R, tiny); the (sid, bucket)
       // partial aggregate collapses map-side before the one exchange.
       val counts = df.select(col(grp).as("g"), col(c).as("v"),
-          weight.as("wt"))
+          wt.as("wt"))
         .join(stDf, Seq("g"))
         .filter(col("v") >= col("lo") && col("v") <= col("hi"))
         .select(col("sid"), expr("(v - lo) div w").as("b"), col("wt"))

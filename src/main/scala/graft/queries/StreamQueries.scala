@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Tables.t
 
 /** q_stream_batch: the Structured Streaming variant of the reference's
@@ -30,15 +30,18 @@ object StreamQueries {
     * dumps. */
   private[graft] val DumpVersion = 2
 
-  /** Re-encode a source table into a file-stream staging dir, skipping
-    * the copy only when the existing dump carries the current source
-    * CONTENT fingerprint (size+mtime of every source file, plus the
-    * dump version) — a source regenerated in place must never be served
-    * from a stale dump (the gate would compare stale Spark output
-    * against a fresh oracle). */
-  private def ensureStreamDump(d: String, table: String, dumpDir: String,
+  /** Re-encode a source table into the file-stream staging dir
+    * `graft_stream_<name>_<tag>_v<DumpVersion>` and return that dir,
+    * skipping the copy only when the existing dump carries the current
+    * source CONTENT fingerprint (size+mtime of every source file, plus
+    * the dump version) — a source regenerated in place must never be
+    * served from a stale dump (the gate would compare stale Spark
+    * output against a fresh oracle). */
+  private def streamDump(d: String, name: String, table: String,
       variant: String = "full", blockBytes: Long = 0L)
-      (df: => DataFrame): Unit = {
+      (df: => DataFrame): String = {
+    val dumpDir = s"${graft.Tables.scratchRoot}/graft_stream_${name}_" +
+      s"${graft.Tables.dirTag(d)}_v$DumpVersion"
     // `variant` encodes the derivation predicate (filter/layout), so
     // changing how a dump is built — not just its source — invalidates
     // it without anyone remembering to bump DumpVersion. `blockBytes`
@@ -57,8 +60,20 @@ object StreamQueries {
       (if (blockBytes > 0) w.option("parquet.block.size", blockBytes)
        else w).parquet(dumpDir)
     }
-    ()
+    dumpDir
   }
+
+  /** The events dump every event gate streams: events.parquet's ts
+    * physical type is generation-dependent (NANOS-as-long or MICROS —
+    * see Tables.events, which normalizes both), so it is re-encoded to
+    * micros (the shape a real file-stream source directory would
+    * have). */
+  private def eventsDump(s: SparkSession, d: String): String =
+    streamDump(d, "src", "events")(graft.Tables.events(s, d))
+
+  /** The full documents dump the text gates stream. */
+  private def docsDump(s: SparkSession, d: String): String =
+    streamDump(d, "docs", "documents")(t(s, d, "documents"))
 
   /** The SHARED full-lineitem stream dump (q_stream_expect +
     * q_stream_profile read the same dir): one helper owns the dir name
@@ -70,110 +85,129 @@ object StreamQueries {
     * s/batch at 100x — the sketch aggregate was never the cost, the
     * one-row-group scan was). */
   private val SharedLiBlockBytes = 2L * 1024 * 1024
-  private def sharedLineitemDump(s: SparkSession, d: String): String = {
-    val tag = graft.Tables.dirTag(d)
-    val srcDir =
-      s"${graft.Tables.scratchRoot}/graft_stream_li_${tag}_v$DumpVersion"
-    ensureStreamDump(d, "lineitem", srcDir,
-      blockBytes = SharedLiBlockBytes)(graft.Tables.t(s, d, "lineitem"))
-    srcDir
-  }
+  private def sharedLineitemDump(s: SparkSession, d: String): String =
+    streamDump(d, "li", "lineitem", blockBytes = SharedLiBlockBytes)(
+      t(s, d, "lineitem"))
 
-  /** Gate-scale streaming constants, scoped to one query and restored:
-    * 4 state partitions (per-store load/commit dwarfs per-row work at
-    * this scale — a real deployment sizes this to its key cardinality;
-    * the r7 A/B at sf0.1 measured 4 parts 6.2s vs 8 parts 9.4s vs 1
-    * part 6.3s for the family, so 4 is the knee) and no-data
-    * micro-batches OFF (the trailing empty batch only advances the
-    * watermark to evict state / emit append-mode finals; the
-    * complete-mode and inner-join gates get nothing from it and pay a
-    * full state-store reload+recommit). The RocksDB provider was
-    * evaluated and rejected for the gate config: >=8.6s in its quietest
-    * window — its native per-store constants (open, changelog,
-    * checkpoint sync) only pay off with restart tolerance or
-    * larger-than-memory state, neither of which a finite AvailableNow
-    * gate has. Found via per-batch progress probes — see PLANS.md. */
+  /** Gate-scale streaming constants, scoped to one query and restored
+    * (set or unset, as they were before):
+    *   - 4 state/shuffle partitions (per-store load/commit dwarfs
+    *     per-row work at this scale — a real deployment sizes this to
+    *     its key cardinality; the r7 A/B at sf0.1 measured 4 parts 6.2s
+    *     vs 8 parts 9.4s vs 1 part 6.3s for the family, so 4 is the
+    *     knee);
+    *   - AQE's initialPartitionNum pinned to the same 4: it OVERRIDES
+    *     shuffle.partitions while coalescing is on (session default 8x
+    *     cores), so without it every foreachBatch plan's exchange still
+    *     fanned out to 8x cores map-side partitions (r19). The
+    *     `graft.stream.initparts` sysprop overrides it ("off" = leave
+    *     the session default) for interleaved in-JVM A/B probes;
+    *   - no-data micro-batches OFF (the trailing empty batch only
+    *     advances the watermark to evict state / emit append-mode
+    *     finals; the complete-mode and inner-join gates get nothing
+    *     from it and pay a full state-store reload+recommit);
+    *   - the state-store provider, only when the
+    *     `graft.stream.state.provider` sysprop names one (RocksDbStateSpec
+    *     asserts that gate results do not depend on it). At 100 TB state
+    *     the production posture IS RocksDB (larger-than-heap state,
+    *     restart tolerance); the gates keep the HDFS-backed default
+    *     because a finite AvailableNow gate never amortizes RocksDB's
+    *     native per-store constants (>=8.6s for the family in its
+    *     quietest window).
+    * Found via per-batch progress probes — see PLANS.md. A tmpfs
+    * checkpoint dir was A/B'd and rejected (the per-batch WAL on local
+    * ext4 is not the bottleneck). */
   private def withStreamGateConfs[T](s: SparkSession)(run: => T): T = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val parts = "4"
+    val partsKey = "spark.sql.shuffle.partitions"
     val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val prevProvider = s.conf.getOption(providerKey)
-    val prevInit = s.conf.getOption(initKey)
-    // Experiment overrides (bench A/B only; the committed defaults are
-    // the measured-fastest gate config). A tmpfs checkpoint dir was
-    // also A/B'd here and removed: interleaved on/off pairs measured no
-    // win (the per-batch WAL on local ext4 is not the bottleneck).
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE's initialPartitionNum (session default: 8x cores) OVERRIDES
-    // shuffle.partitions while coalescing is on — without scoping it
-    // too, every foreachBatch plan's exchange still fanned to 256
-    // map-side partitions and the measured "4 parts" knee never
-    // actually applied to the batch sinks (r19; the withIterParts
-    // lesson). Same restore discipline as the other keys. The sysprop
-    // is the interleaved-A/B escape hatch ("off" = leave the session
-    // default), probe-only.
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = Seq(partsKey, initKey, noDataKey, providerKey)
+      .map(k => k -> s.conf.getOption(k))
+    s.conf.set(partsKey, parts)
     sys.props.get("graft.stream.initparts").getOrElse(parts) match {
       case "off" => ()
       case v => s.conf.set(initKey, v)
     }
-    // Probe-only A/B seam: AQE off across the gate's batch plans.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = s.conf.get(aqeKey, "true")
-    if (sys.props.get("graft.stream.aqe").contains("off"))
-      s.conf.set(aqeKey, "false")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // Provider override: sysprop (in-JVM specs — RocksDbStateSpec
-    // asserts provider-independence of gate results) before env (bench
-    // A/B). At 100 TB state the production posture IS RocksDB
-    // (larger-than-heap state, restart tolerance); the gate default
-    // stays HDFS-backed only because a finite AvailableNow gate never
-    // amortizes RocksDB's native per-store constants (measured, see
-    // scaladoc above).
+    s.conf.set(noDataKey, "false")
     sys.props.get("graft.stream.state.provider").filter(_.nonEmpty)
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER")
-        .filter(_.nonEmpty))
       .foreach(s.conf.set(providerKey, _))
     try run
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        prevNoData)
-      prevProvider match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None => s.conf.unset(providerKey)
-      }
-      prevInit match {
-        case Some(v) => s.conf.set(initKey, v)
-        case None => s.conf.unset(initKey)
-      }
-      s.conf.set(aqeKey, prevAqe)
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
-  /** Run INDEPENDENT per-batch write actions concurrently (guide §2.6
-    * overlap — 2-3 jobs in flight back-fill each other's scheduling +
-    * file-commit tails; BatchFloorProbe r19: a tiny single-file write
-    * action costs ~110 ms of mostly serial driver/commit floor, so a
-    * sink with k independent writes pays ~k× that serially). Blocks
-    * until all complete; the first failure propagates so foreachBatch
-    * fails the batch loudly and the replay re-runs it whole. */
-  private def overlap(actions: (() => Unit)*): Unit =
-    if (actions.lengthCompare(2) < 0) actions.foreach(_.apply())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(3, actions.length))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        actions.map(a => Future(a()))
-          .foreach(Await.result(_, Duration(15, "min")))
-      } finally pool.shutdown()
+  /** A gate's scratch root `graft_<name>_<tag>`. */
+  private def gateRoot(d: String, name: String): String =
+    s"${graft.Tables.scratchRoot}/graft_${name}_${graft.Tables.dirTag(d)}"
+
+  /** The gate's scratch root, removed first: every gate invocation is
+    * a fresh run (restart semantics are the specs' subject; a gate
+    * needs a deterministic end state). Kept apart from [[runBatches]]
+    * so a restart spec can run the harness twice on one checkpoint. */
+  private[graft] def freshRoot(d: String, name: String): String = {
+    val root = gateRoot(d, name)
+    graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
+    root
+  }
+
+  /** The parquet file-stream source over `dir` (schema from the dir).
+    * By default it admits ONE file per trigger, so each dump file is
+    * one micro-batch — the foreachBatch gates' shape; with
+    * `oneFilePerTrigger = false` AvailableNow takes the whole dir. */
+  private[graft] def fileStream(s: SparkSession, dir: String,
+      oneFilePerTrigger: Boolean = true): DataFrame = {
+    val r = s.readStream.schema(s.read.parquet(dir).schema)
+    (if (oneFilePerTrigger) r.option("maxFilesPerTrigger", "1") else r)
+      .parquet(dir)
+  }
+
+  /** THE run path of every foreachBatch gate: drain `stream`
+    * (AvailableNow) through `batchFn(batch, batchId)` under the gate
+    * confs, checkpointing at `$root/ckpt`, and block until done. A
+    * second call on the same root resumes from the checkpoint — the
+    * restart the exactly-once specs replay. */
+  private[graft] def runBatches(stream: DataFrame, root: String)(
+      batchFn: (DataFrame, Long) => Unit): Unit =
+    withStreamGateConfs(stream.sparkSession) {
+      stream.writeStream.foreachBatch(batchFn)
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
     }
+
+  /** The run path of the memory-sink gates: drain `stream`
+    * (AvailableNow) into the in-memory table `name` in output `mode`
+    * under the gate confs. Returns the finished query (its progress
+    * carries the per-batch state-operator metrics). */
+  private[graft] def runToMemory(stream: DataFrame, name: String,
+      mode: String): StreamingQuery =
+    withStreamGateConfs(stream.sparkSession) {
+      val q = stream.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+
+  /** Run ONE micro-batch's independent write actions concurrently on
+    * the sync's pool (TableSink.forEachTable, at most 3 in flight —
+    * guide §2.6 overlap: 2-3 jobs in flight back-fill each other's
+    * scheduling + file-commit tails; BatchFloorProbe r19: a tiny
+    * single-file write action costs ~110 ms of mostly serial
+    * driver/commit floor, so a sink with k independent writes pays ~k×
+    * that serially). Blocks until all complete. On the first failure
+    * the pool cancels the batch's Spark jobs and drains before
+    * rethrowing, so foreachBatch fails the batch loudly, the replay
+    * re-runs it whole, and no write outlives the failed attempt. */
+  private def batchWrites(s: SparkSession)(
+      writes: (String, () => Unit)*): Unit = {
+    graft.sink.TableSink.forEachTable(writes.toMap, Some(s), poolSize = 3)(
+      (_, write) => write())
+    ()
+  }
 
   /** The per-micro-batch observation plan: batch collapsed map-side on
     * its digest, LEFT ANTI against the persisted index (scan-only side
@@ -227,11 +261,11 @@ object StreamQueries {
           .join(s.read.parquet(priorDirs: _*).select("digest"),
             Seq("digest"), "left_anti")
       // The two artifacts are independent given obs — overlap them.
-      overlap(
-        () => obs.write.mode("overwrite")
-          .parquet(s"$root/obs/batch=$batchId"),
-        () => accepted.write.mode("overwrite")
-          .parquet(s"$root/idx/batch=$batchId"))
+      batchWrites(s)(
+        "obs" -> (() => obs.write.mode("overwrite")
+          .parquet(s"$root/obs/batch=$batchId")),
+        "idx" -> (() => accepted.write.mode("overwrite")
+          .parquet(s"$root/idx/batch=$batchId")))
     } finally { obs.unpersist(); () }
   }
 
@@ -268,15 +302,16 @@ object StreamQueries {
     // logged candidates are unchanged — StreamAnnSpec pins equality
     // with the batch-mode candidate set).
     val buck = VectorQueries.bucketsOf(vecs, bits).persist()
-    try overlap(
-      () => buck.write.mode("overwrite").parquet(s"$root/idx/batch=$batchId"),
-      () => buck
+    try batchWrites(s)(
+      "idx" -> (() =>
+        buck.write.mode("overwrite").parquet(s"$root/idx/batch=$batchId")),
+      "obs" -> (() => buck
         .select(col("vec_id").as("qid"), col("tbl"), col("bkt"))
         .join(cappedBase
           .select(col("vec_id").as("nid"), col("tbl"), col("bkt")),
           Seq("tbl", "bkt"))
         .select("qid", "nid").distinct()
-        .write.mode("overwrite").parquet(s"$root/obs/batch=$batchId"))
+        .write.mode("overwrite").parquet(s"$root/obs/batch=$batchId")))
     finally { buck.unpersist(); () }
   }
 
@@ -294,25 +329,12 @@ object StreamQueries {
       .write.mode("overwrite").parquet(s"$root/delta/batch=$batchId")
 
   def streamCounts(s: SparkSession, d: String): DataFrame = {
-    // events.parquet's ts physical type is generation-dependent (NANOS
-    // -as-long or MICROS — see Tables.events, which normalizes both);
-    // re-encode to a micros staging dir (the shape a real file-stream
-    // source directory would have) and stream from it.
-    val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${graft.Tables.dirTag(d)}_v$DumpVersion"
-    ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-    val schema = s.read.parquet(srcDir).schema
-    val qn = "graft_ev_" + math.abs(d.hashCode).toString
-    val stream = s.readStream.schema(schema)
-      .parquet(srcDir)
+    val stream = fileStream(s, eventsDump(s, d), oneFilePerTrigger = false)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .count()
-    withStreamGateConfs(s) {
-      val q = stream.writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(qn)
+    val q = runToMemory(stream, "graft_ev_" + math.abs(d.hashCode), "complete")
+    s.table(q.name)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
         col("event_type"),
@@ -362,14 +384,8 @@ object StreamQueries {
     * of batches. Batch-SIZED artifacts (cdc deltas, zonemap data,
     * dedup index entries) keep their parallel layout — single-tasking
     * those would serialize real data volume. */
-  private def writePartial(df: DataFrame, dir: String): Unit = {
-    // A/B escape hatch for the per-commit floor measurement only
-    // (PLANS.md "Streaming per-commit constant"): the committed
-    // default is the single-file partial.
-    val d = if (sys.env.contains("SPARK_GRAFT_PARTIAL_NOCOALESCE")) df
-            else df.coalesce(1)
-    d.write.mode("overwrite").parquet(dir)
-  }
+  private def writePartial(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
 
   /** One micro-batch of the streaming quantile sink
     * (q_stream_quantile): fold THIS batch's events to a (day, cents)
@@ -536,8 +552,8 @@ object StreamQueries {
     // The two artifacts are independent given the batch — overlap them
     // (r19, guide §2.6); both scans decode the same one-file batch and
     // the block manager shares the in-flight computation.
-    overlap(
-      () => writePartial(batch.agg(
+    batchWrites(batch.sparkSession)(
+      "sums" -> (() => writePartial(batch.agg(
         sum(when(col("l_orderkey").isNull, 1L).otherwise(0L))
           .as("null_orderkey"),
         sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L)
@@ -546,10 +562,10 @@ object StreamQueries {
           .otherwise(0L)).as("disc_in_range"),
         sum(when(col("l_quantity") > 25, 1L).otherwise(0L))
           .as("qty_le_25")),
-        s"$root/sums/batch=$batchId"),
-      () => batch.groupBy("l_orderkey", "l_linenumber")
+        s"$root/sums/batch=$batchId")),
+      "keys" -> (() => batch.groupBy("l_orderkey", "l_linenumber")
         .agg(count(lit(1)).as("c"))
-        .write.mode("overwrite").parquet(s"$root/keys/batch=$batchId"))
+        .write.mode("overwrite").parquet(s"$root/keys/batch=$batchId")))
 
   /** One micro-batch of the streaming mixture monitor (q_stream_mix):
     * per-source doc/token counts — source-domain-sized, every column
@@ -586,16 +602,17 @@ object StreamQueries {
       // overlap them (r19, guide §2.6: each tiny write is mostly
       // serial driver/commit floor; concurrent actions back-fill it).
       val kindWrites = graft.model.ModelCompiler.tableKinds(scaleModel)
-        .map { k => () =>
-          graft.ingest.Flatten.flattenNodes(nodes, k, scaleModel)
-            .write.mode("overwrite").parquet(
-              s"$root/tbl_${graft.model.ModelCompiler.tableName(k.fqn)}/batch=$batchId")
+        .map { k =>
+          val tbl = s"tbl_${graft.model.ModelCompiler.tableName(k.fqn)}"
+          tbl -> (() => graft.ingest.Flatten.flattenNodes(nodes, k, scaleModel)
+            .write.mode("overwrite").parquet(s"$root/$tbl/batch=$batchId"))
         }
-      overlap(kindWrites ++ Seq(
-        () => nodes.select(col("id"), col("reported.kind").as("kind"))
-          .write.mode("overwrite").parquet(s"$root/ids/batch=$batchId"),
-        () => b.filter(col("type") === "edge").select("type", "from", "to")
-          .write.mode("overwrite").parquet(s"$root/edges/batch=$batchId")): _*)
+      batchWrites(b.sparkSession)(kindWrites ++ Seq(
+        "ids" -> (() => nodes.select(col("id"), col("reported.kind").as("kind"))
+          .write.mode("overwrite").parquet(s"$root/ids/batch=$batchId")),
+        "edges" -> (() => b.filter(col("type") === "edge")
+          .select("type", "from", "to")
+          .write.mode("overwrite").parquet(s"$root/edges/batch=$batchId"))): _*)
     } finally { b.unpersist(); () }
   }
 
@@ -640,16 +657,17 @@ object StreamQueries {
         Map("mode" -> "PERMISSIVE",
           "columnNameOfCorruptRecord" -> "_corrupt_record")).as("j"))
       .persist()
-    try overlap(
+    try batchWrites(batch.sparkSession)(
       // The quarantine and the clean census are independent given the
       // cached parse — overlap the two commits (r19, guide §2.6).
-      () => parsed.filter(col("j._corrupt_record").isNotNull)
+      "bad" -> (() => parsed.filter(col("j._corrupt_record").isNotNull)
         .select("value")
-        .write.mode("overwrite").text(s"$root/bad/batch=$batchId"),
-      () => writePartial(parsed.filter(col("j._corrupt_record").isNull)
+        .write.mode("overwrite").text(s"$root/bad/batch=$batchId")),
+      "clean" -> (() => writePartial(parsed
+        .filter(col("j._corrupt_record").isNull)
         .groupBy(col("j.source").as("source"))
         .agg(count(lit(1)).as("n_docs"), sum("j.n_chars").as("chars")),
-        s"$root/clean/batch=$batchId"))
+        s"$root/clean/batch=$batchId")))
     finally { parsed.unpersist(); () }
   }
 
@@ -1103,12 +1121,13 @@ object StreamQueries {
       .select("event_id", "us", "user_id", "event_type", "cents")
     // Data file and its manifest stats are independent given the batch
     // — overlap the two commits (r19, guide §2.6).
-    overlap(
-      () => b.write.mode("overwrite").parquet(s"$root/data/batch=$batchId"),
-      () => b.agg(min("us").as("us_min"), max("us").as("us_max"),
-          count(lit(1)).as("n_rows"))
+    batchWrites(batch.sparkSession)(
+      "data" -> (() =>
+        b.write.mode("overwrite").parquet(s"$root/data/batch=$batchId")),
+      "manifest" -> (() => b.agg(min("us").as("us_min"),
+          max("us").as("us_max"), count(lit(1)).as("n_rows"))
         .withColumn("batch", lit(batchId))
-        .write.mode("overwrite").parquet(s"$root/manifest/batch=$batchId"))
+        .write.mode("overwrite").parquet(s"$root/manifest/batch=$batchId")))
   }
 
   /** One micro-batch of the streaming pair-count maintenance
@@ -1152,19 +1171,12 @@ object StreamQueries {
     // + complete mode here makes the gate deterministic.
     "q_stream_dedup" -> ((
       (s: SparkSession, d: String) => {
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${graft.Tables.dirTag(d)}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(t(s, d, "documents"))
-        val schema = s.read.parquet(srcDir).schema
-        val qn = "graft_docs_" + math.abs(d.hashCode).toString
-        val stream = s.readStream.schema(schema).parquet(srcDir)
+        val stream = fileStream(s, docsDump(s, d), oneFilePerTrigger = false)
           .groupBy(sha2(col("text"), 256).as("fp"))
           .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        s.table(qn).select("doc_id", "n_copies").orderBy("doc_id")
+        val q = runToMemory(stream,
+          "graft_docs_" + math.abs(d.hashCode), "complete")
+        s.table(q.name).select("doc_id", "n_copies").orderBy("doc_id")
       },
       """SELECT CAST(min(doc_id) AS BIGINT) AS doc_id,
         |CAST(count(*) AS BIGINT) AS n_copies
@@ -1184,27 +1196,13 @@ object StreamQueries {
     // is pinned in StreamDedupSpec.
     "q_stream_dedup_inc" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_newb_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir, "batch_mod4eq3_files4")(
+        val srcDir = streamDump(d, "newb", "documents", "batch_mod4eq3_files4")(
           t(s, d, "documents").filter(col("doc_id") % 4 === 3)
             .repartition(4))
         val baseIdx = s.read.parquet(TextQueries.ensureDigestIndex(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_sdinc_$tag"
-        // Fresh run per gate invocation: restart semantics are the
-        // spec's subject; the gate needs a deterministic end state.
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => incDedupBatch(b, baseIdx, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sdinc")
+        runBatches(fileStream(s, srcDir), root)(
+          incDedupBatch(_, baseIdx, root, _))
         s.read.parquet(s"$root/obs")
           .groupBy("digest")
           .agg(min("doc_id").as("doc_id"), sum("n_copies").as("n_copies"))
@@ -1237,9 +1235,7 @@ object StreamQueries {
     // candidates. Oracle re-ranks the same logged candidate set.
     "q_stream_ann_inc" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_vecb_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "embeddings", srcDir, "batch_mod4eq3_files4")(
+        val srcDir = streamDump(d, "vecb", "embeddings", "batch_mod4eq3_files4")(
           t(s, d, "embeddings").filter(col("vec_id") % 4 === 3)
             .repartition(4))
         val (idxDir, bits) = VectorQueries.annIndexFor(s, d)
@@ -1250,25 +1246,15 @@ object StreamQueries {
         // lazy plan below recomputes the cap per batch — at gate scale
         // that window is ~50 ms over the dimension-sized index.
         val cappedBase = VectorQueries.cappedIndex(s.read.parquet(idxDir))
-        val root = s"${graft.Tables.scratchRoot}/graft_sann_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => annIncBatch(b, cappedBase, bits, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sann")
+        runBatches(fileStream(s, srcDir), root)(
+          annIncBatch(_, cappedBase, bits, root, _))
         val cand = s.read.parquet(s"$root/obs")
           .select("qid", "nid").distinct()
         VectorQueries.rankCandidates(s, d, cand).orderBy("qid", "rn")
       },
       VectorQueries.rankSqlFor(
-        s"${graft.Tables.scratchRoot}/graft_sann_${graft.Tables.dirTag(graft.Tables.VerifySfDir)}/obs/*/*.parquet"))),
+        s"${gateRoot(graft.Tables.VerifySfDir, "sann")}/obs/*/*.parquet"))),
 
     // Streaming materialized-view maintenance — q_agg_incremental's
     // protocol under continuous ingest: the delta (o_orderkey % 7 = 0
@@ -1282,24 +1268,11 @@ object StreamQueries {
     // aggregate over everything (identical to q_agg_incremental).
     "q_stream_agg_inc" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_odelta_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "orders", srcDir, "delta_mod7eq0_files4")(
+        val srcDir = streamDump(d, "odelta", "orders", "delta_mod7eq0_files4")(
           t(s, d, "orders").filter(col("o_orderkey") % 7 === 0)
             .repartition(4))
-        val root = s"${graft.Tables.scratchRoot}/graft_smv_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => mvDeltaBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "smv")
+        runBatches(fileStream(s, srcDir), root)(mvDeltaBatch(_, root, _))
         val base = s.read.parquet(ExtraQueries.ensureOrdersMatview(s, d))
           .select("o_custkey", "n_orders", "cents")
         val deltas = s.read.parquet(s"$root/delta")
@@ -1330,22 +1303,8 @@ object StreamQueries {
     // per-batch compactions — never the accumulated log.
     "q_stream_cdc" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_scdc_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => cdcBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "scdc")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(cdcBatch(_, root, _))
         val w = Window.partitionBy("user_id")
           .orderBy(col("us").desc, col("event_id").desc)
         s.read.parquet(s"$root/delta")
@@ -1383,22 +1342,9 @@ object StreamQueries {
     // snapshot against one shared-derivation oracle.
     "q_stream_upsert" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val base = s"${graft.Tables.scratchRoot}/graft_supsert_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(base))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, _) => upsertBatch(s, b, base, "state")
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val base = freshRoot(d, "supsert")
+        runBatches(fileStream(s, eventsDump(s, d)), base)(
+          (b, _) => upsertBatch(s, b, base, "state"))
         upsertState(s, base, "state")
           .filter(!col("deleted"))
           .select(col("user_id"), col("us").as("last_us"), col("val_e2"))
@@ -1433,25 +1379,12 @@ object StreamQueries {
     // and pruned==full equality are pinned in StreamZonemapSpec.
     "q_stream_zonemap" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_tsrc_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir, variant = "tsorted")(
+        val srcDir = streamDump(d, "tsrc", "events", variant = "tsorted")(
           graft.Tables.events(s, d)
             .repartitionByRange(4, col("ts"))
             .sortWithinPartitions("ts"))
-        val root = s"${graft.Tables.scratchRoot}/graft_szone_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => zonemapBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "szone")
+        runBatches(fileStream(s, srcDir), root)(zonemapBatch(_, root, _))
         val manifest = s.read.parquet(s"$root/manifest").collect()
         val t0 = manifest.map(_.getAs[Long]("us_min")).min
         val lo = t0 + 7L * 86400000000L
@@ -1494,28 +1427,15 @@ object StreamQueries {
     // report never re-reads the log.
     "q_stream_assoc" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_lisrc_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "lineitem", srcDir,
+        val srcDir = streamDump(d, "lisrc", "lineitem",
           variant = "basketkeyed97")(
           t(s, d, "lineitem")
             .filter(col("l_shipdate") <
               lit("1997-07-01").cast("timestamp"))
             .select("l_orderkey", "l_partkey")
             .repartition(4, col("l_orderkey")))
-        val root = s"${graft.Tables.scratchRoot}/graft_sassoc_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => assocBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sassoc")
+        runBatches(fileStream(s, srcDir), root)(assocBatch(_, root, _))
         s.read.parquet(s"$root/pairs")
           .groupBy("a", "b").agg(sum("c").as("co"))
           .filter(col("co") >= 2)
@@ -1547,22 +1467,9 @@ object StreamQueries {
     // (the q_index_compact posture).
     "q_stream_quantile" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_squant_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => quantileHistBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "squant")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(
+          quantileHistBatch(_, root, _))
         ExtraQueries.quantileRollupPlan(s.read.parquet(s"$root/hist"))
       },
       ExtraQueries.QuantileRollupOracle)),
@@ -1583,22 +1490,8 @@ object StreamQueries {
     "q_stream_kll" -> ((
       (s: SparkSession, d: String) => {
         graft.functions.KllSketch.register(s)
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_skll_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => kllBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "skll")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(kllBatch(_, root, _))
         ExtraQueries.kllAudit(
           ExtraQueries.kllEventView(s, d),
           ExtraQueries.kllRollupReport(s.read.parquet(s"$root/kll")))
@@ -1614,22 +1507,9 @@ object StreamQueries {
     // report reads only (types × days × batches) partial rows.
     "q_stream_seasonal" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_sseas_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => seasonalBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sseas")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(
+          seasonalBatch(_, root, _))
         ExtraQueries.seasonalReport(
           s.read.parquet(s"$root/daily")
             .groupBy("event_type", "day")
@@ -1655,23 +1535,8 @@ object StreamQueries {
     // exactly under any split.
     "q_stream_pii" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_spii_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => piiBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "spii")
+        runBatches(fileStream(s, docsDump(s, d)), root)(piiBatch(_, root, _))
         s.read.parquet(s"$root/pii")
           .groupBy("source")
           .agg(sum("n_docs").as("n_docs"),
@@ -1704,22 +1569,8 @@ object StreamQueries {
     // cardinality while the MG path stays <=64 rows/batch forever.
     "q_stream_skew" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_sskew_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => skewBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sskew")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(skewBatch(_, root, _))
         val folded = s.read.parquet(s"$root/skew")
           .groupBy("key", "k").agg(sum("f").as("f"))
         Seq("event_type", "user_id").map { lbl =>
@@ -1767,22 +1618,9 @@ object StreamQueries {
     "q_stream_skew_sketch" -> ((
       (s: SparkSession, d: String) => {
         graft.functions.TopKSketch.register(s)
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_sskewsk_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => skewSketchBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sskewsk")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(
+          skewSketchBatch(_, root, _))
         val folded = s.read.parquet(s"$root/mg")
           .groupBy("key")
           .agg(expr("mg_merge(summary, 64, 1)").as("top"),
@@ -1828,23 +1666,8 @@ object StreamQueries {
     // never re-scanned (plan-gated).
     "q_stream_mix" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_smix_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => mixBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "smix")
+        runBatches(fileStream(s, docsDump(s, d)), root)(mixBatch(_, root, _))
         // ONE plan (r19, the q_mix_epochs lesson): the total rides a
         // whole-relation window over the source-domain fold instead of
         // a checkpoint + one-row agg + broadcast crossJoin — three
@@ -1881,10 +1704,10 @@ object StreamQueries {
     "q_stream_pipeline" -> ((
       (s: SparkSession, d: String) => {
         import graft.queries.PipelineQueries
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_env_${tag}_v$DumpVersion"
+        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_env_" +
+          s"${graft.Tables.dirTag(d)}_v$DumpVersion"
         // The rg token self-invalidates the dump if the row-group
-        // layout constant changes (the ensureStreamDump rule).
+        // layout constant changes (the streamDump rule).
         val envRg = 2L * 1024 * 1024
         val fp = graft.Tables.sourceFingerprint(
           Seq(java.nio.file.Paths.get(d, "nation.parquet"),
@@ -1895,19 +1718,8 @@ object StreamQueries {
             .write.option("parquet.block.size", envRg)
             .mode("overwrite").parquet(srcDir)
         }
-        val root = s"${graft.Tables.scratchRoot}/graft_spipe_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => pipelineBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "spipe")
+        runBatches(fileStream(s, srcDir), root)(pipelineBatch(_, root, _))
         val ids = s.read.parquet(s"$root/ids")
         val edges = s.read.parquet(s"$root/edges")
         val link = graft.ingest.Flatten.keyEdges(edges, ids)
@@ -1935,21 +1747,9 @@ object StreamQueries {
     // oracle).
     "q_stream_expect" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = sharedLineitemDump(s, d)
-        val root = s"${graft.Tables.scratchRoot}/graft_sexpect_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => expectBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sexpect")
+        runBatches(fileStream(s, sharedLineitemDump(s, d)), root)(
+          expectBatch(_, root, _))
         val sums = s.read.parquet(s"$root/sums")
           .agg(sum("null_orderkey").as("null_orderkey"),
             sum("qty_in_range").as("qty_in_range"),
@@ -1989,23 +1789,8 @@ object StreamQueries {
     // served quota equals the batch gate's (shared QuotaOracle).
     "q_stream_cap" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_scap_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => capBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "scap")
+        runBatches(fileStream(s, docsDump(s, d)), root)(capBatch(_, root, _))
         val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
         s.read.parquet(s"$root/cap")
           .withColumn("rank", row_number().over(w).cast("long"))
@@ -2026,20 +1811,10 @@ object StreamQueries {
     // micro-batch split (shared QuarantineOracle).
     "q_stream_quarantine" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
         val dumpDir = FnQueries.ensureQuarantineDump(s, d)
-        val root = s"${graft.Tables.scratchRoot}/graft_sqtn_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val stream = s.readStream
-          .option("maxFilesPerTrigger", "4").text(dumpDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => quarantineBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sqtn")
+        runBatches(s.readStream.option("maxFilesPerTrigger", "4")
+          .text(dumpDir), root)(quarantineBatch(_, root, _))
         // One driver scalar (the batch gate's own class): the folded
         // quarantine line count across batch dirs.
         val nBad = s.read.text(s"$root/bad").count()
@@ -2061,21 +1836,9 @@ object StreamQueries {
     // audited output shape and oracle as q_profile_approx.
     "q_stream_profile" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = sharedLineitemDump(s, d)
-        val root = s"${graft.Tables.scratchRoot}/graft_sprof_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => profileBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sprof")
+        runBatches(fileStream(s, sharedLineitemDump(s, d)), root)(
+          profileBatch(_, root, _))
         val folds = ExtraQueries.ProfileNumCols.map(_._1)
           .flatMap { nm => Seq(
             sum(col(s"nn_$nm")).as(s"nn_$nm"),
@@ -2105,23 +1868,10 @@ object StreamQueries {
     // split and the vector stream is never re-scanned (plan-gated).
     "q_stream_embed_drift" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_emb_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "embeddings", srcDir)(
+        val srcDir = streamDump(d, "emb", "embeddings")(
           graft.Tables.t(s, d, "embeddings"))
-        val root = s"${graft.Tables.scratchRoot}/graft_sembdrift_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => embDriftBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sembdrift")
+        runBatches(fileStream(s, srcDir), root)(embDriftBatch(_, root, _))
         VectorQueries.embDriftReport(s.read.parquet(s"$root/grid")
           .groupBy("label", "dim")
           .agg(sum("sr").as("sr"), sum("nr").as("nr"),
@@ -2138,23 +1888,8 @@ object StreamQueries {
     // group domain — the doc stream is never re-scanned (plan-gated).
     "q_stream_url" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_surl_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => urlBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "surl")
+        runBatches(fileStream(s, docsDump(s, d)), root)(urlBatch(_, root, _))
         s.read.parquet(s"$root/url")
           .groupBy("curl", "url")
           .agg(min("min_doc").as("min_doc"), sum("n").as("n"))
@@ -2175,23 +1910,9 @@ object StreamQueries {
     // never re-scanned by the report (plan-gated).
     "q_stream_cascade" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_scascade_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => cascadeBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "scascade")
+        runBatches(fileStream(s, docsDump(s, d)), root)(
+          cascadeBatch(_, root, _))
         TextQueries.cascadeFunnel(s.read.parquet(s"$root/cascade")
           .agg(sum("n").as("n"), sum("d1").as("d1"),
             sum("d2").as("d2"), sum("d3").as("d3")))
@@ -2209,22 +1930,9 @@ object StreamQueries {
     // the log is never re-scanned by the report (plan-gated).
     "q_stream_drift" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_sdrift_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => driftBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sdrift")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(
+          driftBatch(_, root, _))
         val f = s.read.parquet(s"$root/drift")
           .groupBy("event_type", "day", "bin").agg(sum("cnt").as("cnt"))
         val md = f.agg(min("day")).head().getLong(0)
@@ -2249,23 +1957,8 @@ object StreamQueries {
     // never re-scanned by the report (plan-gated).
     "q_stream_dsir" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_sdsir_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => dsirBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sdsir")
+        runBatches(fileStream(s, docsDump(s, d)), root)(dsirBatch(_, root, _))
         val bc = s.read.parquet(s"$root/dsir")
           .groupBy("bkt").agg(sum("ct").as("ct"), sum("cr").as("cr"))
         val n = bc.agg(sum("ct"), sum("cr")).head()
@@ -2300,23 +1993,8 @@ object StreamQueries {
 
     "q_stream_cms" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(
-          graft.Tables.t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_scms_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => cmsBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "scms")
+        runBatches(fileStream(s, docsDump(s, d)), root)(cmsBatch(_, root, _))
         ExtraQueries.cmsAudit(s, d, s.read.parquet(s"$root/cms")
           .groupBy("dep", "bkt").agg(sum("cnt").as("cnt")))
       },
@@ -2336,22 +2014,9 @@ object StreamQueries {
     "q_stream_bitmap" -> ((
       (s: SparkSession, d: String) => {
         graft.functions.BitmapFunctions.register(s)
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_sbm_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => bitmapBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "sbm")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(
+          bitmapBatch(_, root, _))
         s.read.parquet(s"$root/bm")
           .groupBy("day").agg(expr("bm_union(users_bm)").as("users_bm"))
           .withColumn("week", expr("day div 7"))
@@ -2376,22 +2041,9 @@ object StreamQueries {
     // segment and the report touches only k·batches-sized partials.
     "q_stream_theta" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val root = s"${graft.Tables.scratchRoot}/graft_stheta_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => thetaBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "stheta")
+        runBatches(fileStream(s, eventsDump(s, d)), root)(
+          thetaBatch(_, root, _))
         val merged = ExtraQueries.thetaKmv(
           s.read.parquet(s"$root/kmv")
             .select(col("event_type"), explode(col("mins")).as("h"))
@@ -2420,22 +2072,9 @@ object StreamQueries {
     // independence, bounded summaries) are pinned in StreamTopkSpec.
     "q_stream_topk" -> ((
       (s: SparkSession, d: String) => {
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
-        ensureStreamDump(d, "documents", srcDir)(t(s, d, "documents"))
-        val root = s"${graft.Tables.scratchRoot}/graft_stopk_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => topkSketchBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        val root = freshRoot(d, "stopk")
+        runBatches(fileStream(s, docsDump(s, d)), root)(
+          topkSketchBatch(_, root, _))
         val sk = s.read.parquet(s"$root/sketch")
         // One token count per batch (repeated on every summary row;
         // present even for an empty summary — see topkSketchBatch).
@@ -2492,10 +2131,7 @@ object StreamQueries {
     // and recommitted every state store for zero output rows.
     "q_stream_join" -> ((
       (s: SparkSession, d: String) => {
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${graft.Tables.dirTag(d)}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val schema = s.read.parquet(srcDir).schema
-        val ev = s.readStream.schema(schema).parquet(srcDir)
+        val ev = fileStream(s, eventsDump(s, d), oneFilePerTrigger = false)
         val views = ev.filter(col("event_type") === "view")
           .select(col("event_id"), col("user_id"), col("ts").as("v_ts"))
           .withWatermark("v_ts", "31 days")
@@ -2506,13 +2142,9 @@ object StreamQueries {
           """user_id = c_user AND
             |c_ts >= v_ts - INTERVAL 1 HOUR AND
             |c_ts <= v_ts + INTERVAL 1 HOUR""".stripMargin))
-        val qn = "graft_sj_" + math.abs(d.hashCode).toString
-        withStreamGateConfs(s) {
-          val q = joined.writeStream.format("memory").queryName(qn)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        s.table(qn)
+        val q = runToMemory(joined,
+          "graft_sj_" + math.abs(d.hashCode), "append")
+        s.table(q.name)
           .groupBy("event_id").agg(count(lit(1)).as("n_clicks"))
           .orderBy("event_id")
       },
@@ -2537,11 +2169,7 @@ object StreamQueries {
     // Oracle: identical to the batch q_session_window.
     "q_stream_session" -> ((
       (s: SparkSession, d: String) => {
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${graft.Tables.dirTag(d)}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val schema = s.read.parquet(srcDir).schema
-        val qn = "graft_ses_" + math.abs(d.hashCode).toString
-        val stream = s.readStream.schema(schema).parquet(srcDir)
+        val stream = fileStream(s, eventsDump(s, d), oneFilePerTrigger = false)
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("n_events"))
         // Data-sized state partitions were A/B'd at the 100x soak and
@@ -2552,12 +2180,9 @@ object StreamQueries {
         // session; 33 GB at 100x). The production shape is append mode
         // + watermark to a file sink, where state partitioning is the
         // throughput knob.
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        s.table(qn)
+        val q = runToMemory(stream,
+          "graft_ses_" + math.abs(d.hashCode), "complete")
+        s.table(q.name)
           .select(col("user_id"),
             unix_micros(col("session_window.start")).as("session_start_us"),
             unix_micros(col("session_window.end")).as("session_end_us"),
@@ -2639,8 +2264,8 @@ object StreamQueries {
     "q_stream_late" -> ((
       (s: SparkSession, d: String) => {
         import java.nio.file.{Files, Paths}
-        val tag = graft.Tables.dirTag(d)
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_late_${tag}_v$DumpVersion"
+        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_late_" +
+          s"${graft.Tables.dirTag(d)}_v$DumpVersion"
         val cut1 = "2024-01-11 00:00:00"
         val cut2 = "2024-01-21 00:00:00"
         val lateEnd = "2024-01-06 00:00:00"
@@ -2674,22 +2299,15 @@ object StreamQueries {
             graft.sink.SnapshotSwap.rm(Paths.get(stage))
           }
         }
-        val schema = s.read.parquet(srcDir).schema
-        val qn = "graft_late_" + math.abs(d.hashCode).toString
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
+        val stream = fileStream(s, srcDir)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .count()
-        var dropped = 0L
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          dropped = q.recentProgress.flatMap(_.stateOperators)
-            .map(_.numRowsDroppedByWatermark).sum
-        }
-        s.table(qn)
+        val q = runToMemory(stream,
+          "graft_late_" + math.abs(d.hashCode), "update")
+        val dropped = q.recentProgress.flatMap(_.stateOperators)
+          .map(_.numRowsDroppedByWatermark).sum
+        s.table(q.name)
           .groupBy(date_format(col("window.start"),
               "yyyy-MM-dd HH:mm:ss").as("ws"), col("event_type"))
           .agg(max("count").as("cnt"))
@@ -2723,21 +2341,14 @@ object StreamQueries {
     // epoch-aligned window-assignment rule, cross-joined in DuckDB.
     "q_stream_sliding" -> ((
       (s: SparkSession, d: String) => {
-        val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${graft.Tables.dirTag(d)}_v$DumpVersion"
-        ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
-        val schema = s.read.parquet(srcDir).schema
-        val qn = "graft_slide_" + math.abs(d.hashCode).toString
-        val stream = s.readStream.schema(schema).parquet(srcDir)
+        val stream = fileStream(s, eventsDump(s, d), oneFilePerTrigger = false)
           .groupBy(window(col("ts"), "2 hours", "1 hour"),
             col("event_type"))
           .agg(count(lit(1)).as("n"), min("event_id").as("min_ev"),
             max("event_id").as("max_ev"))
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        s.table(qn)
+        val q = runToMemory(stream,
+          "graft_slide_" + math.abs(d.hashCode), "complete")
+        s.table(q.name)
           .select(unix_micros(col("window.start")).as("win_start_us"),
             unix_micros(col("window.end")).as("win_end_us"),
             col("event_type"), col("n"), col("min_ev"), col("max_ev"))

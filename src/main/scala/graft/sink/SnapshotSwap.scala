@@ -65,7 +65,13 @@ object SnapshotSwap {
     val old = Paths.get(base, s"_old_$table")
     Files.createDirectories(Paths.get(base))
     rm(staging)
-    stageParquet(df, staging)
+    try stageParquet(df, staging)
+    catch { case t: Throwable =>
+      // A failed write leaves no staging dir behind (best effort: a
+      // cleanup failure rides along with the write's own error).
+      scala.util.Try(rm(staging)).failed.foreach(t.addSuppressed)
+      throw t
+    }
     rm(old)
     if (Files.exists(prod))
       Files.move(prod, old, StandardCopyOption.ATOMIC_MOVE)

@@ -52,10 +52,6 @@ object StreamBatchProbe {
     (1 to reps).foreach { rep =>
       val arm =
         if (!ab) ""
-        else if (sys.env.get("SPARK_GRAFT_PROBE_AB").contains("aqe")) {
-          if (rep % 2 == 1) { sys.props("graft.stream.aqe") = "off"; ",arm=aqeoff" }
-          else { sys.props.remove("graft.stream.aqe"); ",arm=aqeon" }
-        }
         else if (rep % 2 == 1) { sys.props("graft.stream.initparts") = "off"; ",arm=off" }
         else { sys.props.remove("graft.stream.initparts"); ",arm=scoped" }
       gates.foreach { g =>

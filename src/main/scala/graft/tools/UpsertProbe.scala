@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Diagnostic probe for the bounded-write streaming upsert (dev
   * tooling, not part of the shipped library): measures, at the
@@ -22,11 +21,16 @@ import org.apache.spark.sql.streaming.Trigger
   *      fold timed against a head carrying a full buffer, then again
   *      after an explicit compaction (cadence=1 empty-batch commit).
   *
+  * The pipeline runs on the gates' run path (StreamQueries.runBatches,
+  * so the same scoped streaming confs); the read folds run on the
+  * session defaults, as the gate's report does.
+  *
   * Results feed PLANS.md; the correctness of the protocol itself is
   * StreamUpsertSpec's and the q_stream_upsert oracle gate's job. */
 object UpsertProbe {
 
-  import graft.queries.StreamQueries.{upsertBatch, upsertState, upsertBucket}
+  import graft.queries.StreamQueries.{fileStream, runBatches, upsertBatch,
+    upsertState, upsertBucket}
 
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -51,21 +55,18 @@ object UpsertProbe {
   }
 
   /** Drive the full micro-batched pipeline over `dumpDir` (one file
-    * per trigger), committing through upsertBatch; returns (wall_sec,
-    * commits, total_fresh_mb, max_commit_fresh_mb). */
+    * per trigger) on the gates' run path and confs, committing through
+    * upsertBatch; returns (wall_sec, commits, total_fresh_mb,
+    * max_commit_fresh_mb). */
   private def runPipeline(spark: SparkSession, dumpDir: String,
       base: String, accounting: Boolean): (Double, Int, Double, Double) = {
     graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(base))
-    val schema = spark.read.parquet(dumpDir).schema
     var commits = 0
     var freshBytes = 0L
     var maxFresh = 0L
     var prevInodes = Map.empty[AnyRef, Long]
     val wall = time {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dumpDir)
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, _) => {
+      runBatches(fileStream(spark, dumpDir), base) { (b, _) =>
         upsertBatch(spark, b, base, "state")
         commits += 1
         if (accounting) {
@@ -79,10 +80,6 @@ object UpsertProbe {
           prevInodes = now
         }
       }
-      val q = stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
     }
     (wall, commits, freshBytes / 1048576.0, maxFresh / 1048576.0)
   }
@@ -97,66 +94,56 @@ object UpsertProbe {
     SoakX10.ensureEventsSoak(spark, baseSf, soakDir, x)
     val nRows = graft.Tables.events(spark, soakDir).count()
 
-    // Match the gate's streaming conf (see withStreamGateConfs).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val scratch = graft.Tables.scratchRoot
-      val ev = graft.Tables.events(spark, soakDir)
+    val scratch = graft.Tables.scratchRoot
+    val ev = graft.Tables.events(spark, soakDir)
 
-      // Uniform layout: the fixture's own file layout (32 files, every
-      // batch's keys hash across all buckets) — the r13 worst case.
-      val uniDump = s"$scratch/graft_upsert_probe_uni_x$x"
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(uniDump, "_SUCCESS")))
-        ev.write.mode("overwrite").parquet(uniDump)
+    // Uniform layout: the fixture's own file layout (32 files, every
+    // batch's keys hash across all buckets) — the r13 worst case.
+    val uniDump = s"$scratch/graft_upsert_probe_uni_x$x"
+    if (!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(uniDump, "_SUCCESS")))
+      ev.write.mode("overwrite").parquet(uniDump)
 
-      // Key-local layout: each dump file covers ~1 of the 32 state
-      // buckets (range-partitioned on the bucket value), so each
-      // micro-batch's merge working set is ~1 bucket — the layout a
-      // keyed upstream (kafka partitioning by key, a sessionized
-      // producer) actually delivers.
-      val locDump = s"$scratch/graft_upsert_probe_loc_x$x"
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(locDump, "_SUCCESS")))
-        ev.withColumn("__b", upsertBucket(col("user_id")))
-          .repartitionByRange(32, col("__b")).drop("__b")
-          .write.mode("overwrite").parquet(locDump)
+    // Key-local layout: each dump file covers ~1 of the 32 state
+    // buckets (range-partitioned on the bucket value), so each
+    // micro-batch's merge working set is ~1 bucket — the layout a
+    // keyed upstream (kafka partitioning by key, a sessionized
+    // producer) actually delivers.
+    val locDump = s"$scratch/graft_upsert_probe_loc_x$x"
+    if (!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(locDump, "_SUCCESS")))
+      ev.withColumn("__b", upsertBucket(col("user_id")))
+        .repartitionByRange(32, col("__b")).drop("__b")
+        .write.mode("overwrite").parquet(locDump)
 
-      println("layout,rows,commits,wall_sec," +
-        "fresh_mb_total,fresh_mb_max_commit,state_mb,state_rows")
-      Seq(("uniform", uniDump), ("key_local", locDump)).foreach {
-        case (label, dump) =>
-          val base = s"$scratch/graft_upsert_probe_state_$label"
-          val (wall, commits, freshMb, maxMb) =
-            runPipeline(spark, dump, base, accounting = true)
-          val head = graft.sink.SnapshotSwap
-            .currentSnapshot(base, "state").get
-          val stateMb = inodeSizes(java.nio.file.Paths.get(base, head))
-            .values.sum / 1048576.0
-          val stateRows = upsertState(spark, base, "state").count()
-          println(f"$label,$nRows,$commits,$wall%.2f," +
-            f"$freshMb%.1f,$maxMb%.1f,$stateMb%.1f,$stateRows")
+    println("layout,rows,commits,wall_sec," +
+      "fresh_mb_total,fresh_mb_max_commit,state_mb,state_rows")
+    Seq(("uniform", uniDump), ("key_local", locDump)).foreach {
+      case (label, dump) =>
+        val base = s"$scratch/graft_upsert_probe_state_$label"
+        val (wall, commits, freshMb, maxMb) =
+          runPipeline(spark, dump, base, accounting = true)
+        val head = graft.sink.SnapshotSwap
+          .currentSnapshot(base, "state").get
+        val stateMb = inodeSizes(java.nio.file.Paths.get(base, head))
+          .values.sum / 1048576.0
+        val stateRows = upsertState(spark, base, "state").count()
+        println(f"$label,$nRows,$commits,$wall%.2f," +
+          f"$freshMb%.1f,$maxMb%.1f,$stateMb%.1f,$stateRows")
 
-          // Read-path cost: the merge-on-read fold with the buffer the
-          // run left behind, vs after an explicit compaction.
-          val deltas = graft.sink.SnapshotSwap
-            .bufferedDeltaCount(base, "state")
-          def readSec = (1 to 2).map(_ => time(
-            upsertState(spark, base, "state")
-              .write.mode("overwrite").format("noop").save())).min
-          val buffered = readSec
-          val emptyBatch = graft.Tables.events(spark, soakDir).limit(0)
-          upsertBatch(spark, emptyBatch, base, "state", cadence = 1)
-          val compacted = readSec
-          println(f"$label read fold: $deltas deltas buffered " +
-            f"$buffered%.2f s, post-compaction $compacted%.2f s")
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+        // Read-path cost: the merge-on-read fold with the buffer the
+        // run left behind, vs after an explicit compaction.
+        val deltas = graft.sink.SnapshotSwap
+          .bufferedDeltaCount(base, "state")
+        def readSec = (1 to 2).map(_ => time(
+          upsertState(spark, base, "state")
+            .write.mode("overwrite").format("noop").save())).min
+        val buffered = readSec
+        val emptyBatch = graft.Tables.events(spark, soakDir).limit(0)
+        upsertBatch(spark, emptyBatch, base, "state", cadence = 1)
+        val compacted = readSec
+        println(f"$label read fold: $deltas deltas buffered " +
+          f"$buffered%.2f s, post-compaction $compacted%.2f s")
     }
     spark.stop()
   }

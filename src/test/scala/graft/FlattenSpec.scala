@@ -90,6 +90,51 @@ class FlattenSpec extends SparkSpecBase {
     assert(df2.collect().head.getAs[String]("blob") == "raw")
   }
 
+  /** A kind whose complex property `place` declares its fields in
+    * non-alphabetical order, plus an array of the same complex kind. */
+  private def placeModel(whereProps: Seq[Property]) = Model(
+    Kind("thing", properties = Seq(
+      Property("id", "string"), Property("place", "where"),
+      Property("hops", "where[]"))),
+    Kind("where", aggregateRoot = false, properties = whereProps))
+
+  test("complex values map by field name, not by position") {
+    // JSON inference orders keys alphabetically (arch, zone); the kind
+    // declares (zone, arch) — a positional cast would swap them.
+    val m = placeModel(Seq(Property("zone", "string"),
+      Property("arch", "string")))
+    val df = Flatten.flattenNodes(readJson(Seq(
+      """{"type":"node","id":"t-1","reported":{"kind":"thing","id":"t-1",
+         "place":{"zone":"z1","arch":"x86"},
+         "hops":[{"zone":"z2","arch":"arm"}]}}""".replaceAll("\n\\s*", " "))),
+      m("thing"), m)
+    val row = df.collect().head
+    val place = row.getAs[Row]("place")
+    assert(place.getAs[String]("zone") == "z1", place)
+    assert(place.getAs[String]("arch") == "x86", place)
+    assert(place == Row("z1", "x86"))
+    assert(row.getAs[scala.collection.Seq[Row]]("hops") == Seq(Row("z2", "arm")))
+  }
+
+  test("a declared complex field absent from the input pads to null") {
+    val m = placeModel(Seq(Property("zone", "string"),
+      Property("arch", "string"), Property("cores", "int32")))
+    val df = Flatten.flattenNodes(readJson(Seq(
+      """{"type":"node","id":"t-1","reported":{"kind":"thing","id":"t-1",
+         "place":{"zone":"z1","arch":"x86"},
+         "hops":[{"arch":"arm"}]}}""".replaceAll("\n\\s*", " "),
+      """{"type":"node","id":"t-2","reported":{"kind":"thing","id":"t-2"}}""")),
+      m("thing"), m)
+    assert(df.schema("place").dataType ==
+      graft.model.ModelCompiler.toDataType("where", m))
+    val rows = df.collect().map(r => r.getAs[String]("_id") -> r).toMap
+    assert(rows("t-1").getAs[Row]("place") == Row("z1", "x86", null))
+    assert(rows("t-1").getAs[scala.collection.Seq[Row]]("hops") == Seq(Row(null, "arm", null)))
+    // An absent complex value stays null, not a struct of nulls.
+    assert(rows("t-2").getAs[Row]("place") == null)
+    assert(rows("t-2").getAs[scala.collection.Seq[Row]]("hops") == null)
+  }
+
   test("edge flatten: (from, to) -> (from_id, to_id)") {
     val df = Flatten.flattenEdges(readJson(edgeJson))
     assert(df.columns.toSeq == Seq("from_id", "to_id"))

@@ -12,9 +12,9 @@ package graft
   * watermark/late-data eviction (q_stream_late), sliding windows
   * (q_stream_sliding), and the batch session_window twin
   * (q_session_window) — by asserting result identity under both
-  * providers. The seam is `graft.stream.state.provider` (sysprop, read
-  * by withStreamGateConfs) / SPARK_GRAFT_STREAM_STATE_PROVIDER (env,
-  * for bench A/B). */
+  * providers. The seam is the `graft.stream.state.provider` sysprop,
+  * read by the stream-gate harness (StreamQueries.runBatches /
+  * runToMemory) for every gate run. */
 class RocksDbStateSpec extends SparkSpecBase {
 
   private val dir = "/root/testdata/sf0.001"

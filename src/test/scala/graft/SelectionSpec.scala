@@ -97,6 +97,30 @@ class SelectionSpec extends SparkSpecBase {
     }
   }
 
+  test("groupedKth rejects a negative weight in its first census") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val d = Seq(("a", 1L, 1L), ("a", 2L, -1L), ("a", 3L, 1L))
+      .toDF("g", "v", "wt")
+    val e = intercept[IllegalArgumentException] {
+      Selection.groupedKth(d, "g", "v", Map("a" -> Seq(1L)),
+        weight = col("wt"))
+    }
+    assert(e.getMessage.contains("non-negative"), e.getMessage)
+  }
+
+  test("groupedKth counts a null weight as 0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val d = Seq[(String, Long, Option[Long])](
+      ("a", 1L, Some(1L)), ("a", 2L, None), ("a", 3L, Some(1L)))
+      .toDF("g", "v", "wt")
+    // Cumulative weight: 1 at v=1, still 1 at v=2 (null = 0), 2 at v=3.
+    val got = Selection.groupedKth(d, "g", "v", Map("a" -> Seq(1L, 2L)),
+      weight = col("wt"))
+    assert(got("a") == Seq(1L, 3L), got)
+  }
+
   test("groupedKth census is bounded to the requested groups") {
     // A high-cardinality decoy group domain (10k one-row groups):
     // the opening min/max/count census must collect O(|ranks|) rows,

@@ -64,7 +64,6 @@ class StreamAnnSpec extends SparkSpecBase {
 
   test("ANN sink indexes each vector exactly once across a restart") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val work = java.nio.file.Files
       .createTempDirectory("graft_sann_spec").toString
     val srcDir = s"$work/src"
@@ -80,19 +79,13 @@ class StreamAnnSpec extends SparkSpecBase {
     graft.functions.VectorFunctions.register(spark)
     val baseIdx = graft.queries.VectorQueries.bucketsOf(baseVecs, bits)
 
-    def runAvailable(): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, id) =>
-        graft.queries.StreamQueries.annIncBatch(b,
-          graft.queries.VectorQueries.cappedIndex(baseIdx), bits, out, id)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // The gates' run path; checkpoint at $out/ckpt, so a second call
+    // restarts from it.
+    def runAvailable(): Unit =
+      graft.queries.StreamQueries.runBatches(
+        graft.queries.StreamQueries.fileStream(spark, srcDir), out)(
+        graft.queries.StreamQueries.annIncBatch(_,
+          graft.queries.VectorQueries.cappedIndex(baseIdx), bits, out, _))
 
     Seq((1L, vec(1)), (2L, vec(2))).toDF("vec_id", "embedding")
       .coalesce(1).write.mode("append").parquet(srcDir)

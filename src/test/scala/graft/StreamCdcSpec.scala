@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** q_stream_cdc invariants: per-batch compaction is exactly-once under
   * restart and replay, and the folded snapshot is micro-batch-split
@@ -20,20 +19,14 @@ class StreamCdcSpec extends SparkSpecBase {
     val work = Files.createTempDirectory("graft_scdc_spec").toString
     val srcDir = s"$work/src"
     val root = s"$work/out"
-    val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))
 
-    def runAvailable(): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, id) => cdcBatch(b, root, id)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // The gates' run path; checkpoint at $root/ckpt, so a second call
+    // restarts from it.
+    def runAvailable(): Unit =
+      graft.queries.StreamQueries.runBatches(
+        graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
+        cdcBatch(_, root, _))
 
     // Batch 0: user 1 updated twice, user 2 once (event 22 is a D:
     // 22 % 11 = 0).

@@ -40,25 +40,18 @@ class StreamDedupSpec extends SparkSpecBase {
     val work = Files.createTempDirectory("graft_sdinc_spec").toString
     val srcDir = s"$work/src"
     val root = s"$work/out"
-    val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))
 
     // Base corpus index: digests of "base1"/"base2".
     val baseIdx = Seq("base1", "base2").toDF("text")
       .select(sha2(col("text"), 256).as("digest"))
 
-    def runAvailable(): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit =
-        (b, id) => graft.queries.StreamQueries.incDedupBatch(b, baseIdx, root, id)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // The gates' run path; checkpoint at $root/ckpt, so a second call
+    // restarts from it.
+    def runAvailable(): Unit =
+      graft.queries.StreamQueries.runBatches(
+        graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
+        graft.queries.StreamQueries.incDedupBatch(_, baseIdx, root, _))
 
     // File 1: one base dup (rejected), "x" twice (accepted once), "y".
     Seq((1L, "base1"), (2L, "x"), (3L, "x"), (4L, "y"))

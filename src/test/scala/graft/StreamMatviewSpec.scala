@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming matview maintenance (q_stream_agg_inc): per-batch delta
   * aggregates land in batch-id-keyed dirs, so a replayed micro-batch
@@ -15,21 +14,14 @@ class StreamMatviewSpec extends SparkSpecBase {
     val work = Files.createTempDirectory("graft_smv_spec").toString
     val srcDir = s"$work/src"
     val root = s"$work/out"
-    val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))
 
-    def runAvailable(): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit =
-        (b, id) => graft.queries.StreamQueries.mvDeltaBatch(b, root, id)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // The gates' run path; checkpoint at $root/ckpt, so a second call
+    // restarts from it.
+    def runAvailable(): Unit =
+      graft.queries.StreamQueries.runBatches(
+        graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
+        graft.queries.StreamQueries.mvDeltaBatch(_, root, _))
 
     def fold(): Map[Long, (Long, Long)] =
       spark.read.parquet(s"$root/delta")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Crash-replay for the composed streaming front door
   * (q_stream_pipeline): the stream is killed MID-BATCH — after a torn
@@ -29,18 +28,17 @@ class StreamPipelineReplaySpec extends SparkSpecBase {
     PipelineQueries.scaleEnvelopes(spark, sfDir).repartition(4)
       .write.mode("overwrite").parquet(srcDir)
     val root = Files.createTempDirectory("graft_spipe_replay").toString
-    val schema = spark.read.parquet(srcDir).schema
-
-    def stream() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    // Both runs take the gates' run path, checkpointing at $root/ckpt.
+    def run(batchFn: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit =
+      StreamQueries.runBatches(StreamQueries.fileStream(spark, srcDir),
+        root)(batchFn)
 
     // Run 1: batch 1 crashes BETWEEN table-partial writes — one kind
     // table's partial lands TORN (truncated rows) for that batch, then
     // the sink dies before ids/edges/other kinds are written.
     @volatile var crashed = false
     val firstKind = graft.model.ModelCompiler.tableKinds(scaleModel).head
-    val crashing: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, id) => {
+    val crashing: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) => {
       if (id == 1L && !crashed) {
         crashed = true
         graft.ingest.Flatten
@@ -54,10 +52,7 @@ class StreamPipelineReplaySpec extends SparkSpecBase {
       StreamQueries.pipelineBatch(b, root, id)
     }
     val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      val q = stream().writeStream.foreachBatch(crashing)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      run(crashing)
     }
     assert(crashed, "the injected crash never fired")
     assert(failed.getMessage.contains("injected crash") ||
@@ -71,12 +66,7 @@ class StreamPipelineReplaySpec extends SparkSpecBase {
     // Run 2: restart from the SAME checkpoint with the real sink —
     // batch 1 replays under the same id (overwriting the torn partial)
     // and the remaining batches run.
-    val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, id) => StreamQueries.pipelineBatch(b, root, id)
-    val q2 = stream().writeStream.foreachBatch(sink)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination()
+    run(StreamQueries.pipelineBatch(_, root, _))
 
     // The served answer (the gate's exact report assembly: edge keying
     // deferred to ONE join over the folded id domain).

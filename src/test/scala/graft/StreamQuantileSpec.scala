@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** q_stream_quantile invariants: the batch-id-keyed histogram protocol
   * is exactly-once under restart and replay, and the merged-histogram
@@ -24,20 +23,14 @@ class StreamQuantileSpec extends SparkSpecBase {
     val work = Files.createTempDirectory("graft_squant_spec").toString
     val srcDir = s"$work/src"
     val root = s"$work/out"
-    val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))
 
-    def runAvailable(): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, id) => quantileHistBatch(b, root, id)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // The gates' run path; checkpoint at $root/ckpt, so a second call
+    // restarts from it.
+    def runAvailable(): Unit =
+      graft.queries.StreamQueries.runBatches(
+        graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
+        quantileHistBatch(_, root, _))
 
     val day0 = 0L
     val day1 = 86400000000L

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** q_stream_topk invariants: the per-batch Misra-Gries summaries are
   * bounded, their union is a complete candidate set under any
@@ -19,20 +18,14 @@ class StreamTopkSpec extends SparkSpecBase {
     val work = Files.createTempDirectory("graft_stopk_spec").toString
     val srcDir = s"$work/src"
     val root = s"$work/out"
-    val ckpt = s"$work/ckpt"
     Files.createDirectories(Paths.get(srcDir))
 
-    def runAvailable(): Unit = {
-      val schema = spark.read.parquet(srcDir).schema
-      val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        Long) => Unit = (b, id) => topkSketchBatch(b, root, id)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // The gates' run path; checkpoint at $root/ckpt, so a second call
+    // restarts from it.
+    def runAvailable(): Unit =
+      graft.queries.StreamQueries.runBatches(
+        graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
+        topkSketchBatch(_, root, _))
 
     Seq((1L, "a a a b"), (2L, "b c")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(srcDir)

@@ -221,6 +221,35 @@ class SyncE2ESpec extends SparkSpecBase {
     }
   }
 
+  test("a sync leaves only prod tables in its base dir, also when it fails") {
+    import spark.implicits._
+    def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))
+    val base = Files.createTempDirectory("graft_sync_clean").toString
+    val paths = graft.Sync.toParquet(spark, env(lines), model, base)
+    // No node/edge stage and no staging dir survives a good sync.
+    assert(SyncE2ESpec.baseNames(base) == paths.keySet)
+
+    // A re-sync whose instance table fails mid-write (an int32
+    // property carrying "many": the ANSI cast fails when that table is
+    // written, after both stages were written).
+    val prevAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val thrown = try intercept[Exception] {
+      graft.Sync.toParquet(spark, env(lines :+
+        node("example_instance", "i3", ""","cores":"many"""")), model, base)
+    } finally prevAnsi match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    assert(Iterator.iterate[Throwable](thrown)(_.getCause)
+      .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
+        .contains("CAST_INVALID_INPUT")), thrown.toString)
+    // Still only prod tables: the failed table's staging dir and both
+    // stages are gone; every table keeps a prod dir.
+    assert(SyncE2ESpec.baseNames(base) == paths.keySet)
+    assert(spark.table("example_instance").count() == 2)
+  }
+
   test("a failed re-sync leaves every view readable") {
     import spark.implicits._
     def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))
@@ -269,6 +298,14 @@ class SyncE2ESpec extends SparkSpecBase {
 }
 
 object SyncE2ESpec {
+  /** Entry names directly under a sync's base dir. */
+  def baseNames(base: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(Paths.get(base))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSet
+    finally ls.close()
+  }
+
   /** File names in a table's prod dir: a new set means it was swapped. */
   def listing(base: String, table: String): Set[String] = {
     import scala.jdk.CollectionConverters._
