@@ -1126,9 +1126,15 @@ object StreamQueries {
         b.write.mode("overwrite").parquet(s"$root/data/batch=$batchId")),
       "manifest" -> (() => b.agg(min("us").as("us_min"),
           max("us").as("us_max"), count(lit(1)).as("n_rows"))
-        .withColumn("batch", lit(batchId))
         .write.mode("overwrite").parquet(s"$root/manifest/batch=$batchId")))
   }
+
+  /** The accumulated zone-map manifest under `root`: one row per batch,
+    * its batch id read from the `batch=N` dir as a BIGINT. */
+  private[graft] def zonemapManifest(s: SparkSession, root: String)
+      : DataFrame =
+    s.read.schema("us_min BIGINT, us_max BIGINT, n_rows BIGINT, batch BIGINT")
+      .parquet(s"$root/manifest")
 
   /** One micro-batch of the streaming pair-count maintenance
     * (q_stream_assoc): the batch's baskets explode to pairs map-side
@@ -1385,7 +1391,7 @@ object StreamQueries {
             .sortWithinPartitions("ts"))
         val root = freshRoot(d, "szone")
         runBatches(fileStream(s, srcDir), root)(zonemapBatch(_, root, _))
-        val manifest = s.read.parquet(s"$root/manifest").collect()
+        val manifest = zonemapManifest(s, root).collect()
         val t0 = manifest.map(_.getAs[Long]("us_min")).min
         val lo = t0 + 7L * 86400000000L
         val hi = t0 + 10L * 86400000000L

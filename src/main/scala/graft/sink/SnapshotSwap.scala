@@ -2,20 +2,24 @@ package graft.sink
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic staging→prod snapshot swap (P12) — the Spark-native analogue of
   * the reference's temp-table rename protocol (reference: sql.py:129-159:
   * write `tmp_*`, then ALTER TABLE RENAME into place inside one sync).
   *
-  * Protocol: write the new snapshot to `<base>/_staging_<table>`, then
-  * atomically move it to `<base>/<table>` (previous snapshot moved aside
-  * and dropped only after the new one is in place). A reader that
-  * resolves the prod path after the swap sees the complete new snapshot
-  * — never a mix. A DataFrame or view resolved BEFORE the swap does not
-  * keep the old files alive: it holds the file listing it made, and
-  * reading it after the swap fails with FILE_NOT_EXIST. So
-  * `TableSink.writeAll` re-registers each table's view right after that
-  * table's swap, in the same task: a view is stale only between the two
+  * Protocol: stage the new snapshot at `<base>/_staging_<table>` —
+  * write it there (`write`), or move a dir some earlier job already
+  * wrote there (`publishDir`, e.g. a link table's pair dir of Sync's
+  * edge stage) — then atomically move it to `<base>/<table>` (previous
+  * snapshot moved aside and dropped only after the new one is in
+  * place). A reader that resolves the prod path after the swap sees the
+  * complete new snapshot — never a mix. A DataFrame or view resolved
+  * BEFORE the swap does not keep the old files alive: it holds the file
+  * listing it made, and reading it after the swap fails with
+  * FILE_NOT_EXIST. So `TableSink.writeAll` re-registers each table's
+  * view right after that table's swap, in the same task, whether the
+  * table was written or moved: a view is stale only between the two
   * steps, and a table whose swap never ran keeps serving its previous
   * snapshot.
   *
@@ -37,9 +41,8 @@ object SnapshotSwap {
   }
 
   /** Stage `df` as parquet at `dir`, guaranteeing the dir is
-    * self-describing: a zero-partition input (e.g. a
-    * declared-but-unobserved link table filtered from an empty edge
-    * stage) writes only _SUCCESS, and read-back would fail schema
+    * self-describing: a zero-partition input (e.g. an empty filter
+    * result) writes only _SUCCESS, and read-back would fail schema
     * inference — materialize the schema as a single empty part file. */
   private def stageParquet(df: DataFrame, dir: Path): Unit = {
     df.write.mode("overwrite").parquet(dir.toString)
@@ -48,27 +51,52 @@ object SnapshotSwap {
       try children.anyMatch(p => p.getFileName.toString.startsWith("part-"))
       finally children.close()
     }
-    if (!wrotePart) {
-      val spark = df.sparkSession
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq.empty[org.apache.spark.sql.Row], 1), df.schema)
-        .write.mode("overwrite").parquet(dir.toString)
-    }
+    if (!wrotePart) writeEmpty(df.sparkSession, df.schema, dir)
   }
+
+  /** Write `schema` as one row-less part file at `dir` (overwrite). */
+  private[graft] def writeEmpty(spark: SparkSession, schema: StructType,
+      dir: Path): Unit =
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          Seq.empty[org.apache.spark.sql.Row], 1), schema)
+      .write.mode("overwrite").parquet(dir.toString)
 
   /** Write df as the new snapshot of `table` under `base`; returns the
     * prod path. */
-  def write(df: DataFrame, base: String, table: String): String = {
+  def write(df: DataFrame, base: String, table: String): String =
+    swapIn(base, table)(stageParquet(df, _))
+
+  /** Publish an already-written parquet dir as the new snapshot of
+    * `table`: moved (or, with `copy`, its files copied) into the
+    * staging dir, then swapped in like a written one; returns the prod
+    * path. `dir` must be on the same filesystem as `base`. */
+  def publishDir(dir: Path, base: String, table: String,
+      copy: Boolean): String =
+    swapIn(base, table) { staging =>
+      if (!copy) Files.move(dir, staging, StandardCopyOption.ATOMIC_MOVE)
+      else {
+        Files.createDirectories(staging)
+        val files = Files.list(dir)
+        try files.forEach(f => Files.copy(f, staging.resolve(f.getFileName)))
+        finally files.close()
+      }
+    }
+
+  /** Fill `<base>/_staging_<table>` with `stage`, then swap it in as
+    * `<base>/<table>`: the previous snapshot is moved aside and dropped
+    * only after the new one is in place. Returns the prod path. */
+  private def swapIn(base: String, table: String)(stage: Path => Unit)
+      : String = {
     val staging = Paths.get(base, s"_staging_$table")
     val prod = Paths.get(base, table)
     val old = Paths.get(base, s"_old_$table")
     Files.createDirectories(Paths.get(base))
     rm(staging)
-    try stageParquet(df, staging)
+    try stage(staging)
     catch { case t: Throwable =>
-      // A failed write leaves no staging dir behind (best effort: a
-      // cleanup failure rides along with the write's own error).
+      // A failed stage leaves no staging dir behind (best effort: a
+      // cleanup failure rides along with the stage's own error).
       scala.util.Try(rm(staging)).failed.foreach(t.addSuppressed)
       throw t
     }

@@ -1,5 +1,6 @@
 package graft.sink
 
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
@@ -31,9 +32,10 @@ object TableSink {
 
   /** Run `f` over the table map on a pool of at most `poolSize` workers,
     * preserving per-table failure (first exception rethrown after the
-    * pool drains). The staging reads feeding each `df` are isolated by
-    * construction (Sync's two staging scans), so concurrent per-table
-    * writes never race on input. */
+    * pool drains). The items must not race on input or output: in a
+    * parquet sync each kind table reads its own partition dir of Sync's
+    * node stage, and each link table moves its own pair dir out of the
+    * edge stage. */
   private[graft] def forEachTable[A, B](tables: Map[String, A],
       session: Option[SparkSession] = None, poolSize: Int = SyncPool)(
       f: (String, A) => B): Map[String, B] = {
@@ -126,22 +128,40 @@ object TableSink {
     } finally pool.shutdown()
   }
 
+  /** A parquet dir some earlier job wrote, on the base dir's
+    * filesystem, with the schema of its files. [[writeAll]] publishes it
+    * by moving it into the table's staging dir, or with `copy` by
+    * copying its files (a dir several tables share). */
+  final case class WrittenDir(dir: Path, schema: StructType,
+      copy: Boolean = false)
+
   /** Publish every table; returns the prod path per table. Publishing
-    * one table is one pooled task: swap it in (`SnapshotSwap.write`),
-    * then register its temp view over the new prod dir with the schema
-    * just written — so no schema-inference job runs, and no view is
-    * left listing files the swap removed (a view lists its files when
-    * registered). Tables publish independently (distinct dirs), so a
-    * failed sync leaves every view readable: tables that published
-    * serve the new rows, all others their previous ones. */
-  def writeAll(tables: Map[String, DataFrame], base: String): Map[String, String] =
-    forEachTable(tables, tables.values.headOption.map(_.sparkSession)) {
-      (name, df) =>
-        val prod = SnapshotSwap.write(df, base, name)
-        df.sparkSession.read.schema(df.schema).parquet(prod)
-          .createOrReplaceTempView(name)
-        prod
+    * one table is one pooled task: swap it in — `tables` are written
+    * (`SnapshotSwap.write`), `written` dirs moved or copied into place
+    * (`SnapshotSwap.publishDir`), so they cost no Spark job — then
+    * register its temp view over the new prod dir with the known schema,
+    * so no schema-inference job runs, and no view is left listing files
+    * the swap removed (a view lists its files when registered). Tables
+    * publish independently (distinct dirs), so a failed sync leaves
+    * every view readable: tables that published serve the new rows, all
+    * others their previous ones. */
+  def writeAll(tables: Map[String, DataFrame], base: String,
+      written: Map[String, WrittenDir] = Map.empty): Map[String, String] = {
+    val spark = tables.values.headOption.map(_.sparkSession)
+      .getOrElse(SparkSession.active)
+    val entries: Map[String, Either[DataFrame, WrittenDir]] =
+      tables.map { case (n, df) => n -> Left(df) } ++
+        written.map { case (n, d) => n -> Right(d) }
+    forEachTable(entries, Some(spark)) { (name, entry) =>
+      val (prod, schema) = entry match {
+        case Left(df) => (SnapshotSwap.write(df, base, name), df.schema)
+        case Right(d) =>
+          (SnapshotSwap.publishDir(d.dir, base, name, d.copy), d.schema)
+      }
+      spark.read.schema(schema).parquet(prod).createOrReplaceTempView(name)
+      prod
     }
+  }
 
   /** CSV parity for nested data (the reference's CSV converter maps
     * complex kinds to JSON text, arrow/type_converter.py:35-55, and its

@@ -224,8 +224,21 @@ class SyncE2ESpec extends SparkSpecBase {
   test("a sync leaves only prod tables in its base dir, also when it fails") {
     import spark.implicits._
     def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))
+    // Observed link pairs, a declared pair with no edge (volume ->
+    // region) and an observed pair that is no link table (its endpoint
+    // kind has no table): moved, copied and unmoved pair dirs.
+    val m = Model((model.kinds.values.toSeq.map {
+      case k if k.fqn == "example_volume" =>
+        k.copy(successorKinds = Map("default" -> Seq("example_region")))
+      case k => k
+    }): _*)
+    val graph = lines ++ Seq(node("phantom_kind", "p1"), edge("i1", "p1"))
     val base = Files.createTempDirectory("graft_sync_clean").toString
-    val paths = graft.Sync.toParquet(spark, env(lines), model, base)
+    val paths = graft.Sync.toParquet(spark, env(graph), m, base)
+    assert(paths.keySet == Set("example_region", "example_instance",
+      "example_volume", "link_example_region_example_instance",
+      "link_example_instance_example_volume",
+      "link_example_volume_example_region"))
     // No node/edge stage and no staging dir survives a good sync.
     assert(SyncE2ESpec.baseNames(base) == paths.keySet)
 
@@ -235,8 +248,8 @@ class SyncE2ESpec extends SparkSpecBase {
     val prevAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     val thrown = try intercept[Exception] {
-      graft.Sync.toParquet(spark, env(lines :+
-        node("example_instance", "i3", ""","cores":"many"""")), model, base)
+      graft.Sync.toParquet(spark, env(graph :+
+        node("example_instance", "i3", ""","cores":"many"""")), m, base)
     } finally prevAnsi match {
       case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
       case None => spark.conf.unset("spark.sql.ansi.enabled")
@@ -244,10 +257,41 @@ class SyncE2ESpec extends SparkSpecBase {
     assert(Iterator.iterate[Throwable](thrown)(_.getCause)
       .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
         .contains("CAST_INVALID_INPUT")), thrown.toString)
-    // Still only prod tables: the failed table's staging dir and both
-    // stages are gone; every table keeps a prod dir.
+    // Still only prod tables: the failed table's staging dir, both
+    // stages and every pair dir, moved or not, are gone; every table
+    // keeps a prod dir.
     assert(SyncE2ESpec.baseNames(base) == paths.keySet)
     assert(spark.table("example_instance").count() == 2)
+    assert(spark.table("link_example_instance_example_volume").count() == 2)
+    assert(spark.table("link_example_volume_example_region").count() == 0)
+  }
+
+  test("a dotted kind's link table syncs from its pair dir") {
+    // The edge stage's pair dirs carry the fqn (aws.ec2.instance), the
+    // tables its table name (aws_ec2_instance).
+    val dotted = Model(
+      Kind("resource", properties = Seq(
+        Property("id", "string"), Property("name", "string"),
+        Property("kind", "string"))),
+      Kind("aws.ec2.instance", bases = Seq("resource")),
+      Kind("aws.ec2.volume", bases = Seq("resource")))
+    val env = spark.read.json(spark.createDataset(Seq(
+      node("aws.ec2.instance", "i1"), node("aws.ec2.instance", "i2"),
+      node("aws.ec2.volume", "v1"), node("aws.ec2.volume", "v2"),
+      edge("i1", "v1"), edge("i1", "v2"), edge("i2", "v2")))(
+      org.apache.spark.sql.Encoders.STRING))
+    val base = Files.createTempDirectory("graft_sync_dotted").toString
+    val paths = graft.Sync.toParquet(spark, env, dotted, base)
+    val link = "link_aws_ec2_instance_aws_ec2_volume"
+    assert(paths.keySet == Set("aws_ec2_instance", "aws_ec2_volume", link))
+    val expected = Seq(("i1", "v1"), ("i1", "v2"), ("i2", "v2"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("from_id", "to_id").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    assert(pairs(spark.table(link)) == expected)
+    assert(pairs(spark.read.parquet(paths(link))) == expected)
+    assert(spark.read.parquet(paths(link)).columns.toSeq ==
+      Seq("from_id", "to_id"))
   }
 
   test("a failed re-sync leaves every view readable") {

@@ -1,0 +1,50 @@
+package graft
+
+import java.nio.file.Files
+import graft.model.{Kind, Model, Property}
+import graft.streaming.ProgressFeedback
+
+/** The Spark jobs of a parquet sync scale with its kind tables, not its
+  * link tables: a link table is published from its pair dir of the edge
+  * stage, so a graph with five observed kind pairs syncs with as many
+  * jobs as one with a single pair over the same kinds. */
+class SyncJobsSpec extends SparkSpecBase {
+
+  private val kinds = Seq("jc_a", "jc_b", "jc_c", "jc_d", "jc_e", "jc_f")
+
+  // No declared successors: every link table is an observed pair.
+  private val model = Model((Kind("resource", properties = Seq(
+      Property("id", "string"), Property("name", "string"),
+      Property("kind", "string"))) +:
+    kinds.map(k => Kind(k, bases = Seq("resource")))): _*)
+
+  private def node(kind: String, id: String): String =
+    s"""{"type":"node","id":"$id","reported":{"kind":"$kind","id":"$id",""" +
+      s""""name":"n-$id"},"ancestors":{"cloud":{"reported":{"id":"cl"}}}}"""
+
+  private def edge(from: String, to: String): String =
+    s"""{"type":"edge","from":"$from","to":"$to","edge_type":"default"}"""
+
+  /** Jobs started by one `Sync.toParquet` of the six kinds' nodes with
+    * an edge between consecutive kinds for the first `pairs` pairs. */
+  private def syncJobs(pairs: Int): Int = {
+    import spark.implicits._
+    val nodes = for (k <- kinds; i <- 1 to 2) yield node(k, s"$k-$i")
+    val edges = kinds.zip(kinds.tail).take(pairs).flatMap { case (f, t0) =>
+      Seq(edge(s"$f-1", s"$t0-1"), edge(s"$f-2", s"$t0-2"))
+    }
+    val env = spark.read.json(spark.createDataset(nodes ++ edges))
+    val base = Files.createTempDirectory("graft_sync_jobs").toString
+    val (paths, snap) = ProgressFeedback.withProgress(spark)() {
+      Sync.toParquet(spark, env, model, base)
+    }
+    assert(paths.keySet.count(_.startsWith("link_")) == pairs)
+    snap.jobsStarted
+  }
+
+  test("a sync's job count does not grow with its link tables") {
+    val one = syncJobs(1)
+    val five = syncJobs(5)
+    assert(five == one, s"1 pair: $one jobs, 5 pairs: $five jobs")
+  }
+}
