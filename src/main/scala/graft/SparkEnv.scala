@@ -54,8 +54,8 @@ object SparkEnv {
       // on any real corpus.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
-      // Engine default, found by measurement (LayoutSkipProbe): Spark
-      // still WRITES parquet timestamps as deprecated INT96 by default,
+      // Engine default, found by measurement (PLANS.md, layout skip):
+      // Spark still WRITES parquet timestamps as deprecated INT96 by default,
       // and INT96 carries no pushdown-usable statistics — so row-group
       // pruning on a time column is silently impossible for anything
       // this engine writes, no matter how well the data is laid out.

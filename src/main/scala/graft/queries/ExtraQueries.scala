@@ -349,7 +349,7 @@ object ExtraQueries {
     * stacked 1.71–1.93 s full, 1.38 s when downstream prunes to the
     * nd column (the gate's case — Catalyst drops unused agg
     * expressions once the explode indirection is gone, which the wide
-    * shape's struct-array explode defeated; ProfileApproxProbe).
+    * shape's struct-array explode defeated; OPTIMIZATION_r18.md).
     * The HLL hashes a pre-hashed xxhash64 value: cardinality is
     * preserved (64-bit collisions are ~n²/2⁶⁵ — immaterial next to
     * the 2% rsd), null cells stay skipped (h is null iff the value

@@ -173,7 +173,7 @@ object GraphQueries {
         // frontier, the label state is ALL |V| nodes and changes every
         // round — hinting it broadcast re-collected and re-shipped the
         // full state per round and broke the aligned node-partitioning
-        // the checkpointed state already carries (GraphLoopProbe,
+        // the checkpointed state already carries (OPTIMIZATION_r18.md,
         // interleaved in one JVM at sf0.1: off 1.11–1.30 s vs on
         // 1.12–1.52 s for the 5-round loop); the hint stays on the
         // loops whose moved side is a shrinking frontier/alive set
@@ -388,7 +388,7 @@ object GraphQueries {
       // frontier or settled set that outgrows the budget keeps the
       // shuffle plan (the 100 TB posture — a billion-node component's
       // settled set must never be collected to the driver). Measured
-      // on the double-sweep gate (DiameterProbe, interleaved
+      // on the double-sweep gate (OPTIMIZATION_r18.md, interleaved
       // min-of-3): 3.0–3.6 s → 1.9–2.7 s per sweep.
       val cand = maybeBroadcastByRows(s, frontier, frontierRows)
         .join(adj, frontier("node") === adj("n"))
@@ -716,7 +716,7 @@ object GraphQueries {
     // The alive set's EXACT count is read every round (the stability
     // check) — hint both endpoint semi-joins broadcast when it fits
     // the budget (see maybeBroadcastByRows): the edge fact then never
-    // shuffles during the peel (GraphLoopProbe, interleaved: off
+    // shuffles during the peel (OPTIMIZATION_r18.md, interleaved: off
     // 0.69–0.93 s vs on 0.48–0.56 s for the 3-round peel at sf0.1).
     def restrict(alive: DataFrame, aliveRows: Long): DataFrame = {
       def hb(df: DataFrame) =

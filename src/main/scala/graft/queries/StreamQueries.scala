@@ -195,7 +195,7 @@ object StreamQueries {
   /** Run ONE micro-batch's independent write actions concurrently on
     * the sync's pool (TableSink.forEachTable, at most 3 in flight —
     * guide §2.6 overlap: 2-3 jobs in flight back-fill each other's
-    * scheduling + file-commit tails; BatchFloorProbe r19: a tiny
+    * scheduling + file-commit tails; OPTIMIZATION_r19.md: a tiny
     * single-file write action costs ~110 ms of mostly serial
     * driver/commit floor, so a sink with k independent writes pays ~k×
     * that serially). Blocks until all complete. On the first failure

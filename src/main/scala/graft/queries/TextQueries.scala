@@ -1940,7 +1940,7 @@ object TextQueries {
           // the corpus-wide join — and the checkpointed RDD scan also
           // beat feeding the loop through a persisted union (the
           // columnar-cache scan costs more per round than the raw
-          // checkpoint rows at this size: DedupClusterProbe,
+          // checkpoint rows at this size: OPTIMIZATION_r18.md,
           // interleaved — edges 1.58–3.31 s → 0.73–0.96 s, loop
           // 1.80–2.46 s → 0.82–1.14 s).
           val dups = jaccardFilter(pairs,

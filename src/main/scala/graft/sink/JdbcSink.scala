@@ -20,6 +20,10 @@ object JdbcSink {
 
   val InsertBatchSize = 5000
 
+  // Null strings must bind as VARCHAR on Derby: a `len`-sized column
+  // is VARCHAR(n), and Derby rejects the stock dialect's CLOB null.
+  org.apache.spark.sql.jdbc.GraftDerbyDialect.install()
+
   private def props(driver: String): Properties = {
     val p = new Properties()
     p.setProperty("driver", driver)

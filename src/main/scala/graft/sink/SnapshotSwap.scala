@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.StructType
   * write `tmp_*`, then ALTER TABLE RENAME into place inside one sync).
   *
   * Protocol: stage the new snapshot at `<base>/_staging_<table>` —
-  * write it there (`write`), or move a dir some earlier job already
+  * write it there (`write`; `TableSink.writeAllCsv` writes CSV through
+  * the same `swapIn`), or move a dir some earlier job already
   * wrote there (`publishDir`, e.g. a link table's pair dir of Sync's
   * edge stage) — then atomically move it to `<base>/<table>` (previous
   * snapshot moved aside and dropped only after the new one is in
@@ -86,7 +87,7 @@ object SnapshotSwap {
   /** Fill `<base>/_staging_<table>` with `stage`, then swap it in as
     * `<base>/<table>`: the previous snapshot is moved aside and dropped
     * only after the new one is in place. Returns the prod path. */
-  private def swapIn(base: String, table: String)(stage: Path => Unit)
+  private[sink] def swapIn(base: String, table: String)(stage: Path => Unit)
       : String = {
     val staging = Paths.get(base, s"_staging_$table")
     val prod = Paths.get(base, table)

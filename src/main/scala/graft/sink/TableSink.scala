@@ -181,12 +181,15 @@ object TableSink {
 
   /** CSV variant (header, explicit layout — reference
     * arrow/writer.py:245-249). Nested columns are stringified to JSON
-    * text automatically. */
+    * text automatically. Each table is staged and swapped in like a
+    * parquet one, so a failed write keeps its previous snapshot. */
   def writeAllCsv(tables: Map[String, DataFrame], base: String): Unit = {
     forEachTable(tables, tables.values.headOption.map(_.sparkSession)) {
       (name, df) =>
-        stringifyNested(df).write.mode("overwrite").option("header", "true")
-          .csv(s"$base/$name")
+        SnapshotSwap.swapIn(base, name) { staging =>
+          stringifyNested(df).write.option("header", "true")
+            .csv(staging.toString)
+        }
     }
     ()
   }

@@ -125,11 +125,19 @@ class JdbcSinkSpec extends SparkSpecBase {
     assert(ddl.contains("note VARCHAR(255)"))
 
     import spark.implicits._
-    val df = Seq(("w1", "n", "t", "b", "x", "cl", "ac", "rg", "zn"))
+    // w2's null strings land in a VARCHAR(n) column (nick) and in a
+    // CLOB one (body): both must bind as nulls the column accepts.
+    val df = Seq(("w1", "n", "t", "b", "x", "cl", "ac", "rg", "zn"),
+        ("w2", null, "t", null, "x", "cl", "ac", "rg", "zn"))
       .toDF("_id", "nick", "title", "body", "note",
         "cloud", "account", "region", "zone")
     JdbcSink.sync(Map("widthy" -> df), url,
       columnTypes = Map("widthy" -> ddl))
+    val back = JdbcSink.read(spark, url, "widthy")
+      .select("_id", "nick", "body").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)),
+        Option(r.getString(2)))).sortBy(_._1).toSeq
+    assert(back == Seq(("w1", Some("n"), Some("b")), ("w2", None, None)))
 
     // Reference contract (sql.py:92-100, tests/sql_test.py:34-38): the
     // created column widths come from the len metadata.

@@ -586,6 +586,35 @@ class SnapshotSwapSpec extends SparkSpecBase {
     assert(row.getString(3) == """{"x":1}""")
   }
 
+  test("a CSV re-sync that fails mid-write keeps the previous rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("graft_sink_csv").toString
+    TableSink.writeAllCsv(
+      Map("kc" -> Seq(("x", 1), ("y", 2)).toDF("id", "n")), base)
+    def rows = spark.read.option("header", "true").csv(s"$base/kc")
+      .as[(String, String)].collect().toSeq.sorted
+    assert(rows == Seq(("x", "1"), ("y", "2")))
+
+    // The re-sync's write job fails in a task: the ANSI cast of "many"
+    // to int fails on the row that carries it.
+    val bad = spark.range(3).select(col("id").cast("string").as("id"),
+      when(col("id") === 2, lit("many")).otherwise(col("id").cast("string"))
+        .cast("int").as("n"))
+    val prevAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val thrown = try intercept[Exception] {
+      TableSink.writeAllCsv(Map("kc" -> bad), base)
+    } finally prevAnsi match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+    assert(Iterator.iterate[Throwable](thrown)(_.getCause)
+      .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
+        .contains("CAST_INVALID_INPUT")), thrown.toString)
+    assert(rows == Seq(("x", "1"), ("y", "2")))
+  }
+
   test("writeAll publishes: catalog sees the last completed sync") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_sink").toString

@@ -9,6 +9,14 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = os.environ.get("GRAFT_SCRATCH", "/tmp") + "/graft_verify_out"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
+# The classes of the checkout this script lives in (compile it first
+# with `sbt compile`), never another checkout's.
+CLASSES = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "target", "scala-2.13", "classes")
+if not os.path.isdir(CLASSES):
+    sys.exit(f"check.py: no compiled classes at {CLASSES}; "
+             "run `sbt compile` in this checkout first")
+
 ADD_OPENS = []
 for p in ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
           "java.net", "java.nio", "java.util", "java.util.concurrent",
@@ -20,7 +28,7 @@ def run_verify():
     cmd = ["java"] + ADD_OPENS + [
         "-Xmx8g", "-Dspark.ui.enabled=false",
         "-Dspark.sql.session.timeZone=UTC",
-        "-cp", "/root/repo/target/scala-2.13/classes:" +
+        "-cp", CLASSES + ":" +
                ":".join(glob.glob("/opt/spark/jars/*.jar")),
         "graft.Verify", SF_DIR, OUT]
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
