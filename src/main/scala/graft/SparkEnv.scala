@@ -7,7 +7,19 @@ import org.apache.spark.sql.SparkSession
   * block manager, streaming temp checkpoints) on tmpfs — RAM-backed
   * scratch keeps micro-benchmarks from billing unrelated disk stalls to
   * whichever query is running. On a real cluster these map to fast
-  * local SSDs via spark.local.dir exactly the same way. */
+  * local SSDs via spark.local.dir exactly the same way.
+  *
+  * `file:` is bound to [[graft.sink.NioLocalFileSystem]] (and, for
+  * `FileContext` users such as streaming checkpoints, to
+  * [[graft.sink.NioLocalFs]]). Spark's jars carry no `libhadoop`, so
+  * Hadoop's stock local filesystem starts one child process per
+  * `setPermission` (`chmod`: every dir level a write creates, every
+  * part, `.crc` and `_SUCCESS` file) and per `readLink` (`readlink`:
+  * every checkpoint rename) — hundreds per sync. The bound classes set
+  * the same modes and answer the same link queries through the JDK. The
+  * binding is set before the SparkContext exists, so the JVM's
+  * `FileSystem` cache never holds a stock `file:` instance; a session
+  * not built here keeps Hadoop's default. */
 object SparkEnv {
 
   /** Scratch root: SPARK_GRAFT_SCRATCH env override, else /dev/shm when
@@ -63,6 +75,7 @@ object SparkEnv {
       // sorted-layout probe) and is what every modern reader expects.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config(graft.sink.NioLocalFs.SparkConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -94,13 +94,24 @@ object SnapshotSwap {
     val old = Paths.get(base, s"_old_$table")
     Files.createDirectories(Paths.get(base))
     rm(staging)
+    // The stage's jobs carry a tag of their own, so a failed stage can
+    // stop exactly them: a failed job returns while sibling tasks still
+    // run, and one that opens its output after the cleanup would
+    // re-create the staging dir.
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-swap-${java.util.UUID.randomUUID()}"
+    sc.foreach(_.addJobTag(tag))
     try stage(staging)
     catch { case t: Throwable =>
       // A failed stage leaves no staging dir behind (best effort: a
       // cleanup failure rides along with the stage's own error).
-      scala.util.Try(rm(staging)).failed.foreach(t.addSuppressed)
+      scala.util.Try {
+        sc.foreach(stopTagged(_, tag))
+        rm(staging)
+      }.failed.foreach(t.addSuppressed)
       throw t
-    }
+    } finally sc.foreach(_.removeJobTag(tag))
     rm(old)
     if (Files.exists(prod))
       Files.move(prod, old, StandardCopyOption.ATOMIC_MOVE)
@@ -108,6 +119,30 @@ object SnapshotSwap {
     rm(old)
     prod.toString
   }
+
+  /** Cancel the jobs tagged `tag` and wait, at most [[StopTimeoutMs]],
+    * until none of their tasks is active. The status tracker is fed by
+    * the listener bus, so each look follows a bus drain. */
+  private def stopTagged(sc: org.apache.spark.SparkContext, tag: String)
+      : Unit = {
+    sc.cancelJobsWithTag(tag)
+    val tracker = sc.statusTracker
+    def activeTasks: Int = {
+      org.apache.spark.sql.graft.ListenerBusBridge.drain(sc)
+      tracker.getJobIdsForTag(tag).iterator.flatMap(tracker.getJobInfo(_))
+        .flatMap(_.stageIds).flatMap(tracker.getStageInfo(_))
+        .map(_.numActiveTasks).sum
+    }
+    val deadline = System.nanoTime() + StopTimeoutMs * 1000000L
+    while (activeTasks > 0) {
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException(s"tasks of $tag still active " +
+          s"${StopTimeoutMs / 1000} s after cancellation")
+      Thread.sleep(20L)
+    }
+  }
+
+  private val StopTimeoutMs = 60000L
 
   // ---- Manifest variant: swap without directory renames --------------
   //

@@ -613,6 +613,51 @@ class SnapshotSwapSpec extends SparkSpecBase {
       .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
         .contains("CAST_INVALID_INPUT")), thrown.toString)
     assert(rows == Seq(("x", "1"), ("y", "2")))
+    assert(!Files.exists(Paths.get(base, "_staging_kc")))
+  }
+
+  test("a failed multi-task write leaves no staging dir, also once its sibling tasks end") {
+    import SnapshotSwapSpec._
+    import org.apache.spark.sql.functions._
+    // Four tasks of one row each on local[4]. The row-0 task fails once
+    // its three siblings are running; each sibling opens its part file
+    // (under _staging_kp) only after the failure plus 500 ms, since a
+    // task computes its first row before it creates its writer. The
+    // siblings ignore interrupts, like a task blocked in I/O: a killed
+    // task ends when it next checks, not when it is told.
+    val row = udf { (i: Long) =>
+      val deadline = System.nanoTime() + 20000000000L
+      if (i == 0L) {
+        while (started.get() < 3 && System.nanoTime() < deadline)
+          Thread.sleep(5L)
+        failed.set(true)
+        throw new RuntimeException("injected write failure")
+      }
+      started.incrementAndGet()
+      while (!failed.get() && System.nanoTime() < deadline) pause(5L)
+      pause(500L)
+      i
+    }
+    val df = spark.range(0, 4, 1, 4).select(row(col("id")).as("id"))
+    val writers = Seq[(String, String => Unit)](
+      "parquet" -> (base => SnapshotSwap.write(df, base, "kp")),
+      "csv" -> (base => TableSink.writeAllCsv(Map("kp" -> df), base)))
+    for ((format, write) <- writers) {
+      started.set(0); failed.set(false)
+      val base = Files.createTempDirectory(s"graft_swap_fail_$format").toString
+      val thrown = intercept[Exception](write(base))
+      assert(Iterator.iterate[Throwable](thrown)(_.getCause)
+        .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
+          .contains("injected write failure")), thrown.toString)
+      val staging = Paths.get(base, "_staging_kp")
+      val watchUntil = System.nanoTime() + 3000000000L
+      while (System.nanoTime() < watchUntil) {
+        assert(!Files.exists(staging),
+          s"$format: a sibling task re-created the staging dir")
+        Thread.sleep(100L)
+      }
+      assert(!Files.exists(Paths.get(base, "kp")), format)
+    }
   }
 
   test("writeAll publishes: catalog sees the last completed sync") {
@@ -624,5 +669,19 @@ class SnapshotSwapSpec extends SparkSpecBase {
     TableSink.writeAll(tables, base)
     assert(spark.sql("SELECT count(*) FROM kb").collect().head.getLong(0) == 2)
     assert(spark.sql("SELECT n FROM ka").collect().head.getInt(0) == 1)
+  }
+}
+
+object SnapshotSwapSpec {
+  /** Shared by the tasks of one local-mode write (one JVM). */
+  val started = new java.util.concurrent.atomic.AtomicInteger(0)
+  val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Sleep `ms`, through interrupts. */
+  def pause(ms: Long): Unit = {
+    val until = System.nanoTime() + ms * 1000000L
+    while (System.nanoTime() < until)
+      try Thread.sleep(math.max(1L, (until - System.nanoTime()) / 1000000L))
+      catch { case _: InterruptedException => }
   }
 }

@@ -24,6 +24,9 @@ object SparkSpecBase {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.ui.enabled", "false")
+      // Mirror SparkEnv's `file:` binding, so specs write through the
+      // engine's filesystem classes.
+      .config(graft.sink.NioLocalFs.SparkConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
