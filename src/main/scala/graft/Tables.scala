@@ -44,27 +44,6 @@ object Tables {
     r
   }
 
-  /** Fingerprint component derived from the COMPILED code of `cls`
-    * (classfile bytes' SHA-256, truncated): folded into derived-artifact
-    * fingerprints whose params tag alone would go stale when the
-    * derivation code is edited without a version-tag bump — the
-    * artifact then rebuilds on any recompile of the deriving object,
-    * which errs in the safe (rebuild) direction. Falls back to a
-    * constant when the classfile isn't resource-resolvable (never the
-    * case under sbt classes dirs or assembly jars). */
-  def codeFingerprint(cls: Class[_]): String = {
-    val res = cls.getName.replace('.', '/') + ".class"
-    val in = cls.getClassLoader.getResourceAsStream(res)
-    if (in == null) "nocode"
-    else try {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n > 0) { md.update(buf, 0, n); n = in.read(buf) }
-      md.digest().map("%02x".format(_)).mkString.take(16)
-    } finally in.close()
-  }
-
   /** Fingerprint of the ENTIRE compiled graft codebase: every classfile
     * under this class's code-source location (relpath:size:mtime), or
     * the enclosing jar's size:mtime. Folded into sourceFingerprint so a

@@ -138,9 +138,4 @@ object Flatten {
       .select(col("from").as("from_id"), col("to").as("to_id"),
         col("from_kind"), col("to_kind"))
   }
-
-  /** Edge-kind discovery (P4): distinct (from_kind, to_kind) pairs over
-    * keyed edges (reference: collect_plugins.py:44-47). */
-  def edgeKinds(keyedEdges: DataFrame): DataFrame =
-    keyedEdges.select("from_kind", "to_kind").distinct()
 }

@@ -165,25 +165,36 @@ object ModelCompiler {
     } yield (k.fqn, to)).toSet
   }
 
-  /** Full relational layout: table-per-kind + link tables from declared
-    * successor kinds and observed edge pairs (reference: sql.py:179-225:
-    * the three create_schema steps). Only default-type edges
-    * participate, and a link table requires both endpoint tables to
-    * exist (observed pairs are filtered the same way the reference's
-    * link_table_schema filters them). */
-  def tables(model: Model,
-      observedEdges: Set[(String, String)] = Set.empty,
-      baseKinds: Set[String] = defaultBaseKinds): Map[String, StructType] = {
-    val kinds = tableKinds(model, baseKinds)
-    val tableFqns = kinds.map(_.fqn).toSet
-    val kindTables = kinds.map(k => tableName(k.fqn) -> tableSchema(k, model))
+  /** Link table name → its (from, to) kind pair: every declared pair
+    * plus every OBSERVED pair whose endpoints are both table kinds (the
+    * reference's link_table_schema skips pairs whose endpoint tables
+    * don't exist, sql.py:195-201) — the reference's create_schema steps
+    * 2 and 3 (sql.py:203-217). A declared pair with no observed edge
+    * still gets its table: a consumer querying it must get 0 rows, not
+    * "table not found". Pairs whose truncated names collide
+    * ([[linkTableName]]) keep the first of them in sorted order. */
+  def linkTables(model: Model, observedEdges: Set[(String, String)],
+      baseKinds: Set[String] = defaultBaseKinds)
+      : Map[String, (String, String)] = {
+    val tableFqns = tableKinds(model, baseKinds).map(_.fqn).toSet
     val observed = observedEdges.filter { case (f, to) =>
       tableFqns.contains(f) && tableFqns.contains(to)
     }
-    val links = (declaredLinkPairs(model, baseKinds) ++ observed).toSeq.sorted
-      .map { case (f, to) => linkTableName(f, to) -> linkSchema }
-    (kindTables ++ links).toMap
+    (declaredLinkPairs(model, baseKinds) ++ observed).toSeq
+      .groupMapReduce { case (f, to) => linkTableName(f, to) }(identity)(
+        Ordering[(String, String)].min)
   }
+
+  /** Full relational layout: table-per-kind + [[linkTables]] over the
+    * observed edge pairs (reference: sql.py:179-225: the three
+    * create_schema steps). Only default-type edges participate. */
+  def tables(model: Model,
+      observedEdges: Set[(String, String)] = Set.empty,
+      baseKinds: Set[String] = defaultBaseKinds): Map[String, StructType] =
+    (tableKinds(model, baseKinds).map(k => tableName(k.fqn) ->
+      tableSchema(k, model)) ++
+      linkTables(model, observedEdges, baseKinds).keys.map(_ -> linkSchema))
+      .toMap
 
   /** Spark-DDL column-type overrides for the JDBC writer
     * (`createTableColumnTypes`): every string-kind column gets the

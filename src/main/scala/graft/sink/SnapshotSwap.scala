@@ -41,19 +41,11 @@ object SnapshotSwap {
     }
   }
 
-  /** Stage `df` as parquet at `dir`, guaranteeing the dir is
-    * self-describing: a zero-partition input (e.g. an empty filter
-    * result) writes only _SUCCESS, and read-back would fail schema
-    * inference — materialize the schema as a single empty part file. */
-  private def stageParquet(df: DataFrame, dir: Path): Unit = {
+  /** Stage `df` as parquet at `dir`. The dir is self-describing even
+    * for an empty input: a non-partitioned write of zero rows still
+    * leaves one schema-bearing part file. */
+  private def stageParquet(df: DataFrame, dir: Path): Unit =
     df.write.mode("overwrite").parquet(dir.toString)
-    val wrotePart = {
-      val children = Files.list(dir)
-      try children.anyMatch(p => p.getFileName.toString.startsWith("part-"))
-      finally children.close()
-    }
-    if (!wrotePart) writeEmpty(df.sparkSession, df.schema, dir)
-  }
 
   /** Write `schema` as one row-less part file at `dir` (overwrite). */
   private[graft] def writeEmpty(spark: SparkSession, schema: StructType,
@@ -308,12 +300,11 @@ object SnapshotSwap {
       ()
     }
     def stage(df: DataFrame, dir: String): Unit = {
-      // Upload protocol: parquet to local scratch (reusing the
-      // empty-snapshot schema guard), then stream every data file up
-      // via create() — one PUT per part, no rename-based commit. At
-      // 100 TB the local hop disappears: executors PUT their own part
-      // via an object-store output committer; the protocol here is the
-      // driver-side shape of the same contract.
+      // Upload protocol: parquet to local scratch, then stream every
+      // data file up via create() — one PUT per part, no rename-based
+      // commit. At 100 TB the local hop disappears: executors PUT
+      // their own part via an object-store output committer; the
+      // protocol here is the driver-side shape of the same contract.
       val scratch = Files.createTempDirectory("graft_upload_")
       val local = scratch.resolve("d")
       try {
@@ -547,9 +538,9 @@ object SnapshotSwap {
         val seq = listDirNames(deltaRoot)
           .flatMap(n => n.stripPrefix("d=").toLongOption)
           .foldLeft(-1L)(math.max) + 1
-        // stageParquet, not a plain write: an EMPTY micro-batch's delta
-        // must still land a schema-bearing part file, or the buffer
-        // read fails schema inference when it is the only entry.
+        // Non-partitioned, so an EMPTY micro-batch's delta still lands
+        // a schema-bearing part file: the buffer read must not fail
+        // schema inference when it is the only entry.
         stageParquet(delta, Paths.get(deltaRoot, s"d=$seq"))
         newEntry = Some(s"$deltaRoot/d=$seq")
       },

@@ -148,8 +148,6 @@ class FlattenSpec extends SparkSpecBase {
     val keyed = Flatten.keyEdges(readJson(edgeJson), nodeKinds)
     assert(keyed.collect().toSeq ==
       Seq(Row("i-123", "v-123", "some_instance", "some_volume")))
-    val kinds = Flatten.edgeKinds(keyed).collect().toSeq
-    assert(kinds == Seq(Row("some_instance", "some_volume")))
   }
 }
 

@@ -147,6 +147,16 @@ class ModelCompilerSpec extends AnyFunSuite {
     assert(ln == s"link_${"a" * 25}_${"a" * 25}")
   }
 
+  test("link tables whose truncated names collide keep the first pair") {
+    val long = "k" * 25
+    val m = Model(Seq("a", "b").map(s => Kind(s"$long$s")): _*)
+    val pairs = Set((s"${long}b", s"${long}a"), (s"${long}a", s"${long}b"))
+    val links = ModelCompiler.linkTables(m, pairs)
+    assert(links == Map(
+      ModelCompiler.linkTableName(s"${long}a", s"${long}b") ->
+        (s"${long}a", s"${long}b")))
+  }
+
   test("full layout: kind tables + declared + observed links") {
     val tables = ModelCompiler.tables(fixture,
       observedEdges = Set(("some.volume", "some.instance")))

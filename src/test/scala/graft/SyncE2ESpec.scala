@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.{col, udf}
+import graft.ingest.Flatten
 import graft.model.{Kind, Model, ModelCompiler, Property}
 
 /** End-to-end sync golden: a multi-kind graph flows through model
@@ -46,17 +47,15 @@ class SyncE2ESpec extends SparkSpecBase {
     import spark.implicits._
     val env = spark.read.json(spark.createDataset(lines))
 
-    // The whole sync through the public façade (collect_sql analogue).
-    val synced = graft.Sync.tables(env, model)
     val layout = ModelCompiler.tables(model,
       Set(("example_region", "example_instance"),
         ("example_instance", "example_volume")))
-    assert(synced.keySet == layout.keySet)
     assert(layout.keySet == Set(
       "example_region", "example_instance", "example_volume",
       "link_example_region_example_instance",
       "link_example_instance_example_volume"))
 
+    // The whole sync through the public façade (collect_sql analogue).
     val base = Files.createTempDirectory("graft_sync").toString
     val paths = graft.Sync.toParquet(spark, env, model, base)
     assert(paths.keySet == layout.keySet)
@@ -110,18 +109,14 @@ class SyncE2ESpec extends SparkSpecBase {
       node("example_volume", "v1", ""","capacity":1""")))(
       org.apache.spark.sql.Encoders.STRING))
 
-    val synced = graft.Sync.tables(env, m2)
-    assert(synced.keySet == Set(
-      "example_region", "example_volume", "example_instance",
-      "link_example_region_example_volume"))
-    assert(synced("link_example_region_example_volume").count() == 0)
-    assert(synced("link_example_region_example_volume")
-      .columns.toSeq == Seq("from_id", "to_id"))
-
     val base = Files.createTempDirectory("graft_sync_declared").toString
     val paths = graft.Sync.toParquet(spark, env, m2, base)
-    assert(paths.contains("link_example_region_example_volume"))
+    assert(paths.keySet == Set(
+      "example_region", "example_volume", "example_instance",
+      "link_example_region_example_volume"))
     assert(spark.table("link_example_region_example_volume").count() == 0)
+    assert(spark.table("link_example_region_example_volume")
+      .columns.toSeq == Seq("from_id", "to_id"))
   }
 
   test("re-sync with a removed kind sweeps the orphan prod table when asked") {
@@ -202,16 +197,18 @@ class SyncE2ESpec extends SparkSpecBase {
       lines.map(_.replace("\"name\":", nested + "\"name\":")))(
       org.apache.spark.sql.Encoders.STRING))
     // A base-declared successor with no observed edge: an empty link
-    // table rides along.
+    // table rides along. A kind with no nodes: an empty kind table,
+    // written from a read that prunes to no partition dir at all.
     val m = Model((richModel.kinds.values.toSeq.map {
       case k if k.fqn == "example_volume" =>
         k.copy(successorKinds = Map("default" -> Seq("example_region")))
       case k => k
-    }): _*)
+    } :+ Kind("example_idle", bases = Seq("resource"))): _*)
     val base = Files.createTempDirectory("graft_sync_schema").toString
     val paths = graft.Sync.toParquet(spark, env, m, base)
     assert(paths.contains("link_example_volume_example_region"))
     assert(spark.table("link_example_volume_example_region").count() == 0)
+    assert(spark.table("example_idle").count() == 0)
     assert(spark.table("example_instance").schema("tags").dataType
       .isInstanceOf[org.apache.spark.sql.types.MapType])
     assert(spark.table("example_instance").schema("spec").dataType
@@ -294,6 +291,66 @@ class SyncE2ESpec extends SparkSpecBase {
       Seq("from_id", "to_id"))
   }
 
+  test("toJdbc and toParquet publish the same catalog") {
+    import spark.implicits._
+    // Several kinds, a declared pair with no edge (volume -> region), an
+    // observed pair whose endpoint kind has no table (instance ->
+    // phantom_kind) and a dotted kind fqn on an observed pair.
+    val m = Model((model.kinds.values.toSeq.map {
+      case k if k.fqn == "example_volume" =>
+        k.copy(successorKinds = Map("default" -> Seq("example_region")))
+      case k => k
+    } :+ Kind("aws.ec2.snapshot", bases = Seq("resource"))): _*)
+    val env = spark.read.json(spark.createDataset(lines ++ Seq(
+      node("phantom_kind", "p1"), edge("i1", "p1"),
+      node("aws.ec2.snapshot", "s1"), edge("v1", "s1"), edge("v2", "s1"))))
+    val base = Files.createTempDirectory("graft_sync_oracle").toString
+    val paths = graft.Sync.toParquet(spark, env, m, base)
+    val url = s"jdbc:derby:${
+      Files.createTempDirectory("graft_sync_derby")}/db;create=true"
+    def jdbcStages() = SyncE2ESpec.baseNames(sys.props("java.io.tmpdir"))
+      .filter(_.startsWith("graft_jdbc_stage"))
+    val stagesBefore = jdbcStages()
+    graft.Sync.toJdbc(env, m, url)
+    // The JDBC sync's stage dir is gone once it returns.
+    assert(jdbcStages() == stagesBefore)
+
+    val jdbcTables = {
+      val conn = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
+        val names = scala.collection.mutable.Set[String]()
+        while (rs.next()) names += rs.getString("TABLE_NAME").toLowerCase
+        names.toSet
+      } finally conn.close()
+    }
+    assert(paths.keySet == Set("example_region", "example_instance",
+      "example_volume", "aws_ec2_snapshot",
+      "link_example_region_example_instance",
+      "link_example_instance_example_volume",
+      "link_example_volume_example_region",
+      "link_example_volume_aws_ec2_snapshot"))
+    assert(jdbcTables == paths.keySet)
+    def jdbc(t0: String) = graft.sink.JdbcSink.read(spark, url, t0)
+    paths.keySet.foreach { t0 =>
+      assert(jdbc(t0).count() == spark.table(t0).count(), t0)
+    }
+    assert(spark.table("link_example_volume_example_region").count() == 0)
+
+    // The same rows through kind ⋈ link ⋈ kind on both targets.
+    def joined(table: String => org.apache.spark.sql.DataFrame) =
+      table("example_volume").as("v")
+        .join(table("link_example_volume_aws_ec2_snapshot").as("l"),
+          col("l.from_id") === col("v._id"))
+        .join(table("aws_ec2_snapshot").as("s"),
+          col("s._id") === col("l.to_id"))
+        .select(col("v._id"), col("v.capacity"), col("s._id"), col("s.name"))
+        .as[(String, Int, String, String)].collect().toSeq.sorted
+    assert(joined(spark.table) == Seq(
+      ("v1", 100, "s1", "n-s1"), ("v2", 200, "s1", "n-s1")))
+    assert(joined(jdbc) == joined(spark.table))
+  }
+
   test("a failed re-sync leaves every view readable") {
     import spark.implicits._
     def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))
@@ -306,10 +363,12 @@ class SyncE2ESpec extends SparkSpecBase {
 
     // The second sync: new rows for every kind. The volume write fails
     // mid-write, once both sibling tables have been swapped in.
-    val next = graft.Sync.tables(env(Seq(
+    val nextEnv = env(Seq(
       node("example_region", "r9"),
       node("example_instance", "i9", ""","cores":1"""),
-      node("example_volume", "v9", ""","capacity":1"""))), model)
+      node("example_volume", "v9", ""","capacity":1""")))
+    val next = layout.map(t0 =>
+      t0 -> Flatten.flattenNodes(nextEnv, model(t0), model)).toMap
     val siblings = Seq("example_region", "example_instance")
     val old = siblings.map(t0 => t0 -> SyncE2ESpec.listing(base, t0)).toMap
     val boom = udf { (id: String) =>
