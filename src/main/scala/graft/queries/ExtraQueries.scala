@@ -30,6 +30,22 @@ object ExtraQueries {
         count(lit(1)).as("n"))
   }
 
+  /** The (event_type, day, cents) projection of raw event rows (the
+    * events table or one stream micro-batch) that the quantile, KLL,
+    * seasonal and drift partials and the PSI census all start from:
+    * epoch day, integer cents, null cents dropped. */
+  private[graft] def eventCents(events: DataFrame): DataFrame =
+    events.select(col("event_type"),
+        expr("unix_micros(ts) div 86400000000").as("day"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+      .filter(col("cents").isNotNull)
+
+  /** The (day, cents) count-histogram partial of q_agg_quantile_rollup
+    * and q_stream_quantile — domain-sized, never row-sized; merge is a
+    * counts sum. */
+  private[graft] def quantileHist(events: DataFrame): DataFrame =
+    eventCents(events).groupBy("day", "cents").agg(count(lit(1)).as("cnt"))
+
   /** Weekly PERCENTILE_DISC from persisted per-day count-histogram
     * partials (q_agg_quantile_rollup's second level). Takes the
     * partial relation as a DataFrame so PlanQualitySpec can assert the
@@ -37,6 +53,23 @@ object ExtraQueries {
     * log must never be re-read by the rollup. Merge is a counts sum;
     * the cumulative window runs over the merged histogram (one row per
     * distinct (week, value) — domain-sized, not row-sized). */
+  private[graft] def quantileRollupPlan(daily: DataFrame): DataFrame = {
+    val weekly = daily
+      .withColumn("week", expr("day div 7"))
+      .groupBy("week", "cents").agg(sum("cnt").as("cnt"))
+    val wCum = Window.partitionBy("week").orderBy("cents")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wAll = Window.partitionBy("week")
+    weekly
+      .withColumn("cum", sum("cnt").over(wCum))
+      .withColumn("n", sum("cnt").over(wAll))
+      .groupBy("week")
+      .agg(sum("cnt").as("n_events"),
+        min(when(col("cum") >= col("n") * 0.5, col("cents"))).as("p50_e2"),
+        min(when(col("cum") >= col("n") * 0.9, col("cents"))).as("p90_e2"))
+      .orderBy("week")
+  }
+
   /** Shared oracle of q_agg_quantile_rollup and its streaming twin
     * q_stream_quantile: weekly exact discrete percentiles straight off
     * the event log — both gates must reproduce it from merged
@@ -52,6 +85,15 @@ object ExtraQueries {
       |  quantile_disc(cents, 0.9) AS p90_e2
       |FROM e WHERE cents IS NOT NULL
       |GROUP BY 1 ORDER BY week""".stripMargin
+
+  /** The per-day KLL binary partial of q_agg_kll_rollup and
+    * q_stream_kll: k·log(n/k) values per day whatever the value
+    * domain; KLL merge is associative over any merge tree. */
+  private[graft] def kllDaily(events: DataFrame): DataFrame = {
+    graft.functions.KllSketch.register(events.sparkSession)
+    eventCents(events).groupBy("day")
+      .agg(expr("kll_agg(cents, 256)").as("sk"))
+  }
 
   /** q_agg_kll_rollup's report side, taking the persisted per-day
     * binary summaries as a DataFrame so PlanQualitySpec can assert the
@@ -92,6 +134,14 @@ object ExtraQueries {
       .agg(sort_array(collect_list(col("h"))).as("mins"),
         count(lit(1)).as("m"))
   }
+
+  /** The theta partial of q_agg_theta_overlap and q_stream_theta: the
+    * per-segment KMV summary of raw event rows' distinct
+    * (event_type, xxhash64(user_id)) set. */
+  private[graft] def thetaPartial(events: DataFrame): DataFrame =
+    thetaKmv(events
+      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
+      .distinct(), ThetaK)
 
   /** Pair estimator + exact audit shared by the batch and streaming
     * theta gates: θ = smaller k-th min as a hash-space fraction,
@@ -230,13 +280,6 @@ object ExtraQueries {
       .orderBy("week")
   }
 
-  /** The (day, cents) event view both KLL gates audit against. */
-  private[graft] def kllEventView(s: SparkSession, d: String): DataFrame =
-    graft.Tables.events(s, d)
-      .select(expr("unix_micros(ts) div 86400000000").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .filter(col("cents").isNotNull)
-
   /** Shared oracle of q_agg_kll_rollup and q_stream_kll. */
   private[graft] val KllRollupOracle: String =
     """WITH e AS (SELECT
@@ -292,8 +335,8 @@ object ExtraQueries {
     * serial stage plus scheduling overhead). At scale the scan carries
     * many row groups, the condition is false, and NO extra exchange is
     * paid — same rule as the streaming sinks' one-file-batch
-    * repartition (cmsBatch), made conditional because a batch census
-    * input is corpus-sized, not batch-sized.
+    * repartition (StreamQueries.spread), made conditional because a
+    * batch census input is corpus-sized, not batch-sized.
     * The spread HASHES on a caller-supplied high-cardinality key
     * instead of round-robin: keyless repartition first pays a local
     * sort of its input (sortBeforeRepartition, guide §2.5) — measured
@@ -536,6 +579,27 @@ object ExtraQueries {
       |SELECT census.week, n_days, day_card_sum, exact_users
       |FROM census JOIN x USING (week) ORDER BY week""".stripMargin
 
+  /** The per-day Roaring64 user-bitmap partial of q_agg_bitmap_rollup
+    * and q_stream_bitmap. Bitmap OR is associative and idempotent, so
+    * re-folding partials of any split (replays included) is exact. */
+  private[graft] def bitmapDaily(events: DataFrame): DataFrame = {
+    graft.functions.BitmapFunctions.register(events.sparkSession)
+    events.select(col("user_id"),
+        expr("unix_micros(ts) div 86400000000").as("day"))
+      .groupBy("day").agg(expr("bm_agg(user_id)").as("users_bm"))
+  }
+
+  /** The weekly census over a one-row-per-day bitmap relation: days,
+    * the per-day cardinality sum and the exact weekly distinct users
+    * (bm_card of the weekly OR). */
+  private[graft] def bitmapWeekly(daily: DataFrame): DataFrame =
+    daily.withColumn("week", expr("day div 7"))
+      .groupBy("week")
+      .agg(count(lit(1)).as("n_days"),
+        sum(expr("bm_card(users_bm)")).as("day_card_sum"),
+        expr("bm_card(bm_union(users_bm))").as("exact_users"))
+      .orderBy("week")
+
   /** The ×d (depth, bucket) hash expansion shared by the CMS partial
     * build and the probe side (`tok` must be in scope). */
   private[graft] val CmsBucketsExpr: String =
@@ -591,6 +655,21 @@ object ExtraQueries {
         sha2(concat(lit("mixt:"), col("doc_id").cast("string")), 256)
           .as("h"))
 
+  /** The per-source (n_docs, avail tokens) census of q_mix_epochs,
+    * also the per-batch partial of q_stream_mix: source-domain-sized,
+    * every column a SUM. */
+  private[graft] def mixCounts(docs: DataFrame): DataFrame =
+    docs.select(col("source"),
+        size(split(col("text"), " ")).cast("long").as("toks"))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum("toks").as("avail"))
+
+  /** The per-(type, day) integer-cent totals of q_time_seasonal, also
+    * the per-batch partial of q_stream_seasonal (sum-mergeable). */
+  private[graft] def seasonalDaily(events: DataFrame): DataFrame =
+    eventCents(events).groupBy("event_type", "day")
+      .agg(sum("cents").as("total_e2"))
+
   /** The seasonal decomposition's report half, shared by
     * q_time_seasonal and its streaming twin q_stream_seasonal: over a
     * MATERIALIZED (event_type, day, total_e2) daily relation, the
@@ -632,23 +711,6 @@ object ExtraQueries {
       |SELECT tok, CAST(count(*) AS BIGINT) AS cnt,
       |  TRUE AS over_ok, TRUE AS bound_ok
       |FROM tok GROUP BY tok ORDER BY tok""".stripMargin
-
-  private[graft] def quantileRollupPlan(daily: DataFrame): DataFrame = {
-    val weekly = daily
-      .withColumn("week", expr("day div 7"))
-      .groupBy("week", "cents").agg(sum("cnt").as("cnt"))
-    val wCum = Window.partitionBy("week").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy("week")
-    weekly
-      .withColumn("cum", sum("cnt").over(wCum))
-      .withColumn("n", sum("cnt").over(wAll))
-      .groupBy("week")
-      .agg(sum("cnt").as("n_events"),
-        min(when(col("cum") >= col("n") * 0.5, col("cents"))).as("p50_e2"),
-        min(when(col("cum") >= col("n") * 0.9, col("cents"))).as("p90_e2"))
-      .orderBy("week")
-  }
 
   /** The CDC change-log view of the events table — op derived
     * deterministically (every 11th event a DELETE, the rest UPSERTs),
@@ -1142,21 +1204,10 @@ object ExtraQueries {
     // fold (set semantics — pinned in BitmapRollupSpec).
     "q_agg_bitmap_rollup" -> ((
       (s: SparkSession, d: String) => {
-        graft.functions.BitmapFunctions.register(s)
-        val ev = graft.Tables.events(s, d)
-          .select(col("user_id"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
         val dailyDir = s"${graft.Tables.scratchRoot}/graft_bmdaily_${graft.Tables.dirTag(d)}"
-        ev.groupBy("day")
-          .agg(expr("bm_agg(user_id)").as("users_bm"))
+        bitmapDaily(graft.Tables.events(s, d))
           .write.mode("overwrite").parquet(dailyDir)
-        s.read.parquet(dailyDir)
-          .withColumn("week", expr("day div 7"))
-          .groupBy("week")
-          .agg(count(lit(1)).as("n_days"),
-            sum(expr("bm_card(users_bm)")).as("day_card_sum"),
-            expr("bm_card(bm_union(users_bm))").as("exact_users"))
-          .orderBy("week")
+        bitmapWeekly(s.read.parquet(dailyDir))
       },
       BitmapRollupOracle)),
 
@@ -1265,13 +1316,9 @@ object ExtraQueries {
     // engines' histograms bit-identical.
     "q_agg_quantile_rollup" -> ((
       (s: SparkSession, d: String) => {
-        val ev = graft.Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-          .filter(col("cents").isNotNull)
         val dailyDir =
           s"${graft.Tables.scratchRoot}/graft_qhist_${graft.Tables.dirTag(d)}"
-        ev.groupBy("day", "cents").agg(count(lit(1)).as("cnt"))
+        quantileHist(graft.Tables.events(s, d))
           .write.mode("overwrite").parquet(dailyDir)
         quantileRollupPlan(s.read.parquet(dailyDir))
       },
@@ -1295,13 +1342,11 @@ object ExtraQueries {
     // the log — map-side at 100 TB.
     "q_agg_kll_rollup" -> ((
       (s: SparkSession, d: String) => {
-        graft.functions.KllSketch.register(s)
-        val ev = kllEventView(s, d)
+        val ev = graft.Tables.events(s, d)
         val dailyDir =
           s"${graft.Tables.scratchRoot}/graft_klldaily_${graft.Tables.dirTag(d)}"
-        ev.groupBy("day").agg(expr("kll_agg(cents, 256)").as("sk"))
-          .write.mode("overwrite").parquet(dailyDir)
-        kllAudit(ev, kllRollupReport(s.read.parquet(dailyDir)))
+        kllDaily(ev).write.mode("overwrite").parquet(dailyDir)
+        kllAudit(eventCents(ev), kllRollupReport(s.read.parquet(dailyDir)))
       },
       KllRollupOracle)),
 
@@ -1901,11 +1946,7 @@ object ExtraQueries {
         // single-partition exchange, domain-sized at any corpus scale.
         val w = Window.partitionBy(lit(1))
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        t(s, d, "documents")
-          .select(col("source"),
-            size(split(col("text"), " ")).cast("long").as("toks"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_docs"), sum("toks").as("avail"))
+        mixCounts(t(s, d, "documents"))
           .withColumn("total", sum("avail").over(w))
           .withColumn("n_sources", count(lit(1)).over(w))
           .select(col("source"), col("n_docs"), col("avail"),
@@ -2848,11 +2889,8 @@ object ExtraQueries {
     // histogram build is the only data-sized stage.
     "q_drift_psi" -> ((
       (s: SparkSession, d: String) => {
-        val ev = graft.Tables.events(s, d)
-          .select(col("event_type"),
-            expr("unix_micros(ts) div 86400000000").as("day"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-          .filter(col("cents").isNotNull && col("cents") >= 0)
+        val ev = eventCents(graft.Tables.events(s, d))
+          .filter(col("cents") >= 0)
         val md = ev.agg(min("day")).head().getLong(0)
         val bc = ev.withColumn("bin", expr("cents div 50"))
           .groupBy("event_type", "bin")
@@ -3185,15 +3223,8 @@ object ExtraQueries {
         // and the join's fact side) — materialize it once so the log
         // is scanned and rolled up exactly once (the q_assoc_pairs
         // basket pattern).
-        val daily = graft.Tables.events(s, d)
-          .select(col("event_type"),
-            expr("unix_micros(ts) div 86400000000").as("day"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-          .filter(col("cents").isNotNull)
-          .groupBy("event_type", "day")
-          .agg(sum("cents").as("total_e2"))
-          .localCheckpoint()
-        seasonalReport(daily)
+        seasonalReport(seasonalDaily(graft.Tables.events(s, d))
+          .localCheckpoint())
       },
       SeasonalOracle)),
 
@@ -3683,12 +3714,8 @@ object ExtraQueries {
     // exact counts + 3σ-bound booleans (σ ≈ |A∪B|/√k, k=256), the
     // q_agg_approx_quantile discipline.
     "q_agg_theta_overlap" -> ((
-      (s: SparkSession, d: String) => {
-        val su = graft.Tables.events(s, d)
-          .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-          .distinct()
-        thetaAudit(s, d, thetaKmv(su, ThetaK), ThetaK)
-      },
+      (s: SparkSession, d: String) =>
+        thetaAudit(s, d, thetaPartial(graft.Tables.events(s, d)), ThetaK),
       ThetaOverlapOracle)),
 
     // Table profile — the ANALYZE TABLE / data-catalog operator: per

@@ -6,19 +6,35 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Tables.t
 
-/** q_stream_batch: the Structured Streaming variant of the reference's
-  * BatchStream (P6, reference: batch_stream.py:16-64): a micro-batched,
+/** The stream gates: Structured Streaming variants of the reference's
+  * BatchStream (P6, reference: batch_stream.py:16-64), a micro-batched,
   * key-grouped ingest with bounded state. We reproduce the *observable*
-  * contract (grouped counts with conservation — every event counted
-  * exactly once), not the eviction heuristic (SURVEY.md §7.4).
+  * contract (every event counted exactly once), not the eviction
+  * heuristic (SURVEY.md §7.4). Every gate streams a fixture dump
+  * ([[streamDump]]) to completion (AvailableNow), either into the
+  * memory sink ([[runToMemory]]) or through a per-micro-batch function
+  * ([[runBatches]]).
   *
-  * Tumbling 1-hour event-time windows per event_type over the `events`
-  * table read as a file stream; the oracle is the batch equivalent
-  * (date_trunc to the hour) — streaming and batch answers must agree.
-  *
-  * At scale this runs in append mode with `withWatermark` bounding state;
-  * here the source is finite (Trigger.AvailableNow) so complete mode
-  * against the in-memory sink gives the full deterministic answer.
+  * The fold-sink protocol. Most foreachBatch gates reduce each
+  * micro-batch to a small mergeable PARTIAL (a count histogram, a
+  * sketch, a one-row ledger: domain-sized, never batch-sized) and answer
+  * from a report that folds the persisted partials, never re-reading
+  * the source:
+  *   - micro-batch `id` overwrites `$root/<name>/batch=<id>` with its
+  *     partial, as one file ([[foldBatch]]);
+  *   - foreachBatch is at-least-once, so a replayed batch recomputes the
+  *     same deterministic partial and overwrites its own dir: nothing
+  *     is counted twice, so the output is exactly-once (pinned across
+  *     literal restarts in the Stream*Spec suites);
+  *   - every partial merges associatively and commutatively (sums,
+  *     min/max, sketch or bitmap unions, top-k of a union), so the
+  *     report's fold equals the batch twin's answer under ANY
+  *     micro-batch split, and the twins share one oracle.
+  * Where the batch twin builds the same partial, it is defined once
+  * beside the shared report (ExtraQueries, TextQueries, VectorQueries)
+  * and both twins call it. The multi-write sinks (expect, pipeline,
+  * quarantine, zonemap, dedup_inc, ann_inc, cdc, assoc, agg_inc) keep
+  * the same overwrite-per-batch-dir rule for each of their artifacts.
   */
 object StreamQueries {
 
@@ -51,16 +67,46 @@ object StreamQueries {
     // row groups are what give a single-file batch its intra-batch
     // scan parallelism (at 100 TB a trigger carries many files/row
     // groups; a one-row-group batch file is the fixture artifact).
+    // `:nonempty` (see dropEmptyParts) is part of the fingerprint, so
+    // a dump that still holds a zero-row part file is rebuilt.
     val fp = graft.Tables.sourceFingerprint(
       Seq(java.nio.file.Paths.get(d, s"$table.parquet")),
       s"streamdump_v$DumpVersion:$variant" +
-        (if (blockBytes > 0) s":rg$blockBytes" else ""))
+        (if (blockBytes > 0) s":rg$blockBytes" else "") + ":nonempty")
     graft.Tables.ensureDerived(dumpDir, fp) {
-      val w = df.write.mode("overwrite")
+      val data = df
+      val w = data.write.mode("overwrite")
       (if (blockBytes > 0) w.option("parquet.block.size", blockBytes)
        else w).parquet(dumpDir)
+      dropEmptyParts(data.sparkSession, dumpDir)
     }
     dumpDir
+  }
+
+  /** Spark writes task 0's part file even when that task's input split
+    * held no row group (a split of a one-row-group fixture file), and a
+    * one-file-per-trigger stream would run such a file as a zero-row
+    * micro-batch. Delete zero-row part files and their checksums,
+    * keeping one if every part is empty so the dir keeps its schema. */
+  private def dropEmptyParts(s: SparkSession, dir: String): Unit = {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = s.sparkContext.hadoopConfiguration
+    def rows(p: Path): Long = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri), conf))
+      try r.getRecordCount finally r.close()
+    }
+    val parts = Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      .sortBy(_.getFileName.toString)
+    val empty = parts.filter(rows(_) == 0L)
+    empty.drop(if (empty.size == parts.size) 1 else 0).foreach { p =>
+      Files.delete(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
   }
 
   /** The events dump every event gate streams: events.parquet's ts
@@ -223,13 +269,11 @@ object StreamQueries {
     * digest, LEFT ANTI join against the PERSISTED corpus digest index
     * (the q_dedup_incremental protocol — the accumulated corpus is
     * never rescanned), log the batch's surviving digests, and append
-    * the stream-first-seen ones to the stream's accepted-digest index.
-    * Both writes are keyed by micro-batch id and OVERWRITE their own
-    * dir, so a replayed batch (foreachBatch is at-least-once)
-    * reproduces rather than duplicates its output — exactly-once
-    * acceptance, asserted across a literal restart in StreamDedupSpec.
-    * At 100 TB the per-batch anti-join is batch-sized vs an index scan
-    * (broadcast the batch side), and the acceptance append is one new
+    * the stream-first-seen ones to the stream's accepted-digest index
+    * (both batch-dir overwrites; exactly-once acceptance across a
+    * literal restart is asserted in StreamDedupSpec). At 100 TB the
+    * per-batch anti-join is batch-sized vs an index scan (broadcast
+    * the batch side), and the acceptance append is one new
     * file per micro-batch — the index compacts on the next full sync. */
   private[graft] def incDedupBatch(batch: DataFrame, baseIdx: DataFrame,
       root: String, batchId: Long): Unit = {
@@ -238,9 +282,7 @@ object StreamQueries {
     // (r19 — the read-back of the just-written obs file recomputed
     // nothing but still paid a scan job, and it serialized the two
     // writes). Content is identical to the former read-back by
-    // construction, and a foreachBatch replay recomputes the same
-    // deterministic rows — the exactly-once overwrite protocol is
-    // untouched (StreamDedupSpec pins it across a restart).
+    // construction, and a replay recomputes the same rows.
     val obs = incDedupObsPlan(batch, baseIdx).persist()
     try {
       // Accepted-so-far = strictly EARLIER batches only: a replay of
@@ -263,9 +305,9 @@ object StreamQueries {
       // The two artifacts are independent given obs — overlap them.
       batchWrites(s)(
         "obs" -> (() => obs.write.mode("overwrite")
-          .parquet(s"$root/obs/batch=$batchId")),
+          .parquet(batchDir(root, "obs", batchId))),
         "idx" -> (() => accepted.write.mode("overwrite")
-          .parquet(s"$root/idx/batch=$batchId")))
+          .parquet(batchDir(root, "idx", batchId))))
     } finally { obs.unpersist(); () }
   }
 
@@ -275,16 +317,15 @@ object StreamQueries {
     * so candidates equal the batch-mode probe's), append them to the
     * stream's bucket index (the artifact the next full sync compacts
     * into the base index), and log the batch's candidate pairs against
-    * the base index. Both writes are keyed by micro-batch id and
-    * OVERWRITE their own dir — exactly-once under at-least-once
-    * foreachBatch replay, same protocol as incDedupBatch. Bucket
-    * equi-joins are per-row independent, so the union of per-batch
+    * the base index (both batch-dir overwrites). Bucket equi-joins
+    * are per-row independent, so the union of per-batch
     * candidate logs is micro-batch-split independent and equals
     * q_embed_ann_inc's candidate set exactly (asserted in
     * StreamAnnSpec). At 100 TB the per-batch work is batch-sized: one
     * plane projection over the batch plus an equi-join against the
-    * (scan-only, skew-capped) index. */
-  /** `cappedBase` must be the SKEW-CAPPED base bucket index
+    * (scan-only, skew-capped) index.
+    *
+    * `cappedBase` must be the SKEW-CAPPED base bucket index
     * (VectorQueries.cappedIndex over the persisted index) — the cap is
     * static across micro-batches, so callers build it once (ideally
     * persisted) instead of re-running the index-wide cap window inside
@@ -304,30 +345,33 @@ object StreamQueries {
     val buck = VectorQueries.bucketsOf(vecs, bits).persist()
     try batchWrites(s)(
       "idx" -> (() =>
-        buck.write.mode("overwrite").parquet(s"$root/idx/batch=$batchId")),
+        buck.write.mode("overwrite").parquet(batchDir(root, "idx", batchId))),
       "obs" -> (() => buck
         .select(col("vec_id").as("qid"), col("tbl"), col("bkt"))
         .join(cappedBase
           .select(col("vec_id").as("nid"), col("tbl"), col("bkt")),
           Seq("tbl", "bkt"))
         .select("qid", "nid").distinct()
-        .write.mode("overwrite").parquet(s"$root/obs/batch=$batchId")))
+        .write.mode("overwrite").parquet(batchDir(root, "obs", batchId))))
     finally { buck.unpersist(); () }
   }
 
   /** One micro-batch of the streaming matview-maintenance sink
-    * (q_stream_agg_inc): aggregate THIS batch's delta and write it to a
-    * batch-id-keyed dir, OVERWRITTEN on replay — the same idempotency
-    * protocol as incDedupBatch. The fold into the persisted view
-    * happens at read time over base ∪ deltas (distributive aggs), so a
-    * replayed batch can never double-count. */
+    * (q_stream_agg_inc): aggregate THIS batch's delta into its batch
+    * dir. The fold into the persisted view happens at read time over
+    * base ∪ deltas (distributive aggs). */
   private[graft] def mvDeltaBatch(batch: DataFrame, root: String,
       batchId: Long): Unit =
     batch.groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .write.mode("overwrite").parquet(s"$root/delta/batch=$batchId")
+      .write.mode("overwrite").parquet(batchDir(root, "delta", batchId))
 
+  /** q_stream_batch: tumbling 1-hour event-time windows per event_type
+    * over the events dump; the oracle is the batch equivalent
+    * (date_trunc to the hour). At scale this runs in append mode with
+    * `withWatermark` bounding state; the finite source here makes
+    * complete mode against the memory sink deterministic. */
   def streamCounts(s: SparkSession, d: String): DataFrame = {
     val stream = fileStream(s, eventsDump(s, d), oneFilePerTrigger = false)
       .withWatermark("ts", "1 hour")
@@ -342,38 +386,10 @@ object StreamQueries {
       .orderBy("ws", "event_type")
   }
 
-  /** One micro-batch of the streaming heavy-hitters sink
-    * (q_stream_topk): aggregate THIS batch's tokens into one
-    * <=k-counter Misra-Gries summary (the mergeable-summaries shape —
-    * fixed-size state through the batch's exchange regardless of
-    * batch vocabulary) and write it, plus the batch token count, to a
-    * batch-id-keyed dir — OVERWRITTEN on replay, the same
-    * exactly-once protocol as incDedupBatch. The summaries union is
-    * the candidate set: a token absent from EVERY batch summary has
-    * true total frequency <= sum_i N_i/(k+1) = N/(k+1) (the MG
-    * guarantee per batch), so with k=256 nothing above the N/200 gate
-    * threshold can be missed, under any micro-batch split. */
-  private[graft] def topkSketchBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit = {
-    val s = batch.sparkSession
-    graft.functions.TopKSketch.register(s)
-    // repartition before the token explode: one-file micro-batches
-    // otherwise run the whole explode + partial-MG in a single task
-    // (see cmsBatch); partial MG summaries then merge in the final agg.
-    writePartial(batch.repartition(s.sparkContext.defaultParallelism)
-      .select(explode(split(col("text"), " ")).as("tok"))
-      .agg(expr("mg_topk(tok, 256, 256)").as("hh"),
-        count(lit(1)).as("n"))
-      // explode_OUTER: a batch whose summary came back empty (possible
-      // under MG counter pressure — e.g. k+1 distinct singletons
-      // decrement every counter to zero) must still contribute its
-      // token count to the stream total, or the N/200 threshold drifts
-      // below the oracle's. Such a batch writes one (null, null, n)
-      // row; the candidate union filters the null out.
-      .select(explode_outer(col("hh")).as("kv"), col("n"))
-      .select(col("kv.item").as("item"), col("kv.est_count").as("est"),
-        col("n")), s"$root/sketch/batch=$batchId")
-  }
+  /** `$root/<name>/batch=<id>`: the dir micro-batch `id` overwrites
+    * with its artifact `name`. */
+  private def batchDir(root: String, name: String, batchId: Long): String =
+    s"$root/$name/batch=$batchId"
 
   /** Write a DOMAIN-SIZED per-batch partial as a single file. The
     * partial relations the fold sinks persist are (days × types) /
@@ -384,159 +400,153 @@ object StreamQueries {
     * of batches. Batch-SIZED artifacts (cdc deltas, zonemap data,
     * dedup index entries) keep their parallel layout — single-tasking
     * those would serialize real data volume. */
-  private def writePartial(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(dir)
-
-  /** One micro-batch of the streaming quantile sink
-    * (q_stream_quantile): fold THIS batch's events to a (day, cents)
-    * count histogram — domain-sized, never row-sized — written to a
-    * batch-id-keyed dir (idempotent overwrite, the incDedupBatch
-    * exactly-once protocol). Histogram merge is a counts sum
-    * (associative + commutative), so the report fold over per-batch
-    * partials equals the batch rollup under ANY micro-batch split. */
-  private[graft] def quantileHistBatch(batch: DataFrame, root: String,
+  private def writePartial(df: DataFrame, root: String, name: String,
       batchId: Long): Unit =
-    writePartial(batch
-      .select(expr("unix_micros(ts) div 86400000000").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .filter(col("cents").isNotNull)
-      .groupBy("day", "cents").agg(count(lit(1)).as("cnt")),
-      s"$root/hist/batch=$batchId")
+    df.coalesce(1).write.mode("overwrite")
+      .parquet(batchDir(root, name, batchId))
 
-  /** One micro-batch of the streaming KLL sink (q_stream_kll): fold
-    * THIS batch's events to per-day KLL binaries — k·log(n/k)-sized
-    * regardless of the value domain (the unbounded-domain case
-    * quantileHistBatch's count histogram can't cover) — written to a
-    * batch-id-keyed dir (idempotent overwrite, the incDedupBatch
-    * exactly-once protocol). KLL merge is associative over arbitrary
-    * merge trees, so the report fold over per-(batch, day) partials
-    * honors the same rank guarantee under ANY micro-batch split. */
-  private[graft] def kllBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit = {
-    graft.functions.KllSketch.register(batch.sparkSession)
-    // (A pre-agg repartition was A/B'd here like cmsBatch's and
-    // REVERTED: the kll partial's map work is row-cheap — no explode
-    // fan-out — so the 100x soak moved 15.97 -> 16.86 s, i.e. the
-    // extra exchange bought nothing. The repartition pays only where
-    // the single input split feeds a multiplying stage.)
-    writePartial(batch
-      .select(expr("unix_micros(ts) div 86400000000").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .filter(col("cents").isNotNull)
-      .groupBy("day").agg(expr("kll_agg(cents, 256)").as("sk")),
-      s"$root/kll/batch=$batchId")
+  /** One micro-batch of a fold sink: `partial(batch)` lands as one file
+    * in its batch dir (the protocol in the header). Gates run it through
+    * [[runBatches]] via [[foldStream]]; specs call it with an explicit
+    * id to replay a batch. */
+  private[graft] def foldBatch(root: String, name: String)(
+      partial: DataFrame => DataFrame)(batch: DataFrame, batchId: Long): Unit =
+    writePartial(partial(batch), root, name, batchId)
+
+  /** A fold gate's ingest: drain `stream` through [[foldBatch]] into the
+    * fresh root `graft_<gate>_<tag>` and return the persisted partials,
+    * with their `batch` column, for the report to fold. */
+  private def foldStream(stream: DataFrame, d: String, gate: String,
+      name: String)(partial: DataFrame => DataFrame): DataFrame = {
+    val root = freshRoot(d, gate)
+    runBatches(stream, root)(foldBatch(root, name)(partial))
+    stream.sparkSession.read.parquet(s"$root/$name")
   }
 
-  /** One micro-batch of the streaming bitmap sink (q_stream_bitmap):
-    * fold THIS batch's events to per-day Roaring64 user bitmaps
-    * (exact distinct sets, bytes sublinear in cardinality), written
-    * to a batch-id-keyed dir (idempotent overwrite, the incDedupBatch
-    * exactly-once protocol). Bitmap OR is associative AND idempotent,
-    * so the report's re-fold over per-(batch, day) partials is
-    * bit-exactly the batch gate's weekly census under ANY micro-batch
-    * split — including replays, which the set semantics absorb. */
-  private[graft] def bitmapBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit = {
-    graft.functions.BitmapFunctions.register(batch.sparkSession)
-    writePartial(batch
-      .select(col("user_id"),
-        expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy("day").agg(expr("bm_agg(user_id)").as("users_bm")),
-      s"$root/bm/batch=$batchId")
+  /** Spread a micro-batch over the default parallelism before a stage
+    * that multiplies rows or is row-local but heavy: with
+    * maxFilesPerTrigger=1 each batch arrives as ONE input split, so a
+    * token explode (cms, topk, dsir), the ×dims posexplode (embed_drift)
+    * or regex/array work over every doc (pii, url, cascade) would
+    * otherwise run in a single task (100x soak A/B, pii: 29.5 -> 15.5
+    * s). Only the batch's rows cross the exchange. Where the map work
+    * is row-cheap (kll: 15.97 -> 16.86 s with it) or the dump's 2 MB
+    * row groups already split the scan (profile: 0.57 vs 3.28 s/batch
+    * at 100x) the exchange costs more than it buys, so those partials
+    * take the batch as it comes. */
+  private def spread(batch: DataFrame): DataFrame =
+    batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
+
+  // Stream-only partials. Each has a batch twin that computes something
+  // else on purpose; the "kept apart" line says what.
+
+  /** q_stream_topk: one ≤256-counter Misra-Gries summary plus the
+    * batch's token count. A token absent from EVERY batch summary has
+    * true frequency ≤ Σ N_i/(k+1) = N/(k+1), so nothing above the
+    * gate's N/200 threshold is missed under any split. Kept apart:
+    * q_topk_sketch runs one MG pass over the whole corpus, with a
+    * different threshold. */
+  private[graft] def topkPartial(batch: DataFrame): DataFrame = {
+    graft.functions.TopKSketch.register(batch.sparkSession)
+    spread(batch)
+      .select(explode(split(col("text"), " ")).as("tok"))
+      .agg(expr("mg_topk(tok, 256, 256)").as("hh"), count(lit(1)).as("n"))
+      // explode_OUTER: a batch whose summary came back empty (possible
+      // under MG counter pressure — e.g. k+1 distinct singletons
+      // decrement every counter to zero) must still contribute its
+      // token count to the stream total, or the N/200 threshold drifts
+      // below the oracle's. Such a batch writes one (null, null, n)
+      // row; the candidate union filters the null out.
+      .select(explode_outer(col("hh")).as("kv"), col("n"))
+      .select(col("kv.item").as("item"), col("kv.est_count").as("est"),
+        col("n"))
   }
 
-  /** One micro-batch of the streaming seasonal sink
-    * (q_stream_seasonal): fold THIS batch's events to per-(type, day)
-    * integer-cent total partials — sum-mergeable, the simplest member
-    * of the partial algebra — written batch-id-keyed (exactly-once
-    * overwrite). The report SUMs partials into the daily relation and
-    * runs the SAME seasonalReport as the batch gate, so baselines and
-    * residuals are bit-identical under any micro-batch split. */
-  private[graft] def seasonalBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(batch
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .filter(col("cents").isNotNull)
-      .groupBy("event_type", "day")
-      .agg(sum("cents").as("total_e2")),
-      s"$root/daily/batch=$batchId")
-
-  /** One micro-batch of the streaming CMS sink (q_stream_cms): fold
-    * THIS batch's tokens to a d×w (depth, bucket) count relation —
-    * the CMS partial, fixed-size regardless of batch rows — written to
-    * a batch-id-keyed dir (idempotent overwrite, the incDedupBatch
-    * exactly-once protocol). CMS is LINEAR, so the report's SUM over
-    * per-batch partials is bit-exactly the batch gate's sketch under
-    * ANY micro-batch split. */
-  private[graft] def cmsBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    // repartition BEFORE the ×(tokens × CmsDepth) explode: with
-    // maxFilesPerTrigger=1 each micro-batch arrives as ONE input
-    // split, so without it the whole explode+partial-agg (tens of
-    // millions of rows at the 100x soak) runs in a single task. The
-    // exchange moves only the batch's doc rows; the heavy fan-out then
-    // folds map-side in parallel into d×w partials.
-    writePartial(batch.repartition(batch.sparkSession.sparkContext
-        .defaultParallelism)
+  /** q_stream_cms: the d×w (depth, bucket) count relation — CMS is
+    * linear, so the report's SUM is bit-exactly the batch sketch. Kept
+    * apart: q_agg_cms_rollup counts (source, tok) first so its audit
+    * reuses the counted relation (r19). */
+  private[graft] def cmsPartial(batch: DataFrame): DataFrame =
+    spread(batch)
       .select(explode(split(col("text"), " ")).as("tok"))
       .select(explode(expr(ExtraQueries.CmsBucketsExpr)).as("db"))
       .groupBy(col("db.dep").as("dep"), col("db.bkt").as("bkt"))
-      .agg(count(lit(1)).as("cnt")),
-      s"$root/cms/batch=$batchId")
+      .agg(count(lit(1)).as("cnt"))
 
-  /** One micro-batch of the streaming PII census (q_stream_pii): this
-    * batch's docs run the same injection + scrub projection as the
-    * batch gate (TextQueries.piiSpans) and land as a per-source
-    * integer-census partial in a batch-id-keyed dir (idempotent
-    * overwrite, the incDedupBatch exactly-once protocol). Every census
-    * column is a SUM, so the report fold equals the batch census under
-    * ANY micro-batch split. The pre-scrub repartition was A/B'd like
-    * cmsBatch's: row-local but regex-HEAVY work (two engine passes
-    * over every doc's full text) is the other case where a one-file
-    * batch's single task dominates — 100x soak 29.5 -> 15.5 s. */
-  private[graft] def piiBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(TextQueries.piiCensus(TextQueries.piiSpans(
-      batch.repartition(batch.sparkSession.sparkContext
-        .defaultParallelism))),
-      s"$root/pii/batch=$batchId")
-
-  /** One micro-batch of the streaming skew sink (q_stream_skew): fold
-    * THIS batch's events to per-key frequency partials for the two
-    * candidate join keys — (key, k, f) relations, key-domain-sized —
-    * written batch-id-keyed. Frequencies fold by SUM, so the census
-    * over the folded relation equals the batch census under ANY
-    * split. */
-  private[graft] def skewBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(
-      batch.select(lit("user_id").as("key"),
+  /** The (key, k) rows of the two candidate join keys q_stream_skew and
+    * q_stream_skew_sketch census. */
+  private def skewKeys(events: DataFrame): DataFrame =
+    events.select(lit("user_id").as("key"),
         col("user_id").cast("string").as("k"))
-        .unionByName(batch.select(lit("event_type").as("key"),
-          col("event_type").as("k")))
-        .groupBy("key", "k").agg(count(lit(1)).as("f")),
-      s"$root/skew/batch=$batchId")
+      .unionByName(events.select(lit("event_type").as("key"),
+        col("event_type").as("k")))
 
-  /** One micro-batch of the SKETCHED streaming skew sink
-    * (q_stream_skew_sketch): per key axis ONE row carrying a
-    * Misra-Gries summary (<= 64 (item, est) entries) and the batch
-    * row count — bounded per-batch state regardless of key
-    * cardinality, the seam q_stream_skew's exact key-domain partials
-    * cannot offer (PODS'12 mergeable summaries: the mg_merge fold of
-    * per-batch MG summaries keeps the global N/(k+1) bound). */
-  private[graft] def skewSketchBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(
-      batch.select(lit("user_id").as("key"),
-          col("user_id").cast("string").as("k"))
-        .unionByName(batch.select(lit("event_type").as("key"),
-          col("event_type").as("k")))
-        .groupBy("key")
-        .agg(expr("mg_topk(k, 64, 64)").as("summary"),
-          count(lit(1)).as("n")),
-      s"$root/mg/batch=$batchId")
+  /** q_stream_skew: (key, k, f) frequency partials, folded by SUM —
+    * key-domain-sized. Kept apart: q_skew_census censuses other keys
+    * (lineitem's), one aggregate per key. */
+  private[graft] def skewPartial(batch: DataFrame): DataFrame =
+    skewKeys(batch).groupBy("key", "k").agg(count(lit(1)).as("f"))
+
+  /** q_stream_skew_sketch: per key axis ONE row with a ≤64-entry
+    * Misra-Gries summary and the batch row count — bounded state at any
+    * key cardinality (mg_merge keeps the global N/(k+1) bound). Kept
+    * apart: q_skew_sketch also builds exact frequencies and a KLL p99
+    * in its one pass. */
+  private[graft] def skewSketchPartial(batch: DataFrame): DataFrame =
+    skewKeys(batch).groupBy("key")
+      .agg(expr("mg_topk(k, 64, 64)").as("summary"), count(lit(1)).as("n"))
+
+  /** q_stream_drift: the (event_type, day, bin) count histogram. Kept
+    * apart: q_drift_psi splits ref/cur at the global min day, which no
+    * batch knows, so its bins drop the day grain. */
+  private[graft] def driftPartial(batch: DataFrame): DataFrame =
+    ExtraQueries.eventCents(batch).filter(col("cents") >= 0)
+      .withColumn("bin", expr("cents div 50"))
+      .groupBy("event_type", "day", "bin")
+      .agg(count(lit(1)).as("cnt"))
+
+  /** q_stream_url: (canonical, raw) groups with (min doc, count), so
+    * the state is the group domain, never the doc stream. Kept apart:
+    * q_dedup_url counts raw variants with one countDistinct, which does
+    * not merge across batches. */
+  private[graft] def urlPartial(batch: DataFrame): DataFrame =
+    spread(batch)
+      .select(col("doc_id"), TextQueries.plantedUrl(col("doc_id")).as("url"))
+      .select(col("doc_id"), col("url"),
+        TextQueries.canonicalizeUrl(col("url")).as("curl"))
+      .groupBy("curl", "url")
+      .agg(min("doc_id").as("min_doc"), count(lit(1)).as("n"))
+
+  /** q_stream_profile: ONE row of per-column sufficient statistics —
+    * non-null count, a Datasketches HLL binary, min and max — folded by
+    * SUM / hll_union_agg / min / max. Kept apart: q_profile_approx's
+    * approx_count_distinct (HLL++) exposes no mergeable partial. */
+  private[graft] def profilePartial(batch: DataFrame): DataFrame = {
+    val aggs = ExtraQueries.ProfileNumCols.map(_._1).flatMap { nm => Seq(
+      count(col(nm)).as(s"nn_$nm"),
+      expr(s"hll_sketch_agg($nm)").as(s"sk_$nm"),
+      min(col(nm)).as(s"mn_$nm"), max(col(nm)).as(s"mx_$nm"))
+    } ++ ExtraQueries.ProfileStrCols.flatMap { nm => Seq(
+      count(col(nm)).as(s"nn_$nm"),
+      expr(s"hll_sketch_agg($nm)").as(s"sk_$nm"))
+    } :+ count(lit(1)).as("n_rows")
+    ExtraQueries.profileCanon(batch).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** q_stream_cap: each lang's top-50 by (content hash, doc_id). The
+    * global top-k of a union lies in the union of per-batch top-ks, so
+    * a later batch can still displace an earlier keep at the report's
+    * re-rank; the rank filter compiles to WindowGroupLimit. Kept apart:
+    * q_sample_stratified ranks the whole corpus in one window. */
+  private[graft] def capPartial(batch: DataFrame): DataFrame = {
+    val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
+    batch.select(col("doc_id"), col("lang"))
+      .withColumn("h", sha2(concat(lit("quota:"),
+        col("doc_id").cast("string")), 256))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 50)
+      .select("doc_id", "lang", "h")
+  }
 
   /** One micro-batch of the streaming expectations ledger
     * (q_stream_expect): (a) the row-local expectation sums fold to
@@ -561,24 +571,10 @@ object StreamQueries {
         sum(when(col("l_discount") < 0 || col("l_discount") > 0.1, 1L)
           .otherwise(0L)).as("disc_in_range"),
         sum(when(col("l_quantity") > 25, 1L).otherwise(0L))
-          .as("qty_le_25")),
-        s"$root/sums/batch=$batchId")),
+          .as("qty_le_25")), root, "sums", batchId)),
       "keys" -> (() => batch.groupBy("l_orderkey", "l_linenumber")
         .agg(count(lit(1)).as("c"))
-        .write.mode("overwrite").parquet(s"$root/keys/batch=$batchId")))
-
-  /** One micro-batch of the streaming mixture monitor (q_stream_mix):
-    * per-source doc/token counts — source-domain-sized, every column
-    * a SUM, so the recipe shares derived from the fold equal the
-    * batch census under ANY split. */
-  private[graft] def mixBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(batch
-      .select(col("source"),
-        size(split(col("text"), " ")).cast("long").as("toks"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("toks").as("toks")),
-      s"$root/mix/batch=$batchId")
+        .write.mode("overwrite").parquet(batchDir(root, "keys", batchId))))
 
   /** One micro-batch of the streaming sync front door
     * (q_stream_pipeline): node envelopes FLATTEN immediately (the
@@ -593,8 +589,7 @@ object StreamQueries {
       batchId: Long): Unit = {
     import graft.queries.PipelineQueries.scaleModel
     // K+2 independent write actions run below — cache the batch so
-    // its file is decoded ONCE, not once per kind table (the
-    // profileBatch per-batch scan-cost discipline).
+    // its file is decoded ONCE, not once per kind table.
     val b = batch.persist()
     try {
       val nodes = b.filter(col("type") === "node")
@@ -605,40 +600,15 @@ object StreamQueries {
         .map { k =>
           val tbl = s"tbl_${graft.model.ModelCompiler.tableName(k.fqn)}"
           tbl -> (() => graft.ingest.Flatten.flattenNodes(nodes, k, scaleModel)
-            .write.mode("overwrite").parquet(s"$root/$tbl/batch=$batchId"))
+            .write.mode("overwrite").parquet(batchDir(root, tbl, batchId)))
         }
       batchWrites(b.sparkSession)(kindWrites ++ Seq(
         "ids" -> (() => nodes.select(col("id"), col("reported.kind").as("kind"))
-          .write.mode("overwrite").parquet(s"$root/ids/batch=$batchId")),
+          .write.mode("overwrite").parquet(batchDir(root, "ids", batchId))),
         "edges" -> (() => b.filter(col("type") === "edge")
           .select("type", "from", "to")
-          .write.mode("overwrite").parquet(s"$root/edges/batch=$batchId"))): _*)
+          .write.mode("overwrite").parquet(batchDir(root, "edges", batchId)))): _*)
     } finally { b.unpersist(); () }
-  }
-
-  /** One micro-batch of the streaming quota sink (q_stream_cap —
-    * FineWeb-style per-stratum capping maintained under ingest, the
-    * streaming twin of q_sample_stratified): THIS batch's docs prune
-    * to their per-stratum top-50 by (content hash, doc_id) BEFORE
-    * landing. Top-k-per-key is a LOSSLESS mergeable fold — the global
-    * top-k of a union is contained in the union of per-batch top-ks —
-    * so the accumulated state is ≤ batches × strata × 50 candidate
-    * rows (never the doc stream), a later batch can still evict an
-    * earlier keep at the report's re-rank, and the served quota equals
-    * the batch gate's under any micro-batch split. The rank filter
-    * compiles to WindowGroupLimit, so each batch's prune carries
-    * candidates through the exchange, not the batch. */
-  private[graft] def capBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit = {
-    val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
-    writePartial(batch
-      .select(col("doc_id"), col("lang"))
-      .withColumn("h", sha2(concat(lit("quota:"),
-        col("doc_id").cast("string")), 256))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 50)
-      .select("doc_id", "lang", "h"),
-      s"$root/cap/batch=$batchId")
   }
 
   /** One micro-batch of the streaming quarantine sink
@@ -647,9 +617,7 @@ object StreamQueries {
     * batch gate's contract, never inference), land the corrupt RAW
     * lines in a batch-id-keyed quarantine dir (full line — what a
     * triage pass wants), and fold the clean rows to a per-source
-    * (n_docs, chars) partial — sources-domain-sized, never row-sized.
-    * Both artifact classes are idempotent overwrites, so crash-replay
-    * of a batch never double-counts. */
+    * (n_docs, chars) partial — sources-domain-sized, never row-sized. */
   private[graft] def quarantineBatch(batch: DataFrame, root: String,
       batchId: Long): Unit = {
     val parsed = batch.select(col("value"),
@@ -662,165 +630,19 @@ object StreamQueries {
       // cached parse — overlap the two commits (r19, guide §2.6).
       "bad" -> (() => parsed.filter(col("j._corrupt_record").isNotNull)
         .select("value")
-        .write.mode("overwrite").text(s"$root/bad/batch=$batchId")),
+        .write.mode("overwrite").text(batchDir(root, "bad", batchId))),
       "clean" -> (() => writePartial(parsed
         .filter(col("j._corrupt_record").isNull)
         .groupBy(col("j.source").as("source"))
         .agg(count(lit(1)).as("n_docs"), sum("j.n_chars").as("chars")),
-        s"$root/clean/batch=$batchId")))
+        root, "clean", batchId)))
     finally { parsed.unpersist(); () }
-  }
-
-  /** One micro-batch of the streaming profile sink (q_stream_profile):
-    * THIS batch folds to ONE row of per-column sufficient statistics —
-    * non-null count, a Datasketches HLL sketch binary (mergeable,
-    * unlike the HLL++ the batch gate's approx_count_distinct uses
-    * internally without exposing partials), min and max — written
-    * batch-id-keyed. Counts/extrema fold by SUM/min/max and sketches
-    * by hll_union_agg, so the maintained profile never re-reads the
-    * table. */
-  private[graft] def profileBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit = {
-    val aggs = ExtraQueries.ProfileNumCols.map(_._1).flatMap { nm => Seq(
-      count(col(nm)).as(s"nn_$nm"),
-      expr(s"hll_sketch_agg($nm)").as(s"sk_$nm"),
-      min(col(nm)).as(s"mn_$nm"), max(col(nm)).as(s"mx_$nm"))
-    } ++ ExtraQueries.ProfileStrCols.flatMap { nm => Seq(
-      count(col(nm)).as(s"nn_$nm"),
-      expr(s"hll_sketch_agg($nm)").as(s"sk_$nm"))
-    } :+ count(lit(1)).as("n_rows")
-    // NO pre-agg repartition (r15 A/B): with the dump's 2 MB row
-    // groups the scan itself parallelizes and the sketch partials
-    // collapse map-side to one row per split — the exchange moved the
-    // whole batch to save nothing (0.57 vs 3.28 s/batch at 100x).
-    writePartial(ExtraQueries.profileCanon(batch)
-      .agg(aggs.head, aggs.tail: _*),
-      s"$root/prof/batch=$batchId")
-  }
-
-  /** One micro-batch of the streaming embedding-drift sink
-    * (q_stream_embed_drift): THIS batch's vectors fold to the
-    * (label, dim) conditional-sum grid — VectorQueries.embDriftGrid,
-    * the drift monitor's sufficient statistics, (labels × dims) rows
-    * regardless of batch size. All four sum columns are linear, so the
-    * report's SUM fold is bit-identical to the batch grid under ANY
-    * split. Pre-explode repartition per the cmsBatch rule (the
-    * posexplode multiplies rows ×dims on a one-file batch). */
-  private[graft] def embDriftBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(VectorQueries.embDriftGrid(
-      batch.repartition(batch.sparkSession.sparkContext
-        .defaultParallelism)),
-      s"$root/grid/batch=$batchId")
-
-  /** One micro-batch of the streaming URL-dedup sink (q_stream_url):
-    * THIS batch's docs canonicalize row-locally and collapse to
-    * (canonical, raw) group partials — (min doc, count) per raw
-    * variant — so the accumulated state is the canonical-group DOMAIN
-    * (sites × variants), never the doc stream (idempotent
-    * batch-id-keyed overwrite). min/count are fold-able, so the
-    * report's re-fold equals the batch census under ANY split. */
-  private[graft] def urlBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(batch
-      .repartition(batch.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        TextQueries.plantedUrl(col("doc_id")).as("url"))
-      .select(col("doc_id"), col("url"),
-        TextQueries.canonicalizeUrl(col("url")).as("curl"))
-      .groupBy("curl", "url")
-      .agg(min("doc_id").as("min_doc"), count(lit(1)).as("n")),
-      s"$root/url/batch=$batchId")
-
-  /** One micro-batch of the streaming filter-cascade sink
-    * (q_stream_cascade): THIS batch's docs run the same row-local
-    * signals + first-fail conditional sums as the batch gate, landing
-    * a ONE-ROW (n, d1, d2, d3) partial per batch (idempotent
-    * batch-id-keyed overwrite). Every column is a SUM, so the folded
-    * ledger equals the batch funnel under ANY micro-batch split.
-    * Pre-signal repartition per the piiBatch rule: array_distinct +
-    * lambda filter over every doc's tokens is row-local but heavy, and
-    * a one-file micro-batch would run it all in a single task. */
-  private[graft] def cascadeBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(batch
-      .repartition(batch.sparkSession.sparkContext.defaultParallelism)
-      .select(split(col("text"), " ").as("ts"))
-      .select(size(col("ts")).cast("long").as("tok_n"),
-        expr("size(array_distinct(ts)) * 10000L div size(ts)")
-          .as("uniq_e4"),
-        expr("size(filter(ts, x -> x IN ('the', 'a'))) * 10000L" +
-          " div size(ts)").as("stop_e4"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("tok_n") < 30, 1L).otherwise(0L)).as("d1"),
-        sum(when(col("tok_n") >= 30 && col("uniq_e4") < 4000, 1L)
-          .otherwise(0L)).as("d2"),
-        sum(when(col("tok_n") >= 30 && col("uniq_e4") >= 4000 &&
-          col("stop_e4") > 1500, 1L).otherwise(0L)).as("d3")),
-      s"$root/cascade/batch=$batchId")
-
-  /** One micro-batch of the streaming drift sink (q_stream_drift):
-    * fold THIS batch's events to the (event_type, day, bin) count
-    * histogram — sum-mergeable, keyed by DAY (not by the ref/cur
-    * split, which depends on the global min-day anchor no single
-    * batch can know), so the report derives the anchor from the
-    * folded domain relation and splits windows there. */
-  private[graft] def driftBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(batch
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 86400000000").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .filter(col("cents").isNotNull && col("cents") >= 0)
-      .withColumn("bin", expr("cents div 50"))
-      .groupBy("event_type", "day", "bin")
-      .agg(count(lit(1)).as("cnt")),
-      s"$root/drift/batch=$batchId")
-
-  /** One micro-batch of the streaming DSIR estimator sink
-    * (q_stream_dsir): fold THIS batch's tokens to the (bucket →
-    * target-count, raw-count) relation — the DSIR estimator's
-    * sufficient statistics, ≤256 rows regardless of batch size —
-    * written to a batch-id-keyed dir (idempotent overwrite, the
-    * incDedupBatch exactly-once protocol). Counts are exact sums, so
-    * the report's fold equals the batch estimator under ANY
-    * micro-batch split. Same pre-explode repartition rationale as
-    * cmsBatch: one-file batches otherwise run the token fan-out in a
-    * single task. */
-  private[graft] def dsirBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    writePartial(batch.repartition(batch.sparkSession.sparkContext
-        .defaultParallelism)
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-      .select(col("source"),
-        substring(sha2(col("tok"), 256), 1, 2).as("bkt"))
-      .groupBy("bkt")
-      .agg(sum(when(col("source") === "src0", 1L).otherwise(0L)).as("ct"),
-        count(lit(1)).as("cr")),
-      s"$root/dsir/batch=$batchId")
-
-  /** One micro-batch of the streaming theta sink (q_stream_theta):
-    * fold THIS batch's (segment, id) stream to per-segment KMV k-min
-    * arrays (thetaKmv — the batch's k smallest distinct id hashes),
-    * written to a batch-id-keyed dir (idempotent overwrite, the
-    * incDedupBatch exactly-once protocol). KMV summaries are pure set
-    * functions, so the report's re-fold over unioned per-batch mins
-    * IS the batch gate's summary — estimates identical, not merely
-    * in-bound. */
-  private[graft] def thetaBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit = {
-    val su = batch
-      .select(col("event_type"), xxhash64(col("user_id")).as("h"))
-      .distinct()
-    writePartial(ExtraQueries.thetaKmv(su, ExtraQueries.ThetaK),
-      s"$root/kmv/batch=$batchId")
   }
 
   /** One micro-batch of the streaming CDC compaction sink
     * (q_stream_cdc): compact THIS batch's change rows to one
     * latest-version row per entity (plus the batch's per-entity churn
-    * count), written to a batch-id-keyed dir — OVERWRITTEN on replay,
-    * the incDedupBatch exactly-once protocol. Per-entity latest and
+    * count), written to its batch dir. Per-entity latest and
     * churn are both associative across batches, so the final fold over
     * the per-batch compactions equals the batch replay (q_cdc_apply)
     * under ANY micro-batch split — the log-structured-merge shape a
@@ -836,7 +658,7 @@ object StreamQueries {
         count(lit(1)).over(Window.partitionBy("user_id")).cast("long"))
       .filter(col("rn") === 1)
       .select("event_id", "user_id", "us", "val_e2", "op", "nb")
-      .write.mode("overwrite").parquet(s"$root/delta/batch=$batchId")
+      .write.mode("overwrite").parquet(batchDir(root, "delta", batchId))
   }
 
   /** One micro-batch of the streaming MERGE (q_stream_upsert) — the
@@ -1108,9 +930,8 @@ object StreamQueries {
   /** One micro-batch of the streaming zone-map maintenance
     * (q_stream_zonemap): the batch's rows land in a batch-id-keyed
     * data dir and its min/max/count stats land in a batch-id-keyed
-    * manifest dir — BOTH idempotent overwrites (the incDedupBatch
-    * exactly-once protocol), so a foreachBatch replay rewrites the
-    * same two dirs with the same content. This is the transaction-log
+    * manifest dir, so a replay rewrites the same two dirs with the
+    * same content. This is the transaction-log
     * shape under continuous ingest: every commit carries its file
     * stats, and readers consult the accumulated manifest instead of
     * opening data files. */
@@ -1123,10 +944,10 @@ object StreamQueries {
     // — overlap the two commits (r19, guide §2.6).
     batchWrites(batch.sparkSession)(
       "data" -> (() =>
-        b.write.mode("overwrite").parquet(s"$root/data/batch=$batchId")),
+        b.write.mode("overwrite").parquet(batchDir(root, "data", batchId))),
       "manifest" -> (() => b.agg(min("us").as("us_min"),
           max("us").as("us_max"), count(lit(1)).as("n_rows"))
-        .write.mode("overwrite").parquet(s"$root/manifest/batch=$batchId")))
+        .write.mode("overwrite").parquet(batchDir(root, "manifest", batchId))))
   }
 
   /** The accumulated zone-map manifest under `root`: one row per batch,
@@ -1139,17 +960,15 @@ object StreamQueries {
   /** One micro-batch of the streaming pair-count maintenance
     * (q_stream_assoc): the batch's baskets explode to pairs map-side
     * (the q_assoc_pairs shape) and collapse to a per-batch pair-count
-    * partial in a batch-id-keyed dir — idempotent overwrite, the
-    * exactly-once protocol. Counts-sum is associative, so the folded
+    * partial in its batch dir. Counts-sum is associative, so the folded
     * report equals the batch computation under ANY basket-preserving
     * split. */
   private[graft] def assocBatch(batch: DataFrame, root: String,
       batchId: Long): Unit = {
-    // repartition first: one-file micro-batches otherwise single-task
-    // the basket build's partial collect_set over the whole batch
-    // (see cmsBatch); the pair explode itself already runs post-
-    // exchange in parallel.
-    batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
+    // spread first: one-file micro-batches otherwise single-task the
+    // basket build's partial collect_set over the whole batch; the
+    // pair explode itself already runs post-exchange in parallel.
+    spread(batch)
       .groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("its"))
       .select(explode(expr(
@@ -1159,7 +978,7 @@ object StreamQueries {
         .as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("c"))
-      .write.mode("overwrite").parquet(s"$root/pairs/batch=$batchId")
+      .write.mode("overwrite").parquet(batchDir(root, "pairs", batchId))
   }
 
   val entries: Map[String, (Q, String)] = Map(
@@ -1194,8 +1013,8 @@ object StreamQueries {
     // (doc_id % 4 = 3) streams in as four files / four micro-batches
     // (maxFilesPerTrigger=1); each micro-batch anti-joins the persisted
     // corpus digest index (never rescanning the accumulated corpus) and
-    // appends its stream-first-seen digests to the acceptance index,
-    // idempotently per batch id. The gate answer aggregates the
+    // appends its stream-first-seen digests to the acceptance index.
+    // The gate answer aggregates the
     // per-batch observation log, which is micro-batch-split independent
     // — the oracle is the BATCH-equivalent incremental dedup (same SQL
     // as q_dedup_incremental). Exactly-once acceptance across restarts
@@ -1231,10 +1050,9 @@ object StreamQueries {
     // under continuous ingest: new embedding vectors (vec_id % 4 = 3)
     // stream in as four micro-batches; each batch is bucketed once
     // with the deterministic plane set, its buckets land in a
-    // batch-id-keyed index dir (idempotent overwrite — the
-    // exactly-once protocol of q_stream_dedup_inc; replay case in
-    // StreamAnnSpec) and its candidates against the persisted base
-    // bucket index land in a batch-id-keyed observation log. The gate
+    // batch-id-keyed index dir (replay case in StreamAnnSpec) and its
+    // candidates against the persisted base bucket index land in a
+    // batch-id-keyed observation log. The gate
     // answer exact-re-ranks the union of per-batch candidates — which
     // is micro-batch-split independent (bucket equi-joins are per-row
     // independent) and equals the batch-mode q_embed_ann_inc
@@ -1265,9 +1083,8 @@ object StreamQueries {
     // Streaming materialized-view maintenance — q_agg_incremental's
     // protocol under continuous ingest: the delta (o_orderkey % 7 = 0
     // appends) streams in as four micro-batches; each batch's
-    // per-customer aggregate lands in a batch-id-keyed delta dir
-    // (idempotent overwrite, same exactly-once protocol as
-    // q_stream_dedup_inc), and the view resolves as base-MV ∪ deltas
+    // per-customer aggregate lands in a batch-id-keyed delta dir,
+    // and the view resolves as base-MV ∪ deltas
     // folded with one distributive re-aggregation. The base is touched
     // only through its persisted scan; per-batch work is
     // delta-batch-sized at any base scale. Oracle: the direct
@@ -1297,9 +1114,8 @@ object StreamQueries {
     // Streaming CDC compaction — q_cdc_apply under continuous ingest:
     // the change log streams in as micro-batches; each batch compacts
     // to one latest-version row per entity + its churn count in a
-    // batch-id-keyed delta dir (idempotent overwrite — the
-    // q_stream_dedup_inc exactly-once protocol; restart/replay cases
-    // in StreamCdcSpec), and the snapshot resolves as one
+    // batch-id-keyed delta dir (restart/replay cases in
+    // StreamCdcSpec), and the snapshot resolves as one
     // entity-keyed fold over the per-batch compactions (latest by
     // (us, event_id), churn summed — both associative, so the result
     // is micro-batch-split independent and equals the batch replay
@@ -1374,8 +1190,7 @@ object StreamQueries {
     // q_zonemap_prune builds in batch, maintained per micro-batch):
     // each event micro-batch commits its rows to a batch-id-keyed
     // data dir AND its min/max/count stats to a batch-id-keyed
-    // manifest entry (both idempotent overwrites — the exactly-once
-    // protocol), so the skipping index is always current without a
+    // manifest entry, so the skipping index is always current without a
     // rebuild pass. The replayed log is TIME-ORDERED (a real stream's
     // arrival order; tsorted dump variant), so batch time ranges are
     // disjoint and a time-slice query consults the manifest
@@ -1398,7 +1213,7 @@ object StreamQueries {
         val selected = manifest
           .filter(r => r.getAs[Long]("us_max") >= lo &&
             r.getAs[Long]("us_min") < hi)
-          .map(r => s"$root/data/batch=${r.getAs[Long]("batch")}")
+          .map(r => batchDir(root, "data", r.getAs[Long]("batch")))
           .toSeq.sorted
         s.read.parquet(selected: _*)
           .filter(col("us") >= lo && col("us") < hi)
@@ -1422,8 +1237,7 @@ object StreamQueries {
     // continuous ingest (the mining member of the incremental
     // family): each micro-batch of complete BASKETS explodes to pairs
     // map-side and lands a per-batch pair-count partial in a
-    // batch-id-keyed dir (idempotent overwrite — the exactly-once
-    // protocol); the report is one counts-sum fold over the partials
+    // batch-id-keyed dir; the report is one counts-sum fold over the partials
     // — associative, so any basket-preserving split reproduces the
     // batch answer against the batch gate's own oracle derivation.
     // The ingest is basket-keyed (the dump partitions on l_orderkey —
@@ -1457,101 +1271,64 @@ object StreamQueries {
         |GROUP BY 1, 2 HAVING count(*) >= 2
         |ORDER BY a, b""".stripMargin)),
 
-    // Streaming quantile maintenance — the percentile rollup
-    // (q_agg_quantile_rollup) under continuous ingest: each event
-    // micro-batch folds to a (day, cents) count histogram in a
-    // batch-id-keyed dir (idempotent overwrite — the exactly-once
-    // protocol of q_stream_dedup_inc; restart/replay and
-    // split-independence in StreamQuantileSpec), and the weekly
-    // report is LITERALLY the batch rollup's plan
-    // (ExtraQueries.quantileRollupPlan) over the union of per-batch
-    // partials — histogram merge is a counts sum, so any micro-batch
-    // split reproduces the batch answer exactly, against the very
-    // same oracle. At 100 TB each batch's state through its exchange
-    // is the batch's value-domain size, the report never re-reads the
-    // event log, and per-batch dirs compact at the next full sync
-    // (the q_index_compact posture).
+    // Streaming quantile maintenance: q_agg_quantile_rollup's (day,
+    // cents) count histogram folded per micro-batch, and the weekly
+    // report is LITERALLY the batch rollup's plan over the folded
+    // partials (histogram merge is a counts sum), against the same
+    // oracle. Restart/replay and split independence: StreamQuantileSpec.
     "q_stream_quantile" -> ((
-      (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "squant")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(
-          quantileHistBatch(_, root, _))
-        ExtraQueries.quantileRollupPlan(s.read.parquet(s"$root/hist"))
-      },
+      (s: SparkSession, d: String) =>
+        ExtraQueries.quantileRollupPlan(foldStream(
+          fileStream(s, eventsDump(s, d)), d, "squant", "hist")(
+          ExtraQueries.quantileHist)),
       ExtraQueries.QuantileRollupOracle)),
 
-    // Streaming KLL quantile maintenance — q_agg_kll_rollup under
-    // continuous ingest (and the unbounded-domain twin of
-    // q_stream_quantile): each event micro-batch folds to per-day KLL
-    // binaries in a batch-id-keyed dir (idempotent overwrite —
-    // exactly-once under foreachBatch replay), the weekly estimates
-    // fold the per-batch partials alone through the SAME report plan
-    // as the batch gate (kllRollupReport), and the same rank-audit
-    // pass turns them into hashable guarantee booleans — valid under
-    // any micro-batch split because KLL merge is associative and the
-    // bound is worst-case over every merge tree. At 100 TB each
-    // batch's state through its exchange is k·log(batch/k) values per
-    // day, the report never re-reads the log, and per-batch dirs
-    // compact at the next full sync (the q_index_compact posture).
+    // Streaming KLL quantile maintenance, the unbounded-domain twin of
+    // q_stream_quantile: q_agg_kll_rollup's per-day KLL partials folded
+    // per micro-batch, the weekly estimates from the SAME report plan
+    // (kllRollupReport) and the same rank audit — its booleans hold
+    // under any split because KLL merge is associative and the bound is
+    // worst-case over every merge tree.
     "q_stream_kll" -> ((
       (s: SparkSession, d: String) => {
-        graft.functions.KllSketch.register(s)
-        val root = freshRoot(d, "skll")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(kllBatch(_, root, _))
+        val daily = foldStream(fileStream(s, eventsDump(s, d)), d, "skll",
+          "kll")(ExtraQueries.kllDaily)
         ExtraQueries.kllAudit(
-          ExtraQueries.kllEventView(s, d),
-          ExtraQueries.kllRollupReport(s.read.parquet(s"$root/kll")))
+          ExtraQueries.eventCents(graft.Tables.events(s, d)),
+          ExtraQueries.kllRollupReport(daily))
       },
       ExtraQueries.KllRollupOracle)),
 
-    // Streaming seasonal-baseline maintenance — q_time_seasonal under
-    // continuous ingest: per-batch per-(type, day) integer-cent total
-    // partials (sum-mergeable) land batch-id-keyed; the report SUMs
-    // them into the daily relation and runs the SAME seasonalReport,
-    // so baselines/residuals are bit-identical to the batch gate under
-    // any split. At 100 TB per-batch exchanges are batch-sized and the
-    // report reads only (types × days × batches) partial rows.
+    // Streaming seasonal-baseline maintenance: q_time_seasonal's
+    // per-(type, day) cent totals folded per micro-batch, SUMmed into
+    // the daily relation and run through the SAME seasonalReport, so
+    // baselines/residuals are bit-identical to the batch gate.
     "q_stream_seasonal" -> ((
-      (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "sseas")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(
-          seasonalBatch(_, root, _))
-        ExtraQueries.seasonalReport(
-          s.read.parquet(s"$root/daily")
-            .groupBy("event_type", "day")
-            .agg(sum("total_e2").as("total_e2"))
-            .localCheckpoint())
-      },
+      (s: SparkSession, d: String) =>
+        ExtraQueries.seasonalReport(foldStream(
+          fileStream(s, eventsDump(s, d)), d, "sseas", "daily")(
+          ExtraQueries.seasonalDaily)
+          .groupBy("event_type", "day")
+          .agg(sum("total_e2").as("total_e2"))
+          .localCheckpoint()),
       ExtraQueries.SeasonalOracle)),
 
-    // Streaming point-frequency maintenance — q_agg_cms_rollup under
-    // continuous ingest: per-batch d×w CMS partials land in
-    // batch-id-keyed dirs (exactly-once overwrite) and the report is
-    // a SUM over them — CMS linearity makes the folded sketch
-    // bit-exactly the batch gate's under any micro-batch split. Same
-    // probe audit, same oracle. At 100 TB each batch's exchange
-    // carries ≤ d·w counters per partition and the report reads only
-    // (d·w × batches) partial rows.
     // Streaming PII census — the release-card redaction counters
     // (q_text_pii_scrub) maintained under continuous ingest: per-batch
-    // per-source integer partials (pure sums) land batch-id-keyed and
-    // the report folds partials only — the corpus is never re-scanned
-    // (plan-gated). Shares piiSpans/piiCensus AND the oracle with the
-    // batch gate, so the streamed fold must equal the batch census
-    // exactly under any split.
+    // per-source integer partials (pure sums, the batch gate's
+    // piiSpans/piiCensus) fold to the census; the corpus is never
+    // re-scanned (plan-gated). Shares the oracle with the batch gate.
     "q_stream_pii" -> ((
-      (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "spii")
-        runBatches(fileStream(s, docsDump(s, d)), root)(piiBatch(_, root, _))
-        s.read.parquet(s"$root/pii")
+      (s: SparkSession, d: String) =>
+        foldStream(fileStream(s, docsDump(s, d)), d, "spii", "pii")(
+          b => TextQueries.piiCensus(TextQueries.piiSpans(spread(b))))
           .groupBy("source")
           .agg(sum("n_docs").as("n_docs"),
             sum("docs_flagged").as("docs_flagged"),
             sum("n_emails").as("n_emails"),
             sum("n_digit_runs").as("n_digit_runs"),
             sum("chars_redacted").as("chars_redacted"))
-          .orderBy("source")
-      },
+          .orderBy("source"),
       TextQueries.PiiOracle)),
 
     // Streaming skew census — the join-strategy diagnostic
@@ -1575,9 +1352,8 @@ object StreamQueries {
     // cardinality while the MG path stays <=64 rows/batch forever.
     "q_stream_skew" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "sskew")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(skewBatch(_, root, _))
-        val folded = s.read.parquet(s"$root/skew")
+        val folded = foldStream(fileStream(s, eventsDump(s, d)), d,
+          "sskew", "skew")(skewPartial)
           .groupBy("key", "k").agg(sum("f").as("f"))
         Seq("event_type", "user_id").map { lbl =>
           ExtraQueries.skewCensusFromFreq(
@@ -1624,10 +1400,8 @@ object StreamQueries {
     "q_stream_skew_sketch" -> ((
       (s: SparkSession, d: String) => {
         graft.functions.TopKSketch.register(s)
-        val root = freshRoot(d, "sskewsk")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(
-          skewSketchBatch(_, root, _))
-        val folded = s.read.parquet(s"$root/mg")
+        val folded = foldStream(fileStream(s, eventsDump(s, d)), d,
+          "sskewsk", "mg")(skewSketchPartial)
           .groupBy("key")
           .agg(expr("mg_merge(summary, 64, 1)").as("top"),
             sum("n").as("n_rows"))
@@ -1637,12 +1411,7 @@ object StreamQueries {
             expr("try_element_at(top, 1).item").as("cand"))
         // Exact AUDIT side (the only log read in the returned plan):
         // per-axis max frequency and the candidate's exact count.
-        val freq = graft.Tables.events(s, d)
-          .select(lit("user_id").as("key"),
-            col("user_id").cast("string").as("k"))
-          .unionByName(graft.Tables.events(s, d)
-            .select(lit("event_type").as("key"),
-              col("event_type").as("k")))
+        val freq = skewKeys(graft.Tables.events(s, d))
           .groupBy("key", "k").agg(count(lit(1)).as("f"))
         freq.join(broadcast(folded), "key")
           .groupBy("key", "n_rows", "est_f", "cand")
@@ -1666,23 +1435,21 @@ object StreamQueries {
     // Streaming mixture monitor — the recipe-drift census a
     // continuously-ingesting pretraining pipeline watches (is the
     // arriving data still the mixture the data card promised?):
-    // per-batch per-source doc/token counts fold by SUM into the
-    // accumulated mixture, and the share arithmetic (e4 integer
-    // units) runs on the source-domain fold — the corpus stream is
-    // never re-scanned (plan-gated).
+    // q_mix_epochs' per-source doc/token census folded by SUM, and the
+    // share arithmetic (e4 integer units) runs on the source-domain
+    // fold — the corpus stream is never re-scanned (plan-gated).
     "q_stream_mix" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "smix")
-        runBatches(fileStream(s, docsDump(s, d)), root)(mixBatch(_, root, _))
         // ONE plan (r19, the q_mix_epochs lesson): the total rides a
         // whole-relation window over the source-domain fold instead of
         // a checkpoint + one-row agg + broadcast crossJoin — three
         // driver round-trips of job overhead on domain-sized rows.
         val w = Window.partitionBy(lit(1))
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        s.read.parquet(s"$root/mix")
+        foldStream(fileStream(s, docsDump(s, d)), d, "smix", "mix")(
+          ExtraQueries.mixCounts)
           .groupBy("source")
-          .agg(sum("n_docs").as("n_docs"), sum("toks").as("toks"))
+          .agg(sum("n_docs").as("n_docs"), sum("avail").as("toks"))
           .withColumn("total", sum("toks").over(w))
           .select(col("source"), col("n_docs"), col("toks"),
             expr("toks * 10000 div total").as("share_e4"))
@@ -1789,16 +1556,15 @@ object StreamQueries {
     // streaming twin of q_sample_stratified (FineWeb-style capping: a
     // live corpus feed must hold "at most N per stratum by hash rank"
     // as data arrives, and a later batch can displace an earlier
-    // keep). Per-batch top-50 candidate partials (lossless mergeable
-    // fold — see capBatch), report re-ranks the bounded candidate
-    // union; the doc stream is never re-scanned (plan-gated) and the
-    // served quota equals the batch gate's (shared QuotaOracle).
+    // keep). Per-batch top-50 candidate partials (capPartial), the
+    // report re-ranks the bounded candidate union; the doc stream is
+    // never re-scanned (plan-gated) and the served quota equals the
+    // batch gate's (shared QuotaOracle).
     "q_stream_cap" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "scap")
-        runBatches(fileStream(s, docsDump(s, d)), root)(capBatch(_, root, _))
         val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
-        s.read.parquet(s"$root/cap")
+        foldStream(fileStream(s, docsDump(s, d)), d, "scap", "cap")(
+          capPartial)
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 50)
           .select("doc_id", "lang", "rank")
@@ -1842,9 +1608,6 @@ object StreamQueries {
     // audited output shape and oracle as q_profile_approx.
     "q_stream_profile" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "sprof")
-        runBatches(fileStream(s, sharedLineitemDump(s, d)), root)(
-          profileBatch(_, root, _))
         val folds = ExtraQueries.ProfileNumCols.map(_._1)
           .flatMap { nm => Seq(
             sum(col(s"nn_$nm")).as(s"nn_$nm"),
@@ -1857,7 +1620,8 @@ object StreamQueries {
             expr(s"hll_sketch_estimate(hll_union_agg(sk_$nm))")
               .as(s"nd_$nm"))
           } :+ sum(col("n_rows")).as("n_rows")
-        val one = s.read.parquet(s"$root/prof")
+        val one = foldStream(fileStream(s, sharedLineitemDump(s, d)), d,
+          "sprof", "prof")(profilePartial)
           .agg(folds.head, folds.tail: _*)
         ExtraQueries.profileAudited(s, d,
           ExtraQueries.profileExplode(one)
@@ -1876,9 +1640,8 @@ object StreamQueries {
       (s: SparkSession, d: String) => {
         val srcDir = streamDump(d, "emb", "embeddings")(
           graft.Tables.t(s, d, "embeddings"))
-        val root = freshRoot(d, "sembdrift")
-        runBatches(fileStream(s, srcDir), root)(embDriftBatch(_, root, _))
-        VectorQueries.embDriftReport(s.read.parquet(s"$root/grid")
+        VectorQueries.embDriftReport(foldStream(fileStream(s, srcDir), d,
+            "sembdrift", "grid")(b => VectorQueries.embDriftGrid(spread(b)))
           .groupBy("label", "dim")
           .agg(sum("sr").as("sr"), sum("nr").as("nr"),
             sum("sc").as("sc"), sum("nc").as("nc")))
@@ -1893,53 +1656,43 @@ object StreamQueries {
     // as in the batch gate. The report touches only the accumulated
     // group domain — the doc stream is never re-scanned (plan-gated).
     "q_stream_url" -> ((
-      (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "surl")
-        runBatches(fileStream(s, docsDump(s, d)), root)(urlBatch(_, root, _))
-        s.read.parquet(s"$root/url")
+      (s: SparkSession, d: String) =>
+        foldStream(fileStream(s, docsDump(s, d)), d, "surl", "url")(
+          urlPartial)
           .groupBy("curl", "url")
           .agg(min("min_doc").as("min_doc"), sum("n").as("n"))
           .groupBy(col("curl").as("canonical_url"))
           .agg(min("min_doc").as("keeper_id"),
             sum("n").as("n_docs"),
             count(lit(1)).as("n_raw_variants"))
-          .orderBy("canonical_url")
-      },
+          .orderBy("canonical_url"),
       TextQueries.UrlOracle)),
 
     // Streaming filter-cascade ledger — q_filter_cascade under
-    // continuous ingest: each batch lands a ONE-ROW (n, d1, d2, d3)
-    // first-fail partial; the report folds them by SUM and explodes
-    // the same four funnel rows (shared cascadeFunnel + CascadeOracle
-    // with the batch gate). The cheapest possible streaming state: the
-    // accumulated ledger is four integers per batch, and the corpus is
+    // continuous ingest: each batch lands the batch gate's ONE-ROW
+    // (n, d1, d2, d3) first-fail ledger (cascadeLedger); the report
+    // folds them by SUM and explodes the same four funnel rows. The
+    // accumulated state is four integers per batch, and the corpus is
     // never re-scanned by the report (plan-gated).
     "q_stream_cascade" -> ((
-      (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "scascade")
-        runBatches(fileStream(s, docsDump(s, d)), root)(
-          cascadeBatch(_, root, _))
-        TextQueries.cascadeFunnel(s.read.parquet(s"$root/cascade")
+      (s: SparkSession, d: String) =>
+        TextQueries.cascadeFunnel(foldStream(fileStream(s, docsDump(s, d)),
+          d, "scascade", "cascade")(b => TextQueries.cascadeLedger(spread(b)))
           .agg(sum("n").as("n"), sum("d1").as("d1"),
-            sum("d2").as("d2"), sum("d3").as("d3")))
-      },
+            sum("d2").as("d2"), sum("d3").as("d3"))),
       TextQueries.CascadeOracle)),
 
     // Streaming drift monitor — q_drift_psi under continuous ingest:
-    // per-batch (event_type, day, bin) histogram partials land
-    // batch-id-keyed (exactly-once overwrite); the report SUMs them
-    // into the domain-sized bin relation, derives the min-day anchor
-    // there (a batch can't know the global anchor), splits ref/cur
-    // windows, and runs the SAME psiReport as the batch gate — PSI
-    // bit-identical under any micro-batch split. At 100 TB each
-    // batch's exchange carries (types × days × bins) integer rows and
-    // the log is never re-scanned by the report (plan-gated).
+    // per-batch (event_type, day, bin) histogram partials (driftPartial)
+    // SUM into the domain-sized bin relation; the report derives the
+    // min-day anchor there (a batch can't know the global anchor),
+    // splits ref/cur windows, and runs the SAME psiReport as the batch
+    // gate — PSI bit-identical under any micro-batch split, and the log
+    // is never re-scanned by the report (plan-gated).
     "q_stream_drift" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "sdrift")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(
-          driftBatch(_, root, _))
-        val f = s.read.parquet(s"$root/drift")
+        val f = foldStream(fileStream(s, eventsDump(s, d)), d, "sdrift",
+          "drift")(driftPartial)
           .groupBy("event_type", "day", "bin").agg(sum("cnt").as("cnt"))
         val md = f.agg(min("day")).head().getLong(0)
         val bc = f.groupBy("event_type", "bin")
@@ -1952,30 +1705,20 @@ object StreamQueries {
       ExtraQueries.DriftOracle)),
 
     // Streaming DSIR estimator maintenance — the importance-resampling
-    // weight table (q_quality_dsir's 256-bucket sufficient statistics)
-    // refreshed incrementally as the crawl streams in: per-batch
-    // (bucket, target-count, raw-count) partials land in batch-id-keyed
-    // dirs; the report folds them by SUM (exact — counts are linear)
-    // and derives the add-one-smoothed log-ratio weights ON the folded
+    // weight table (q_quality_dsir's 256-bucket sufficient statistics,
+    // dsirBuckets) refreshed as the crawl streams in: the report folds
+    // the per-batch partials by SUM (exact — counts are linear) and
+    // derives the same add-one-smoothed log-ratio weights ON the folded
     // ≤256-row relation. Scoring stays a later map-only pass against
-    // this table (the batch gate), so a 100 TB stream maintains the
-    // estimator at 256-rows-per-batch exchange cost and the corpus is
-    // never re-scanned by the report (plan-gated).
+    // this table (the batch gate), and the corpus is never re-scanned
+    // by the report (plan-gated).
     "q_stream_dsir" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "sdsir")
-        runBatches(fileStream(s, docsDump(s, d)), root)(dsirBatch(_, root, _))
-        val bc = s.read.parquet(s"$root/dsir")
+        val bc = foldStream(fileStream(s, docsDump(s, d)), d, "sdsir",
+          "dsir")(b => TextQueries.dsirBuckets(TextQueries.dsirTokens(spread(b))))
           .groupBy("bkt").agg(sum("ct").as("ct"), sum("cr").as("cr"))
-        val n = bc.agg(sum("ct"), sum("cr")).head()
-        val (nt, nr) = (n.getLong(0), n.getLong(1))
-        bc.select(col("bkt"), col("ct"), col("cr"), expr(
-          s"""CAST(round(
-             |  (ln((CAST(ct AS DOUBLE) + 1.0)
-             |      / (CAST(${nt}L AS DOUBLE) + 256.0))
-             |   - ln((CAST(cr AS DOUBLE) + 1.0)
-             |        / (CAST(${nr}L AS DOUBLE) + 256.0)))
-             |  * 1000000.0) AS BIGINT)""".stripMargin).as("w_e6"))
+        bc.select(col("bkt"), col("ct"), col("cr"),
+          TextQueries.dsirWeight(bc).as("w_e6"))
           .orderBy("bkt")
       },
       """WITH tok AS (
@@ -1997,61 +1740,44 @@ object StreamQueries {
         |    * 1000000.0) AS BIGINT) AS w_e6
         |FROM bc, n ORDER BY bkt""".stripMargin)),
 
+    // Streaming point-frequency maintenance — q_agg_cms_rollup under
+    // continuous ingest: per-batch d×w CMS partials (cmsPartial) and a
+    // report that SUMs them — CMS linearity makes the folded sketch
+    // bit-exactly the batch gate's. Same probe audit, same oracle.
     "q_stream_cms" -> ((
-      (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "scms")
-        runBatches(fileStream(s, docsDump(s, d)), root)(cmsBatch(_, root, _))
-        ExtraQueries.cmsAudit(s, d, s.read.parquet(s"$root/cms")
-          .groupBy("dep", "bkt").agg(sum("cnt").as("cnt")))
-      },
+      (s: SparkSession, d: String) =>
+        ExtraQueries.cmsAudit(s, d, foldStream(fileStream(s, docsDump(s, d)),
+          d, "scms", "cms")(cmsPartial)
+          .groupBy("dep", "bkt").agg(sum("cnt").as("cnt"))),
       ExtraQueries.CmsOracle)),
 
     // Streaming exact-distinct maintenance — q_agg_bitmap_rollup under
-    // continuous ingest, completing the streaming twin of the EXACT
-    // member of the rollup family (the sketch members all have theirs:
-    // q_stream_kll/theta/topk/quantile). Per-batch per-day Roaring64
-    // partials land in batch-id-keyed dirs (exactly-once overwrite);
-    // the report ORs within day first, then folds the weekly census —
-    // OR is associative and IDEMPOTENT, so the result is bit-exactly
-    // the batch gate's under any split or replay. At 100 TB each
-    // batch's exchange carries batch-cardinality-sized bitmaps and the
-    // report reads only the (days × batches) partial relation — the
-    // log is never re-scanned (plan-gated).
+    // continuous ingest: its per-day Roaring64 partials folded per
+    // micro-batch; the report ORs within day first, then runs the same
+    // weekly census (bitmapWeekly) — OR is associative and IDEMPOTENT,
+    // so the result is bit-exactly the batch gate's under any split or
+    // replay, and the log is never re-scanned (plan-gated).
     "q_stream_bitmap" -> ((
       (s: SparkSession, d: String) => {
         graft.functions.BitmapFunctions.register(s)
-        val root = freshRoot(d, "sbm")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(
-          bitmapBatch(_, root, _))
-        s.read.parquet(s"$root/bm")
-          .groupBy("day").agg(expr("bm_union(users_bm)").as("users_bm"))
-          .withColumn("week", expr("day div 7"))
-          .groupBy("week")
-          .agg(count(lit(1)).as("n_days"),
-            sum(expr("bm_card(users_bm)")).as("day_card_sum"),
-            expr("bm_card(bm_union(users_bm))").as("exact_users"))
-          .orderBy("week")
+        ExtraQueries.bitmapWeekly(foldStream(
+          fileStream(s, eventsDump(s, d)), d, "sbm", "bm")(
+          ExtraQueries.bitmapDaily)
+          .groupBy("day").agg(expr("bm_union(users_bm)").as("users_bm")))
       },
       ExtraQueries.BitmapRollupOracle)),
 
     // Streaming theta/KMV segment overlap — q_agg_theta_overlap under
-    // continuous ingest, completing the streaming sketch matrix
-    // (dedup, heavy hitters, quantiles bounded + unbounded, and now
-    // set intersections): per-batch per-segment k-min arrays land in
-    // batch-id-keyed dirs (exactly-once overwrite), and the report
-    // re-folds the UNION of per-batch mins through the same thetaKmv —
-    // mergeable as a pure set function, so the folded summary (and
-    // every estimate) is IDENTICAL to the batch gate's, under any
-    // micro-batch split. Same exact-audit booleans, same oracle. At
-    // 100 TB each batch's exchange carries ≤ k·partitions hashes per
-    // segment and the report touches only k·batches-sized partials.
+    // continuous ingest: its per-segment k-min partial (thetaPartial)
+    // per micro-batch, and the report re-folds the UNION of per-batch
+    // mins through the same thetaKmv — a pure set function, so the
+    // folded summary (and every estimate) is IDENTICAL to the batch
+    // gate's under any split. Same exact-audit booleans, same oracle.
     "q_stream_theta" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "stheta")
-        runBatches(fileStream(s, eventsDump(s, d)), root)(
-          thetaBatch(_, root, _))
         val merged = ExtraQueries.thetaKmv(
-          s.read.parquet(s"$root/kmv")
+          foldStream(fileStream(s, eventsDump(s, d)), d, "stheta", "kmv")(
+            ExtraQueries.thetaPartial)
             .select(col("event_type"), explode(col("mins")).as("h"))
             .distinct(),
           ExtraQueries.ThetaK)
@@ -2060,30 +1786,21 @@ object StreamQueries {
       ExtraQueries.ThetaOverlapOracle)),
 
     // Streaming heavy hitters — the sketch family (q_topk_sketch)
-    // under continuous ingest: the corpus streams in as four
-    // micro-batches; each batch folds to one <=k Misra-Gries summary
-    // in a batch-id-keyed dir (idempotent overwrite — the exactly-once
-    // protocol of q_stream_dedup_inc), and the union of summary items
+    // under continuous ingest: each micro-batch folds to one <=k
+    // Misra-Gries summary (topkPartial), and the union of summary items
     // is a guaranteed-complete candidate set for any frequency above
-    // N/(k+1), under ANY micro-batch split (mergeable-summaries
-    // property; see topkSketchBatch). The gate answer exact-counts
-    // only the candidates — broadcast In-list pruning map-side — and
-    // keeps tokens clearing N/200 exactly: deterministic output from a
+    // N/(k+1) under ANY split. The gate answer exact-counts only the
+    // candidates — broadcast In-list pruning map-side — and keeps
+    // tokens clearing N/200 exactly: deterministic output from a
     // probabilistically-sized sketch, oracled by a direct DuckDB
-    // wordcount. At 100 TB the per-batch state through every exchange
-    // is k counters, and the final pass is the same two-pass protocol
-    // a batch deployment runs — both kernels are the q_topk_sketch
-    // passes, whose plan shapes PlanQualitySpec already pins; the
-    // stream-specific properties (restart/replay exactly-once, split
-    // independence, bounded summaries) are pinned in StreamTopkSpec.
+    // wordcount. Restart/replay, split independence and bounded
+    // summaries are pinned in StreamTopkSpec.
     "q_stream_topk" -> ((
       (s: SparkSession, d: String) => {
-        val root = freshRoot(d, "stopk")
-        runBatches(fileStream(s, docsDump(s, d)), root)(
-          topkSketchBatch(_, root, _))
-        val sk = s.read.parquet(s"$root/sketch")
+        val sk = foldStream(fileStream(s, docsDump(s, d)), d, "stopk",
+          "sketch")(topkPartial)
         // One token count per batch (repeated on every summary row;
-        // present even for an empty summary — see topkSketchBatch).
+        // present even for an empty summary — see topkPartial).
         val total = sk.groupBy("batch").agg(first("n").as("n"))
           .agg(sum("n")).head().getLong(0)
         val cand = sk.select("item").filter(col("item").isNotNull)

@@ -890,6 +890,25 @@ object TextQueries {
       when(cq === "", lit("")).otherwise(concat(lit("?"), cq)))
   }
 
+  /** The one-row (n, d1, d2, d3) first-fail ledger of a document
+    * relation — q_filter_cascade's aggregate and q_stream_cascade's
+    * per-batch partial: three row-local integer signals (token count,
+    * distinct-token and stopword ratios in e4 units) feed first-fail
+    * attribution via conditional sums. Every column is a SUM. */
+  private[graft] def cascadeLedger(docs: DataFrame): DataFrame =
+    docs.select(split(col("text"), " ").as("ts"))
+      .select(size(col("ts")).cast("long").as("tok_n"),
+        expr("size(array_distinct(ts)) * 10000L div size(ts)")
+          .as("uniq_e4"),
+        expr("size(filter(ts, x -> x IN ('the', 'a'))) * 10000L" +
+          " div size(ts)").as("stop_e4"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("tok_n") < 30, 1L).otherwise(0L)).as("d1"),
+        sum(when(col("tok_n") >= 30 && col("uniq_e4") < 4000, 1L)
+          .otherwise(0L)).as("d2"),
+        sum(when(col("tok_n") >= 30 && col("uniq_e4") >= 4000 &&
+          col("stop_e4") > 1500, 1L).otherwise(0L)).as("d3"))
+
   /** Funnel rows from the one-row (n, d1, d2, d3) first-fail ledger —
     * shared by q_filter_cascade and its streaming twin (the twin folds
     * per-batch one-row partials by SUM first). */
@@ -939,6 +958,37 @@ object TextQueries {
       |UNION ALL SELECT 4, 'kept', n - d1 - d2 - d3,
       |  CAST(0 AS BIGINT) FROM a
       |ORDER BY stage""".stripMargin
+
+  /** DSIR's token rows: (doc_id, source, bkt), bkt = the first two hex
+    * chars of sha256(token), so both engines bucket byte-identically. */
+  private[graft] def dsirTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+        explode(split(col("text"), " ")).as("tok"))
+      .select(col("doc_id"), col("source"),
+        substring(sha2(col("tok"), 256), 1, 2).as("bkt"))
+
+  /** The DSIR estimator's sufficient statistics, q_quality_dsir's first
+    * pass and q_stream_dsir's per-batch partial: per bucket the target
+    * (src0) and raw token counts, ≤256 rows, exact sums. */
+  private[graft] def dsirBuckets(tok: DataFrame): DataFrame =
+    tok.groupBy("bkt")
+      .agg(sum(when(col("source") === "src0", 1L).otherwise(0L)).as("ct"),
+        count(lit(1)).as("cr"))
+
+  /** The add-one-smoothed log-ratio weight in integer 1e-6 units over
+    * a (bkt, ct, cr) relation; its (nt, nr) totals are one driver read
+    * of that relation. */
+  private[graft] def dsirWeight(bc: DataFrame): Column = {
+    val n = bc.agg(sum("ct"), sum("cr")).head()
+    val (nt, nr) = (n.getLong(0), n.getLong(1))
+    expr(
+      s"""CAST(round(
+         |  (ln((CAST(ct AS DOUBLE) + 1.0)
+         |      / (CAST(${nt}L AS DOUBLE) + 256.0))
+         |   - ln((CAST(cr AS DOUBLE) + 1.0)
+         |        / (CAST(${nr}L AS DOUBLE) + 256.0)))
+         |  * 1000000.0) AS BIGINT)""".stripMargin)
+  }
 
   /** Shared oracle of q_text_pii_scrub and q_stream_pii (the streamed
     * partial fold must equal the batch census exactly). */
@@ -1113,23 +1163,8 @@ object TextQueries {
     // axis; this gate owns the cascade ACCOUNTING — the kept/dropped
     // ledger that makes a cleaning run auditable.)
     "q_filter_cascade" -> ((
-      (s: SparkSession, d: String) => {
-        val sig = t(s, d, "documents")
-          .select(split(col("text"), " ").as("ts"))
-          .select(size(col("ts")).cast("long").as("tok_n"),
-            expr("size(array_distinct(ts)) * 10000L div size(ts)")
-              .as("uniq_e4"),
-            expr("size(filter(ts, x -> x IN ('the', 'a'))) * 10000L" +
-              " div size(ts)").as("stop_e4"))
-        val a = sig.agg(
-          count(lit(1)).as("n"),
-          sum(when(col("tok_n") < 30, 1L).otherwise(0L)).as("d1"),
-          sum(when(col("tok_n") >= 30 && col("uniq_e4") < 4000, 1L)
-            .otherwise(0L)).as("d2"),
-          sum(when(col("tok_n") >= 30 && col("uniq_e4") >= 4000 &&
-            col("stop_e4") > 1500, 1L).otherwise(0L)).as("d3"))
-        cascadeFunnel(a)
-      },
+      (s: SparkSession, d: String) =>
+        cascadeFunnel(cascadeLedger(t(s, d, "documents"))),
       CascadeOracle)),
 
     // BPE tokenizer training — three merge rules learned over the word
@@ -2395,27 +2430,12 @@ object TextQueries {
     // engines bucket identically byte-for-byte.
     "q_quality_dsir" -> ((
       (s: SparkSession, d: String) => {
-        val tok = t(s, d, "documents")
-          .select(col("doc_id"), col("source"),
-            explode(split(col("text"), " ")).as("tok"))
-          .select(col("doc_id"), col("source"),
-            substring(sha2(col("tok"), 256), 1, 2).as("bkt"))
+        val tok = dsirTokens(t(s, d, "documents"))
         // Checkpoint the 256-row bucket fold ONCE so the (nt, nr)
         // totals head() and the weight derivation share one
         // materialization — two corpus passes at execution, not three.
-        val bc = tok.groupBy("bkt")
-          .agg(sum(when(col("source") === "src0", 1L).otherwise(0L))
-            .as("ct"), count(lit(1)).as("cr"))
-          .localCheckpoint()
-        val n = bc.agg(sum("ct"), sum("cr")).head()
-        val (nt, nr) = (n.getLong(0), n.getLong(1))
-        val w = bc.select(col("bkt"), expr(
-          s"""CAST(round(
-             |  (ln((CAST(ct AS DOUBLE) + 1.0)
-             |      / (CAST(${nt}L AS DOUBLE) + 256.0))
-             |   - ln((CAST(cr AS DOUBLE) + 1.0)
-             |        / (CAST(${nr}L AS DOUBLE) + 256.0)))
-             |  * 1000000.0) AS BIGINT)""".stripMargin).as("w_e6"))
+        val bc = dsirBuckets(tok).localCheckpoint()
+        val w = bc.select(col("bkt"), dsirWeight(bc).as("w_e6"))
         tok.join(broadcast(w), "bkt")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_toks"), sum("w_e6").as("weight_e6"))

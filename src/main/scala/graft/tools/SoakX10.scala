@@ -797,34 +797,17 @@ object SoakX10 {
     // 100 TB that is the blow-up), the approx path a fixed ~5 KB
     // sketch per column per partition.
     if (only.forall(_.contains("q_profile_approx"))) {
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null)
-            shuffleBytes.addAndGet(
-              e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
       def runProfile(exact: Boolean, d: String): (Double, Long) = {
         val w = (1 to 2).map(_ => time(
           graft.queries.ExtraQueries.profilePlan(spark, d, exact)
             .write.mode("overwrite").format("noop").save())).min
-        // Bytes of one (the last) run: reset, run once more.
-        shuffleBytes.set(0L)
-        graft.queries.ExtraQueries.profilePlan(spark, d, exact)
-          .write.mode("overwrite").format("noop").save()
-        // listenerBus.waitUntilEmpty is private[spark]; settle-poll the
-        // counter instead of racing the async task-end events — done
-        // when two consecutive reads agree (no single fixed sleep can
-        // be right on a loaded box).
-        var prev = -1L; var stable = 0
-        while (stable < 2) {
-          Thread.sleep(100)
-          val cur = shuffleBytes.get()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+        // Bytes of one more run, from its run record (taken after the
+        // listener bus has delivered every task-end event).
+        val (_, rec) = graft.streaming.ProgressFeedback.withProgress(spark)() {
+          graft.queries.ExtraQueries.profilePlan(spark, d, exact)
+            .write.mode("overwrite").format("noop").save()
         }
-        (w, shuffleBytes.get())
+        (w, rec.shuffleWriteBytes)
       }
       println("path,base_sec,soak_sec,per_row_ratio,base_shuffle_kb," +
         "soak_shuffle_kb,shuffle_growth")
@@ -836,7 +819,6 @@ object SoakX10 {
           f"${bBytes / 1024},${sBytes / 1024}," +
           f"${sBytes.toDouble / math.max(1L, bBytes)}%.2f")
       }
-      spark.sparkContext.removeSparkListener(listener)
     }
     spark.stop()
   }

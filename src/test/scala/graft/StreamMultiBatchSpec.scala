@@ -105,8 +105,9 @@ class StreamMultiBatchSpec extends SparkSpecBase {
     val root = java.nio.file.Files
       .createTempDirectory("graft_mb_cap").toString
     def docs(ids: Seq[Long]) = ids.map(i => (i, "en")).toDF("doc_id", "lang")
-    graft.queries.StreamQueries.capBatch(docs(0L until 80L), root, 0L)
-    graft.queries.StreamQueries.capBatch(docs(80L until 120L), root, 1L)
+    import graft.queries.StreamQueries.{capPartial, foldBatch}
+    foldBatch(root, "cap")(capPartial)(docs(0L until 80L), 0L)
+    foldBatch(root, "cap")(capPartial)(docs(80L until 120L), 1L)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang").orderBy(col("h"), col("doc_id"))
     val served = s.read.parquet(s"$root/cap")

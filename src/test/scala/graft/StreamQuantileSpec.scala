@@ -10,12 +10,14 @@ import org.apache.spark.sql.functions._
   * compare is the DuckDB oracle's job. */
 class StreamQuantileSpec extends SparkSpecBase {
 
-  import graft.queries.StreamQueries.quantileHistBatch
+  import graft.queries.StreamQueries.foldBatch
+  import graft.queries.ExtraQueries.quantileHist
 
   private def evRows(rows: Seq[(Long, Double)]) = {
     import spark.implicits._
     rows.toDF("us", "value")
-      .select(expr("timestamp_micros(us)").as("ts"), col("value"))
+      .select(lit("view").as("event_type"),
+        expr("timestamp_micros(us)").as("ts"), col("value"))
   }
 
   test("histogram protocol is exactly-once across restart and replay") {
@@ -30,7 +32,7 @@ class StreamQuantileSpec extends SparkSpecBase {
     def runAvailable(): Unit =
       graft.queries.StreamQueries.runBatches(
         graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
-        quantileHistBatch(_, root, _))
+        foldBatch(root, "hist")(quantileHist))
 
     val day0 = 0L
     val day1 = 86400000000L
@@ -53,7 +55,7 @@ class StreamQuantileSpec extends SparkSpecBase {
 
     // A replayed micro-batch (at-least-once foreachBatch) overwrites
     // its own dir instead of double-counting.
-    quantileHistBatch(evRows(Seq((day1, 2.50))), root, 1L)
+    foldBatch(root, "hist")(quantileHist)(evRows(Seq((day1, 2.50))), 1L)
     val after = spark.read.parquet(s"$root/hist")
       .filter(col("batch") === 1)
       .select("day", "cents", "cnt")
@@ -74,7 +76,7 @@ class StreamQuantileSpec extends SparkSpecBase {
     def reportFor(split: Seq[Seq[(Long, Double)]]): Seq[String] = {
       val root = Files.createTempDirectory("graft_squant_split").toString
       split.zipWithIndex.foreach { case (batch, id) =>
-        quantileHistBatch(evRows(batch), root, id.toLong)
+        foldBatch(root, "hist")(quantileHist)(evRows(batch), id.toLong)
       }
       graft.queries.ExtraQueries
         .quantileRollupPlan(spark.read.parquet(s"$root/hist"))

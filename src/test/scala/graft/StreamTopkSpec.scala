@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * the end-to-end value compare is the DuckDB oracle's job). */
 class StreamTopkSpec extends SparkSpecBase {
 
-  import graft.queries.StreamQueries.topkSketchBatch
+  import graft.queries.StreamQueries.{foldBatch, topkPartial}
 
   test("sketch protocol is exactly-once across restart and replay") {
     import spark.implicits._
@@ -25,7 +25,7 @@ class StreamTopkSpec extends SparkSpecBase {
     def runAvailable(): Unit =
       graft.queries.StreamQueries.runBatches(
         graft.queries.StreamQueries.fileStream(spark, srcDir), root)(
-        topkSketchBatch(_, root, _))
+        foldBatch(root, "sketch")(topkPartial))
 
     Seq((1L, "a a a b"), (2L, "b c")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(srcDir)
@@ -52,7 +52,8 @@ class StreamTopkSpec extends SparkSpecBase {
     // pre-replay count first — the overwrite invalidates sk's file
     // listing.)
     val nBefore = sk.count()
-    topkSketchBatch(Seq((3L, "a d d")).toDF("doc_id", "text"), root, 1L)
+    foldBatch(root, "sketch")(topkPartial)(
+      Seq((3L, "a d d")).toDF("doc_id", "text"), 1L)
     val after = spark.read.parquet(s"$root/sketch")
     assert(after.count() == nBefore)
     val b1 = after.filter(col("batch") === 1)
@@ -94,7 +95,7 @@ class StreamTopkSpec extends SparkSpecBase {
     // and with it the N/200 threshold).
     val docs = Seq((1L, (1 to 257).map(i => s"u$i").mkString(" ")))
       .toDF("doc_id", "text")
-    topkSketchBatch(docs, root, 0L)
+    foldBatch(root, "sketch")(topkPartial)(docs, 0L)
     val rows = spark.read.parquet(s"$root/sketch")
       .select("item", "n").collect()
     assert(rows.length == 1, rows.mkString(","))
@@ -109,7 +110,7 @@ class StreamTopkSpec extends SparkSpecBase {
     val docs = (1 to 500)
       .map(i => (i.toLong, (1 to 10).map(j => s"t${i}_$j").mkString(" ")))
       .toDF("doc_id", "text")
-    topkSketchBatch(docs, root, 0L)
+    foldBatch(root, "sketch")(topkPartial)(docs, 0L)
     val n = spark.read.parquet(s"$root/sketch").count()
     assert(n <= 256, s"summary spilled to $n counters")
   }

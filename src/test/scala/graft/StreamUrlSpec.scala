@@ -10,7 +10,11 @@ import org.apache.spark.sql.functions._
   * batch-id-keyed overwrite). */
 class StreamUrlSpec extends SparkSpecBase {
 
-  import graft.queries.StreamQueries.urlBatch
+  import graft.queries.StreamQueries.{foldBatch, urlPartial}
+
+  private def urlBatch(b: org.apache.spark.sql.DataFrame, root: String,
+      batchId: Long): Unit =
+    foldBatch(root, "url")(urlPartial)(b, batchId)
 
   private def docs(ids: Seq[Long]) = {
     import spark.implicits._

@@ -66,14 +66,6 @@ class ThetaSketchSpec extends SparkSpecBase {
     assert(refolded == whole)
   }
 
-  test("q_stream_theta equals the batch gate row-for-row") {
-    val batch = SparkEntry.queries("q_agg_theta_overlap")(spark, dir)
-      .collect().map(_.toString).toSeq
-    val stream = SparkEntry.queries("q_stream_theta")(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(stream == batch)
-  }
-
   test("below k distinct ids the summary IS the set and the estimate exact") {
     import spark.implicits._
     val df = (0L until 100L).map(("s", _)).toDF("seg", "id")
