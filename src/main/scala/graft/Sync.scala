@@ -4,11 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, struct, when}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ingest.Flatten
 import graft.model.{Model, ModelCompiler}
-import graft.sink.{JdbcSink, SnapshotSwap, TableSink}
+import graft.sink.{JdbcSink, SnapshotSwap, SplitParquetFormat, TableSink}
 
 /** Top-level sync façade — the engine's equivalent of the reference's
   * `collect_sql` / `collect_to_file` entry points
@@ -17,136 +17,152 @@ import graft.sink.{JdbcSink, SnapshotSwap, TableSink}
   *
   * One staged plan, two publishers — the reference's two entry points
   * share the same front half and part ways only at the sink. [[stage]]
-  * scans the envelope stream exactly TWICE: once staging the nodes
-  * partitioned by kind, once keying the default edges by endpoint kinds
-  * (P4/P5/P9) and staging them partitioned by kind pair. The kind
-  * tables (flattened with ancestry denormalization, P8) read the node
-  * stage, each its own partition dir; each link table is its pair dir
-  * of the edge stage. Then [[toParquet]] publishes every table — swap
-  * it in behind the staging→prod protocol and register its view
-  * (P12/P14/P16) — and [[toJdbc]] runs chunked JDBC inserts with
-  * tmp_→prod renames (P10) over the same tables.
+  * scans the envelope stream exactly TWICE. Scan 1 writes every kind
+  * table in one job: each node flattened to its kind's table schema
+  * (ancestry denormalized, P8), partitioned by kind, so each kind's
+  * partition dir is that table. Scan 2 keys the default edges by
+  * endpoint kinds (P4/P5/P9) and stages them partitioned by kind pair,
+  * so each pair dir is that link table. Then [[toParquet]] publishes
+  * every table by moving its dir into place — swap it in behind the
+  * staging→prod protocol and register its view (P12/P14/P16) — and
+  * [[toJdbc]] runs chunked JDBC inserts with tmp_→prod renames (P10)
+  * over the same dirs.
+  *
+  * Failure semantics: a kind whose flatten fails — a node's value that
+  * fails its ANSI cast, or a property whose input type cannot become its
+  * declared one — fails the one staging job (or its planning), so no
+  * table publishes and every view keeps serving its previous snapshot:
+  * the reference renames nothing unless every temp table was written
+  * (sql.py:129-159). Once both scans are written, tables publish
+  * independently ([[TableSink.writeAll]]).
   */
 object Sync {
-
-  /** Node envelopes tagged with their kind (`node_kind`): the column the
-    * node stage is partitioned by. */
-  private def nodeRows(envelopes: DataFrame): DataFrame =
-    envelopes.filter(col("type") === "node")
-      .withColumn("node_kind", col("reported.kind"))
-
-  /** Default edges keyed by endpoint kinds against the node rows. */
-  private def keyedEdges(envelopes: DataFrame, nodes: DataFrame): DataFrame =
-    Flatten.keyEdges(envelopes,
-      nodes.select(col("id"), col("node_kind").as("kind")))
-
-  /** Kind tables over node rows tagged `node_kind`. Each reads only
-    * `node_kind = k` rows, which prunes to one partition dir of the node
-    * stage. */
-  private def kindTables(nodes: DataFrame, model: Model)
-      : Map[String, DataFrame] =
-    ModelCompiler.tableKinds(model).map { k =>
-      ModelCompiler.tableName(k.fqn) -> Flatten.flattenNodes(
-        nodes.filter(col("node_kind") === k.fqn), k, model)
-    }.toMap
 
   /** The schema of a link table's files: `linkSchema`, nullable as
     * every parquet read is. */
   private val stagedLinkSchema =
     StructType(ModelCompiler.linkSchema.map(_.copy(nullable = true)))
 
-  /** The pair dirs of an edge stage written with
-    * `partitionBy("from_kind", "to_kind")`: (from_kind, to_kind) → its
-    * dir, with the values unescaped by the inverse of the escaping
-    * `partitionBy` wrote them with. */
-  private def stagedPairs(stage: Path): Map[(String, String), Path] = {
-    def values(dir: Path, key: String): List[(String, Path)] =
-      if (!Files.isDirectory(dir)) Nil
-      else {
-        val ls = Files.list(dir)
-        try ls.iterator().asScala.toList.flatMap { d =>
-          val n = d.getFileName.toString
-          if (Files.isDirectory(d) && n.startsWith(s"$key="))
-            Some(ExternalCatalogUtils.unescapePathName(
-              n.drop(key.length + 1)) -> d)
-          else None
-        } finally ls.close()
-      }
-    (for {
-      (f, fromDir) <- values(stage, "from_kind")
-      (t0, pairDir) <- values(fromDir, "to_kind")
-    } yield (f, t0) -> pairDir).toMap
-  }
+  /** What edge keying reads of the kind stage: each node's id and, from
+    * its partition dir, its kind. */
+  private val nodeMapSchema = StructType(Seq(
+    StructField("_id", StringType), StructField("node_kind", StringType)))
 
-  /** The node and edge stage dirs [[stage]] writes under its dir. */
-  private val NodeStage = "_ingest_nodes"
+  /** The partition dirs under `dir` of a write partitioned by `key`:
+    * value → dir, with the value unescaped by the inverse of the
+    * escaping `partitionBy` wrote it with. */
+  private def partitionDirs(dir: Path, key: String): List[(String, Path)] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.toList.flatMap { d =>
+        val n = d.getFileName.toString
+        if (Files.isDirectory(d) && n.startsWith(s"$key="))
+          Some(ExternalCatalogUtils.unescapePathName(
+            n.drop(key.length + 1)) -> d)
+        else None
+      } finally ls.close()
+    }
+
+  /** The kind stage, edge stage and empty-table dirs [[stage]] writes
+    * under its dir. */
+  private val KindStage = "_ingest_kinds"
   private val EdgeStage = "_ingest_edges"
+  private val EmptyStage = "_ingest_empty"
+  private val Stages = Seq(KindStage, EdgeStage, EmptyStage)
 
-  /** The staged plan of one sync, written under `dir`: the kind tables
-    * over the node stage, and per link table
-    * ([[ModelCompiler.linkTables]] over the observed pairs) the parquet
-    * dir holding its rows.
+  /** The staged plan of one sync, written under `dir`: the parquet dir
+    * of every kind table, and of every link table
+    * ([[ModelCompiler.linkTables]] over the observed pairs).
     *
-    * Scale shape: the envelope stream is scanned exactly TWICE. Scan 1
-    * stages the nodes partitioned by kind; each kind table then reads
-    * only its own partition dir (partition pruning), instead of N full
-    * input scans for N kinds. Scan 2 keys the edges against the staged
-    * node→kind map and stages them partitioned by kind pair: its pair
-    * dir names are the observed pairs (no distinct-pair job), and each
-    * observed link table's dir is its pair dir, to be moved or read as
-    * is. A declared pair with no edge gets the shared schema-only
-    * `_empty` dir, marked `copy`. The caller removes the stage dirs
-    * once it has published. */
+    * Scale shape: the envelope stream is scanned exactly TWICE, and no
+    * job runs per table. Scan 1 selects the node's kind and one struct
+    * per table kind — its [[Flatten.columns]], non-null only on that
+    * kind's rows — and writes it partitioned by kind through
+    * [[SplitParquetFormat]], which writes each row's non-null struct
+    * alone: each file holds one kind table's rows with that table's
+    * schema. The projection holds every kind's columns, K tables' worth
+    * of expressions in one plan. Scan 2 keys the edges against the node
+    * → kind map read back from the kind stage (ids and partition values
+    * only) and stages them partitioned by kind pair: its pair dir names
+    * are the observed pairs (no distinct-pair job). An edge whose
+    * endpoint has no table-kind node keys to a null kind and lands in a
+    * default-partition dir, which is no link table. A kind with no node
+    * and a declared pair with no edge each get a schema-only dir written
+    * on the driver. Every table's dir is moved or read as is; the caller
+    * removes the [[Stages]] once it has published. If staging throws,
+    * none of its jobs still runs. */
   private def stage(envelopes: DataFrame, model: Model, dir: String)
-      : (Map[String, DataFrame], Map[String, TableSink.WrittenDir]) = {
+      : (Map[String, TableSink.WrittenDir], Map[String, TableSink.WrittenDir]) = {
     val spark = envelopes.sparkSession
-    val nodeStage = s"$dir/$NodeStage"
+    val kinds = ModelCompiler.tableKinds(model)
+    // No table kind: no kind table, and no link table either.
+    if (kinds.isEmpty) return (Map.empty, Map.empty)
+    val kindStage = s"$dir/$KindStage"
     val edgeStage = s"$dir/$EdgeStage"
+    val kind = col("reported.kind")
+    val nodes = envelopes
+      .filter(col("type") === "node" && kind.isin(kinds.map(_.fqn): _*))
+      .select(kind.as("node_kind") +: kinds.zipWithIndex.map { case (k, i) =>
+        when(kind === k.fqn, struct(Flatten.columns(envelopes.schema, k,
+          model): _*)).as(s"k$i")
+      }: _*)
+    SnapshotSwap.stopJobsOnFailure {
+      // Scan 1: every kind table in one job.
+      nodes.write.mode("overwrite").partitionBy("node_kind")
+        .format(classOf[SplitParquetFormat].getName).save(kindStage)
+      // Scan 2: edges keyed against the staged node->kind map, staged
+      // partitioned by kind pair. The rebalance clusters each pair into
+      // one shuffle partition (AQE splits it only past the advisory
+      // partition size): without it every input task writes its own
+      // file per pair, and those files would become the link tables'.
+      Flatten.keyEdges(envelopes,
+          spark.read.schema(nodeMapSchema).parquet(kindStage)
+            .select(col("_id").as("id"), col("node_kind").as("kind")))
+        .hint("rebalance", col("from_kind"), col("to_kind"))
+        .write.mode("overwrite").partitionBy("from_kind", "to_kind")
+        .parquet(edgeStage)
+    }
 
-    // Scan 1: nodes staged once, partitioned by kind, and read back
-    // with the schema just written (no schema-inference job).
-    val nodes = nodeRows(envelopes)
-    nodes.write.mode("overwrite").partitionBy("node_kind").parquet(nodeStage)
-    val stagedNodes = spark.read.schema(nodes.schema).parquet(nodeStage)
-
-    // Scan 2: edges keyed against the staged node->kind map, staged
-    // partitioned by kind pair. The rebalance clusters each pair into
-    // one shuffle partition (AQE splits it only past the advisory
-    // partition size): without it every input task writes its own
-    // file per pair, and those files would become the link tables'.
-    keyedEdges(envelopes, stagedNodes)
-      .hint("rebalance", col("from_kind"), col("to_kind"))
-      .write.mode("overwrite").partitionBy("from_kind", "to_kind")
-      .parquet(edgeStage)
-
+    // Each table's dir: its partition dir, or a schema-only one.
+    def written(name: String, schema: StructType, staged: Option[Path]) =
+      name -> TableSink.WrittenDir(staged.getOrElse {
+        val empty = Paths.get(s"$dir/$EmptyStage", name)
+        SplitParquetFormat.writeEmpty(spark, schema, empty)
+        empty
+      }, schema)
+    val kindDirs = partitionDirs(Paths.get(kindStage), "node_kind").toMap
+    val kindTables = kinds.zipWithIndex.map { case (k, i) =>
+      written(ModelCompiler.tableName(k.fqn),
+        nodes.schema(i + 1).dataType.asInstanceOf[StructType],
+        kindDirs.get(k.fqn))
+    }.toMap
     // Pair dirs whose pair is not a link table stay in the stage.
-    val pairDirs = stagedPairs(Paths.get(edgeStage))
-    val links = ModelCompiler.linkTables(model, pairDirs.keySet)
-    val empty = Paths.get(edgeStage, "_empty")
-    if (links.values.exists(p => !pairDirs.contains(p)))
-      SnapshotSwap.writeEmpty(spark, stagedLinkSchema, empty)
-    (kindTables(stagedNodes, model), links.map { case (name, p) =>
-      name -> pairDirs.get(p).fold(
-        TableSink.WrittenDir(empty, stagedLinkSchema, copy = true))(
-        TableSink.WrittenDir(_, stagedLinkSchema))
-    })
+    val pairDirs = (for {
+      (f, fromDir) <- partitionDirs(Paths.get(edgeStage), "from_kind")
+      (t0, pairDir) <- partitionDirs(fromDir, "to_kind")
+    } yield (f, t0) -> pairDir).toMap
+    val linkTables = ModelCompiler.linkTables(model, pairDirs.keySet).map {
+      case (name, p) => written(name, stagedLinkSchema, pairDirs.get(p))
+    }
+    (kindTables, linkTables)
   }
 
   /** Sync to parquet dirs: publish every table of the [[stage]]d plan
-    * (swap + view, see [[TableSink.writeAll]]), link tables by moving
-    * their pair dirs into place — no job per link table; returns
-    * table → prod path. The stage lives under `baseDir`, on the prod
-    * dirs' filesystem, so the moves are renames. What is left of it is
-    * removed once the tables are published (or the publish failed): it
-    * is a full copy of the envelopes, and nothing reads it afterwards. */
+    * by moving its dir into place (swap + view, see
+    * [[TableSink.writeAll]]) — no job per table; returns table → prod
+    * path. The stage lives under `baseDir`, on the prod dirs'
+    * filesystem, so the moves are renames. What is left of it is
+    * removed once the tables are published (or the sync failed): it
+    * holds every staged node, and nothing reads it afterwards. */
   def toParquet(spark: SparkSession, envelopes: DataFrame, model: Model,
       baseDir: String, dropExisting: Boolean = false): Map[String, String] = {
     val paths = try {
       val (kinds, links) = stage(envelopes, model, baseDir)
-      TableSink.writeAll(kinds, baseDir, links)
-    } finally Seq(NodeStage, EdgeStage).foreach(n =>
+      TableSink.writeAll(Map.empty, baseDir, kinds ++ links)
+    } finally Stages.foreach(n =>
       // Best effort: a stage left behind is overwritten by the next
-      // sync, and must not mask the write's own error.
+      // sync, and must not mask the sync's own error.
       scala.util.Try(SnapshotSwap.rm(Paths.get(baseDir, n))))
     // The reference's drop_existing_tables analogue (sql.py:150-151):
     // prod dirs for tables absent from this sync are swept, so a kind
@@ -156,10 +172,11 @@ object Sync {
   }
 
   /** Sync to a SQL database over JDBC (staging write + rename swap) from
-    * the same [[stage]]d plan: kind tables carry the model's len-driven
-    * string widths into their CREATE TABLE, link tables — read from
-    * their stage dirs — VARCHAR(255) ids. The stage lives in a fresh
-    * temp dir, removed once `JdbcSink.sync` returns or throws. */
+    * the same [[stage]]d plan: every table is read from its stage dir
+    * with its schema; kind tables carry the model's len-driven string
+    * widths into their CREATE TABLE, link tables VARCHAR(255) ids. The
+    * stage lives in a fresh temp dir, removed once `JdbcSink.sync`
+    * returns or throws. */
   def toJdbc(envelopes: DataFrame, model: Model, url: String): Unit = {
     val spark = envelopes.sparkSession
     val dir = Files.createTempDirectory("graft_jdbc_stage")
@@ -169,7 +186,7 @@ object Sync {
         ModelCompiler.tableName(k.fqn) ->
           ModelCompiler.jdbcColumnTypes(k, model)).toMap ++
         links.keys.map(_ -> ModelCompiler.jdbcLinkColumnTypes)
-      JdbcSink.sync(kinds ++ links.map { case (name, d) =>
+      JdbcSink.sync((kinds ++ links).map { case (name, d) =>
         name -> spark.read.schema(d.schema).parquet(d.dir.toString)
       }, url, columnTypes)
     } finally scala.util.Try(SnapshotSwap.rm(dir))

@@ -75,33 +75,36 @@ object Flatten {
       case _ => c.cast(out)
     }
 
-  /** Project a node-envelope DataFrame to the compiled schema of `kind`.
-    * Known properties are lifted from `reported`; properties absent from
-    * the input schema are padded with typed nulls. */
-  def flattenNodes(nodes: DataFrame, kind: Kind, model: Model): DataFrame = {
-    val schema = ModelCompiler.tableSchema(kind, model)
-    val inSchema = nodes.schema
-    val cols: Seq[Column] = schema.fields.toSeq.map { f =>
+  /** The columns of `kind`'s table over node envelopes of schema `in`,
+    * in table-schema order: known properties lifted from `reported`,
+    * properties absent from the input schema padded with typed nulls.
+    * [[flattenNodes]] selects them over one kind's nodes; a sync's
+    * staging scan wraps each kind's in one struct per row. */
+  def columns(in: StructType, kind: Kind, model: Model): Seq[Column] =
+    ModelCompiler.tableSchema(kind, model).fields.toSeq.map { f =>
       f.name match {
         case "_id" => col("id").cast(StringType).as("_id")
         case c if ModelCompiler.carz.contains(c) =>
           val path = Seq("ancestors", c, "reported", "id")
-          if (hasField(inSchema, path))
+          if (hasField(in, path))
             col(path.mkString(".")).cast(StringType).as(c)
           else lit(null).cast(StringType).as(c)
         case p =>
-          fieldType(inSchema, Seq("reported", p)) match {
+          fieldType(in, Seq("reported", p)) match {
             case Some(inType) =>
               conform(col(s"reported.$p"), inType, f.dataType).as(p)
             case None => lit(null).cast(f.dataType).as(p)
           }
       }
     }
+
+  /** Project a node-envelope DataFrame to the compiled schema of `kind`
+    * ([[columns]]), keeping only that kind's nodes. */
+  def flattenNodes(nodes: DataFrame, kind: Kind, model: Model): DataFrame =
     nodes
       .filter(col("type") === "node" &&
         col("reported.kind") === kind.fqn)
-      .select(cols: _*)
-  }
+      .select(columns(nodes.schema, kind, model): _*)
 
   /** Edge envelope → (from_id, to_id). Only default-type edges
     * participate in link tables (reference: collect_plugins.py:45-47,
@@ -121,10 +124,15 @@ object Flatten {
 
   /** Edge keying (P5): route each edge to its link table by joining both
     * endpoints against the node→kind map (reference's checksum lookup,
-    * collect_plugins.py:49-62, re-expressed as a distributed join). The
-    * node map scales with the graph, so no broadcast is forced — AQE
-    * broadcasts it when it is actually small; at 100 TB both joins
-    * shuffle on the node id (bucketing nodes and edges by id makes them
+    * collect_plugins.py:49-62, re-expressed as a distributed join). Both
+    * joins keep every edge: an endpoint with no node in the map keys to
+    * a null kind, which a caller drops (a filter on the kinds makes the
+    * joins inner) or ignores. Kept edges make the map the build side of
+    * both joins, so they read it through one exchange, reused: one
+    * broadcast when AQE broadcasts it because it is small, one shuffle on
+    * the node id when it is not — the map is scanned once either way. No
+    * broadcast is forced: the map scales with the graph, and at 100 TB
+    * both joins shuffle (bucketing nodes and edges by id makes them
     * co-located). */
   def keyEdges(edges: DataFrame, nodeKinds: DataFrame): DataFrame = {
     val fk = nodeKinds
@@ -134,7 +142,7 @@ object Flatten {
     flattenEdges(edges)
       .withColumnRenamed("from_id", "from")
       .withColumnRenamed("to_id", "to")
-      .join(fk, "from").join(tk, "to")
+      .join(fk, Seq("from"), "left").join(tk, Seq("to"), "left")
       .select(col("from").as("from_id"), col("to").as("to_id"),
         col("from_kind"), col("to_kind"))
   }

@@ -204,8 +204,8 @@ object PipelineQueries {
 
     // The composed pipeline at DATA scale — q_pipeline_e2e's fixture is
     // deliberately dimension-sized (nation), so this gate drives the
-    // SAME full path (envelope stream → two staging scans → per-kind
-    // partition-pruned flatten → pooled swap-writes → catalog → SQL)
+    // SAME full path (envelope stream → two staging scans, the first
+    // flattening every kind table → moved partition dirs → catalog → SQL)
     // with a fact-sized kind: every customer is a node, every
     // nation→customer containment an edge, and the customer's REGION
     // ancestor is denormalized upstream exactly like a collector would

@@ -558,12 +558,15 @@ object StreamQueries {
     * anti-join there, so the static orders dimension is read ONCE per
     * report, never per batch. */
   private[graft] def expectBatch(batch: DataFrame, root: String,
-      batchId: Long): Unit =
-    // The two artifacts are independent given the batch — overlap them
-    // (r19, guide §2.6); both scans decode the same one-file batch and
-    // the block manager shares the in-flight computation.
-    batchWrites(batch.sparkSession)(
-      "sums" -> (() => writePartial(batch.agg(
+      batchId: Long): Unit = {
+    // Two write actions run below — cache the batch so its file is
+    // decoded ONCE: each action plans its own scan, and only a cached
+    // batch lets the block manager share the computation between them.
+    val b = batch.persist()
+    // The two artifacts are independent given the cached batch —
+    // overlap them (r19, guide §2.6).
+    try batchWrites(b.sparkSession)(
+      "sums" -> (() => writePartial(b.agg(
         sum(when(col("l_orderkey").isNull, 1L).otherwise(0L))
           .as("null_orderkey"),
         sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L)
@@ -572,9 +575,11 @@ object StreamQueries {
           .otherwise(0L)).as("disc_in_range"),
         sum(when(col("l_quantity") > 25, 1L).otherwise(0L))
           .as("qty_le_25")), root, "sums", batchId)),
-      "keys" -> (() => batch.groupBy("l_orderkey", "l_linenumber")
+      "keys" -> (() => b.groupBy("l_orderkey", "l_linenumber")
         .agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(batchDir(root, "keys", batchId))))
+    finally { b.unpersist(); () }
+  }
 
   /** One micro-batch of the streaming sync front door
     * (q_stream_pipeline): node envelopes FLATTEN immediately (the

@@ -2,7 +2,6 @@ package graft.sink
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Atomic staging→prod snapshot swap (P12) — the Spark-native analogue of
   * the reference's temp-table rename protocol (reference: sql.py:129-159:
@@ -11,8 +10,10 @@ import org.apache.spark.sql.types.StructType
   * Protocol: stage the new snapshot at `<base>/_staging_<table>` —
   * write it there (`write`; `TableSink.writeAllCsv` writes CSV through
   * the same `swapIn`), or move a dir some earlier job already
-  * wrote there (`publishDir`, e.g. a link table's pair dir of Sync's
-  * edge stage) — then atomically move it to `<base>/<table>` (previous
+  * wrote there (`publishDir`: every table of a `Sync`, kind and link
+  * alike, is its partition dir of the sync's staging scans, or a
+  * schema-only dir for an empty table) — then atomically move it to
+  * `<base>/<table>` (previous
   * snapshot moved aside and dropped only after the new one is in
   * place). A reader that resolves the prod path after the swap sees the
   * complete new snapshot — never a mix. A DataFrame or view resolved
@@ -47,34 +48,18 @@ object SnapshotSwap {
   private def stageParquet(df: DataFrame, dir: Path): Unit =
     df.write.mode("overwrite").parquet(dir.toString)
 
-  /** Write `schema` as one row-less part file at `dir` (overwrite). */
-  private[graft] def writeEmpty(spark: SparkSession, schema: StructType,
-      dir: Path): Unit =
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          Seq.empty[org.apache.spark.sql.Row], 1), schema)
-      .write.mode("overwrite").parquet(dir.toString)
-
   /** Write df as the new snapshot of `table` under `base`; returns the
     * prod path. */
   def write(df: DataFrame, base: String, table: String): String =
     swapIn(base, table)(stageParquet(df, _))
 
   /** Publish an already-written parquet dir as the new snapshot of
-    * `table`: moved (or, with `copy`, its files copied) into the
-    * staging dir, then swapped in like a written one; returns the prod
-    * path. `dir` must be on the same filesystem as `base`. */
-  def publishDir(dir: Path, base: String, table: String,
-      copy: Boolean): String =
-    swapIn(base, table) { staging =>
-      if (!copy) Files.move(dir, staging, StandardCopyOption.ATOMIC_MOVE)
-      else {
-        Files.createDirectories(staging)
-        val files = Files.list(dir)
-        try files.forEach(f => Files.copy(f, staging.resolve(f.getFileName)))
-        finally files.close()
-      }
-    }
+    * `table`: moved into the staging dir, then swapped in like a written
+    * one; returns the prod path. `dir` must be on the same filesystem as
+    * `base`. */
+  def publishDir(dir: Path, base: String, table: String): String =
+    swapIn(base, table)(
+      Files.move(dir, _, StandardCopyOption.ATOMIC_MOVE))
 
   /** Fill `<base>/_staging_<table>` with `stage`, then swap it in as
     * `<base>/<table>`: the previous snapshot is moved aside and dropped
@@ -86,30 +71,37 @@ object SnapshotSwap {
     val old = Paths.get(base, s"_old_$table")
     Files.createDirectories(Paths.get(base))
     rm(staging)
-    // The stage's jobs carry a tag of their own, so a failed stage can
-    // stop exactly them: a failed job returns while sibling tasks still
-    // run, and one that opens its output after the cleanup would
-    // re-create the staging dir.
-    val sc = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
-    val tag = s"graft-swap-${java.util.UUID.randomUUID()}"
-    sc.foreach(_.addJobTag(tag))
-    try stage(staging)
+    try stopJobsOnFailure(stage(staging))
     catch { case t: Throwable =>
       // A failed stage leaves no staging dir behind (best effort: a
       // cleanup failure rides along with the stage's own error).
-      scala.util.Try {
-        sc.foreach(stopTagged(_, tag))
-        rm(staging)
-      }.failed.foreach(t.addSuppressed)
+      scala.util.Try(rm(staging)).failed.foreach(t.addSuppressed)
       throw t
-    } finally sc.foreach(_.removeJobTag(tag))
+    }
     rm(old)
     if (Files.exists(prod))
       Files.move(prod, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(staging, prod, StandardCopyOption.ATOMIC_MOVE)
     rm(old)
     prod.toString
+  }
+
+  /** Run `body` with a job tag of its own; if it throws, first stop
+    * the jobs it started. A failed job returns while sibling tasks still
+    * run, and one that opens its output after the caller's cleanup would
+    * re-create what the cleanup removed. A failure to stop them rides
+    * along with the body's own error. */
+  private[graft] def stopJobsOnFailure[T](body: => T): T = {
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-swap-${java.util.UUID.randomUUID()}"
+    sc.foreach(_.addJobTag(tag))
+    try body
+    catch { case t: Throwable =>
+      scala.util.Try(sc.foreach(stopTagged(_, tag))).failed
+        .foreach(t.addSuppressed)
+      throw t
+    } finally sc.foreach(_.removeJobTag(tag))
   }
 
   /** Cancel the jobs tagged `tag` and wait, at most [[StopTimeoutMs]],

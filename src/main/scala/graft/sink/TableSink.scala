@@ -33,9 +33,8 @@ object TableSink {
   /** Run `f` over the table map on a pool of at most `poolSize` workers,
     * preserving per-table failure (first exception rethrown after the
     * pool drains). The items must not race on input or output: in a
-    * parquet sync each kind table reads its own partition dir of Sync's
-    * node stage, and each link table moves its own pair dir out of the
-    * edge stage. */
+    * parquet sync each table moves its own partition dir out of Sync's
+    * staging scans. */
   private[graft] def forEachTable[A, B](tables: Map[String, A],
       session: Option[SparkSession] = None, poolSize: Int = SyncPool)(
       f: (String, A) => B): Map[String, B] = {
@@ -128,21 +127,20 @@ object TableSink {
     } finally pool.shutdown()
   }
 
-  /** A parquet dir some earlier job wrote, on the base dir's
+  /** A parquet dir some earlier write left, on the base dir's
     * filesystem, with the schema of its files. [[writeAll]] publishes it
-    * by moving it into the table's staging dir, or with `copy` by
-    * copying its files (a dir several tables share). */
-  final case class WrittenDir(dir: Path, schema: StructType,
-      copy: Boolean = false)
+    * by moving it into the table's staging dir. */
+  final case class WrittenDir(dir: Path, schema: StructType)
 
   /** Publish every table; returns the prod path per table. Publishing
     * one table is one pooled task: swap it in — `tables` are written
-    * (`SnapshotSwap.write`), `written` dirs moved or copied into place
-    * (`SnapshotSwap.publishDir`), so they cost no Spark job — then
-    * register its temp view over the new prod dir with the known schema,
-    * so no schema-inference job runs, and no view is left listing files
-    * the swap removed (a view lists its files when registered). Tables
-    * publish independently (distinct dirs), so a failed sync leaves
+    * (`SnapshotSwap.write`), `written` dirs moved into place
+    * (`SnapshotSwap.publishDir`), so they cost no Spark job; every table
+    * of a `Sync`, kind and link alike, is such a dir — then register its
+    * temp view over the new prod dir with the known schema, so no
+    * schema-inference job runs, and no view is left listing files the
+    * swap removed (a view lists its files when registered). Tables
+    * publish independently (distinct dirs), so a failed publish leaves
     * every view readable: tables that published serve the new rows, all
     * others their previous ones. */
   def writeAll(tables: Map[String, DataFrame], base: String,
@@ -155,8 +153,7 @@ object TableSink {
     forEachTable(entries, Some(spark)) { (name, entry) =>
       val (prod, schema) = entry match {
         case Left(df) => (SnapshotSwap.write(df, base, name), df.schema)
-        case Right(d) =>
-          (SnapshotSwap.publishDir(d.dir, base, name, d.copy), d.schema)
+        case Right(d) => (SnapshotSwap.publishDir(d.dir, base, name), d.schema)
       }
       spark.read.schema(schema).parquet(prod).createOrReplaceTempView(name)
       prod

@@ -218,6 +218,46 @@ class SyncE2ESpec extends SparkSpecBase {
     }
   }
 
+  test("each kind table's files hold its own schema") {
+    import spark.implicits._
+    // Two kinds declare `size` with different types, and one kind has
+    // no node: the staging job writes every kind table at once, and
+    // each file must still carry its own table's schema.
+    val m = Model(
+      Kind("resource", properties = Seq(
+        Property("id", "string"), Property("name", "string"),
+        Property("kind", "string"))),
+      Kind("sized_disk", bases = Seq("resource"),
+        properties = Seq(Property("size", "int32")),
+        successorKinds = Map("default" -> Seq("sized_bucket"))),
+      Kind("sized_bucket", bases = Seq("resource"),
+        properties = Seq(Property("size", "string"))),
+      Kind("sized_idle", bases = Seq("resource"),
+        properties = Seq(Property("size", "int64"))))
+    val env = spark.read.json(spark.createDataset(Seq(
+      node("sized_disk", "d1", ""","size":10"""),
+      node("sized_disk", "d2", ""","size":20"""),
+      node("sized_bucket", "b1", ""","size":"large""""),
+      edge("d1", "b1"))))
+    val base = Files.createTempDirectory("graft_sync_kind_schema").toString
+    val paths = graft.Sync.toParquet(spark, env, m, base)
+    assert(paths.keySet == Set("sized_disk", "sized_bucket", "sized_idle",
+      "link_sized_disk_sized_bucket"))
+    paths.foreach { case (t0, p) =>
+      assert(spark.read.parquet(p).schema == spark.table(t0).schema, t0)
+    }
+    def sizeType(t0: String) = spark.table(t0).schema("size").dataType
+    assert(sizeType("sized_disk") == org.apache.spark.sql.types.IntegerType)
+    assert(sizeType("sized_bucket") == org.apache.spark.sql.types.StringType)
+    assert(sizeType("sized_idle") == org.apache.spark.sql.types.LongType)
+    assert(spark.table("sized_disk").select("size").as[Int].collect()
+      .sorted.toSeq == Seq(10, 20))
+    assert(spark.table("sized_bucket").select("size").as[String].collect()
+      .toSeq == Seq("large"))
+    assert(spark.table("sized_idle").count() == 0)
+    assert(spark.table("link_sized_disk_sized_bucket").count() == 1)
+  }
+
   test("a sync leaves only prod tables in its base dir, also when it fails") {
     import spark.implicits._
     def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))
@@ -239,9 +279,13 @@ class SyncE2ESpec extends SparkSpecBase {
     // No node/edge stage and no staging dir survives a good sync.
     assert(SyncE2ESpec.baseNames(base) == paths.keySet)
 
-    // A re-sync whose instance table fails mid-write (an int32
-    // property carrying "many": the ANSI cast fails when that table is
-    // written, after both stages were written).
+    // A re-sync whose instance flatten fails (an int32 property
+    // carrying "many": the ANSI cast fails inside the staging job that
+    // writes every kind table, before any table is published).
+    val kindTables = Seq("example_region", "example_instance",
+      "example_volume")
+    val before = kindTables.map(t0 => t0 -> SyncE2ESpec.listing(base, t0))
+      .toMap
     val prevAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     val thrown = try intercept[Exception] {
@@ -254,10 +298,12 @@ class SyncE2ESpec extends SparkSpecBase {
     assert(Iterator.iterate[Throwable](thrown)(_.getCause)
       .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage)
         .contains("CAST_INVALID_INPUT")), thrown.toString)
-    // Still only prod tables: the failed table's staging dir, both
-    // stages and every pair dir, moved or not, are gone; every table
-    // keeps a prod dir.
+    // Still only prod tables: both stages and every partition dir are
+    // gone; every table keeps a prod dir, and no kind table published
+    // new rows.
     assert(SyncE2ESpec.baseNames(base) == paths.keySet)
+    kindTables.foreach(t0 =>
+      assert(SyncE2ESpec.listing(base, t0) == before(t0), t0))
     assert(spark.table("example_instance").count() == 2)
     assert(spark.table("link_example_instance_example_volume").count() == 2)
     assert(spark.table("link_example_volume_example_region").count() == 0)

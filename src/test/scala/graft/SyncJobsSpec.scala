@@ -4,20 +4,22 @@ import java.nio.file.Files
 import graft.model.{Kind, Model, Property}
 import graft.streaming.ProgressFeedback
 
-/** A sync's work scales with its kind tables, not its link tables: a
-  * link table is its pair dir of the edge stage. A parquet sync moves
-  * that dir into place, so a graph with five observed kind pairs syncs
-  * with as many jobs as one with a single pair over the same kinds; a
-  * JDBC sync reads it, so its input reads grow only by the new edges. */
+/** A sync's job count does not grow with its tables: every kind table
+  * is its partition dir of the one staging job over the nodes, and
+  * every link table its pair dir of the edge stage. A parquet sync
+  * moves those dirs into place, so a graph with five observed kind
+  * pairs syncs with as many jobs as one with a single pair, and a graph
+  * over six table kinds with as many as one over two; a JDBC sync reads
+  * them, so its input reads grow only by the new edges. */
 class SyncJobsSpec extends SparkSpecBase {
 
   private val kinds = Seq("jc_a", "jc_b", "jc_c", "jc_d", "jc_e", "jc_f")
 
   // No declared successors: every link table is an observed pair.
-  private val model = Model((Kind("resource", properties = Seq(
-      Property("id", "string"), Property("name", "string"),
-      Property("kind", "string"))) +:
-    kinds.map(k => Kind(k, bases = Seq("resource")))): _*)
+  private def model(ks: Seq[String]) = Model((Kind("resource",
+      properties = Seq(Property("id", "string"), Property("name", "string"),
+        Property("kind", "string"))) +:
+    ks.map(k => Kind(k, bases = Seq("resource")))): _*)
 
   private def node(kind: String, id: String): String =
     s"""{"type":"node","id":"$id","reported":{"kind":"$kind","id":"$id",""" +
@@ -26,25 +28,26 @@ class SyncJobsSpec extends SparkSpecBase {
   private def edge(from: String, to: String): String =
     s"""{"type":"edge","from":"$from","to":"$to","edge_type":"default"}"""
 
-  /** The six kinds' nodes with an edge between consecutive kinds for
-    * the first `pairs` pairs. */
-  private def graph(pairs: Int): Seq[String] = {
-    val nodes = for (k <- kinds; i <- 1 to 2) yield node(k, s"$k-$i")
-    val edges = kinds.zip(kinds.tail).take(pairs).flatMap { case (f, t0) =>
-      Seq(edge(s"$f-1", s"$t0-1"), edge(s"$f-2", s"$t0-2"))
-    }
+  /** Twelve nodes, node `i` of kind `ks(i % ks.size)`, with two edges
+    * between consecutive kinds for each of the first `pairs` pairs. */
+  private def graph(pairs: Int, ks: Seq[String] = kinds): Seq[String] = {
+    val n = ks.size
+    val nodes = (0 until 12).map(i => node(ks(i % n), s"n$i"))
+    val edges = (0 until pairs).flatMap(p =>
+      Seq(edge(s"n$p", s"n${p + 1}"), edge(s"n${p + n}", s"n${p + 1 + n}")))
     nodes ++ edges
   }
 
   /** Jobs started by one `Sync.toParquet` of [[graph]]. */
-  private def syncJobs(pairs: Int): Int = {
+  private def syncJobs(pairs: Int, ks: Seq[String] = kinds): Int = {
     import spark.implicits._
-    val env = spark.read.json(spark.createDataset(graph(pairs)))
+    val env = spark.read.json(spark.createDataset(graph(pairs, ks)))
     val base = Files.createTempDirectory("graft_sync_jobs").toString
     val (paths, snap) = ProgressFeedback.withProgress(spark)() {
-      Sync.toParquet(spark, env, model, base)
+      Sync.toParquet(spark, env, model(ks), base)
     }
     assert(paths.keySet.count(_.startsWith("link_")) == pairs)
+    assert(paths.size == ks.size + pairs)
     snap.jobsStarted
   }
 
@@ -52,6 +55,12 @@ class SyncJobsSpec extends SparkSpecBase {
     val one = syncJobs(1)
     val five = syncJobs(5)
     assert(five == one, s"1 pair: $one jobs, 5 pairs: $five jobs")
+  }
+
+  test("a sync's job count does not grow with its kind tables") {
+    val two = syncJobs(1, kinds.take(2))
+    val six = syncJobs(1, kinds)
+    assert(six == two, s"2 table kinds: $two jobs, 6 table kinds: $six jobs")
   }
 
   /** Input records read by one `Sync.toJdbc` of [[graph]] into embedded
@@ -63,7 +72,7 @@ class SyncJobsSpec extends SparkSpecBase {
     val file = Files.write(dir.resolve("envelopes.json"), graph(pairs).asJava)
     val env = spark.read.json(file.toString)
     val (_, snap) = ProgressFeedback.withProgress(spark)() {
-      Sync.toJdbc(env, model, s"jdbc:derby:$dir/db;create=true")
+      Sync.toJdbc(env, model(kinds), s"jdbc:derby:$dir/db;create=true")
     }
     snap.recordsRead
   }
