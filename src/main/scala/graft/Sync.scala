@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, struct, when}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ingest.Flatten
-import graft.model.{Model, ModelCompiler}
+import graft.model.{Kind, Model, ModelCompiler}
 import graft.sink.{JdbcSink, SnapshotSwap, SplitParquetFormat, TableSink}
 
 /** Top-level sync façade — the engine's equivalent of the reference's
@@ -28,6 +28,10 @@ import graft.sink.{JdbcSink, SnapshotSwap, SplitParquetFormat, TableSink}
   * [[toJdbc]] runs chunked JDBC inserts with tmp_→prod renames (P10)
   * over the same dirs.
   *
+  * Scan 1 ([[writeKindTables]]) is the engine's one envelope →
+  * kind-table path: the streaming sync (`StreamQueries.pipelineBatch`)
+  * runs it per micro-batch, and the batch gates call [[toParquet]].
+  *
   * Failure semantics: a kind whose flatten fails — a node's value that
   * fails its ANSI cast, or a property whose input type cannot become its
   * declared one — fails the one staging job (or its planning), so no
@@ -42,11 +46,6 @@ object Sync {
     * every parquet read is. */
   private val stagedLinkSchema =
     StructType(ModelCompiler.linkSchema.map(_.copy(nullable = true)))
-
-  /** What edge keying reads of the kind stage: each node's id and, from
-    * its partition dir, its kind. */
-  private val nodeMapSchema = StructType(Seq(
-    StructField("_id", StringType), StructField("node_kind", StringType)))
 
   /** The partition dirs under `dir` of a write partitioned by `key`:
     * value → dir, with the value unescaped by the inverse of the
@@ -71,22 +70,46 @@ object Sync {
   private val EmptyStage = "_ingest_empty"
   private val Stages = Seq(KindStage, EdgeStage, EmptyStage)
 
+  /** Scan 1 of a sync: every kind table of `model` written under `dir`
+    * in one job; returns each table kind with its table's schema. It
+    * selects the node's kind and one struct per table kind (its
+    * [[Flatten.columns]], non-null only on that kind's rows) and writes
+    * it partitioned by kind through [[SplitParquetFormat]], so each
+    * `node_kind=<fqn>` dir is that kind's table. The projection holds K
+    * tables' worth of expressions, so its planning grows with K. */
+  private[graft] def writeKindTables(envelopes: DataFrame, model: Model,
+      dir: String): Seq[(Kind, StructType)] = {
+    val kinds = ModelCompiler.tableKinds(model)
+    val kind = col("reported.kind")
+    val nodes = envelopes
+      .filter(col("type") === "node" && kind.isin(kinds.map(_.fqn): _*))
+      .select(kind.as("node_kind") +: kinds.zipWithIndex.map { case (k, i) =>
+        when(kind === k.fqn, struct(Flatten.columns(envelopes.schema, k,
+          model): _*)).as(s"k$i")
+      }: _*)
+    nodes.write.mode("overwrite").partitionBy("node_kind")
+      .format(classOf[SplitParquetFormat].getName).save(dir)
+    kinds.zip(nodes.schema.tail.map(_.dataType.asInstanceOf[StructType]))
+  }
+
+  /** The `(id, kind)` map of the kind tables [[writeKindTables]] wrote
+    * under `dir` (or under its `batch=<id>` dirs): only each node's
+    * `_id` and its partition value are read. */
+  private[graft] def nodeKinds(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("_id", StringType),
+        StructField("node_kind", StringType)))).parquet(dir)
+      .select(col("_id").as("id"), col("node_kind").as("kind"))
+
   /** The staged plan of one sync, written under `dir`: the parquet dir
     * of every kind table, and of every link table
     * ([[ModelCompiler.linkTables]] over the observed pairs).
     *
     * Scale shape: the envelope stream is scanned exactly TWICE, and no
-    * job runs per table. Scan 1 selects the node's kind and one struct
-    * per table kind — its [[Flatten.columns]], non-null only on that
-    * kind's rows — and writes it partitioned by kind through
-    * [[SplitParquetFormat]], which writes each row's non-null struct
-    * alone: each file holds one kind table's rows with that table's
-    * schema. The projection holds every kind's columns, K tables' worth
-    * of expressions in one plan. Scan 2 keys the edges against the node
-    * → kind map read back from the kind stage (ids and partition values
-    * only) and stages them partitioned by kind pair: its pair dir names
-    * are the observed pairs (no distinct-pair job). An edge whose
-    * endpoint has no table-kind node keys to a null kind and lands in a
+    * job runs per table. Scan 1 is [[writeKindTables]]. Scan 2 keys the
+    * edges against the kind stage's [[nodeKinds]] and stages them
+    * partitioned by kind pair: its pair dir names are the observed
+    * pairs (no distinct-pair job). An edge whose endpoint has no
+    * table-kind node keys to a null kind and lands in a
     * default-partition dir, which is no link table. A kind with no node
     * and a declared pair with no edge each get a schema-only dir written
     * on the driver. Every table's dir is moved or read as is; the caller
@@ -95,33 +118,22 @@ object Sync {
   private def stage(envelopes: DataFrame, model: Model, dir: String)
       : (Map[String, TableSink.WrittenDir], Map[String, TableSink.WrittenDir]) = {
     val spark = envelopes.sparkSession
-    val kinds = ModelCompiler.tableKinds(model)
     // No table kind: no kind table, and no link table either.
-    if (kinds.isEmpty) return (Map.empty, Map.empty)
+    if (ModelCompiler.tableKinds(model).isEmpty) return (Map.empty, Map.empty)
     val kindStage = s"$dir/$KindStage"
     val edgeStage = s"$dir/$EdgeStage"
-    val kind = col("reported.kind")
-    val nodes = envelopes
-      .filter(col("type") === "node" && kind.isin(kinds.map(_.fqn): _*))
-      .select(kind.as("node_kind") +: kinds.zipWithIndex.map { case (k, i) =>
-        when(kind === k.fqn, struct(Flatten.columns(envelopes.schema, k,
-          model): _*)).as(s"k$i")
-      }: _*)
-    SnapshotSwap.stopJobsOnFailure {
-      // Scan 1: every kind table in one job.
-      nodes.write.mode("overwrite").partitionBy("node_kind")
-        .format(classOf[SplitParquetFormat].getName).save(kindStage)
+    val kinds = SnapshotSwap.stopJobsOnFailure {
+      val kinds = writeKindTables(envelopes, model, kindStage)
       // Scan 2: edges keyed against the staged node->kind map, staged
       // partitioned by kind pair. The rebalance clusters each pair into
       // one shuffle partition (AQE splits it only past the advisory
       // partition size): without it every input task writes its own
       // file per pair, and those files would become the link tables'.
-      Flatten.keyEdges(envelopes,
-          spark.read.schema(nodeMapSchema).parquet(kindStage)
-            .select(col("_id").as("id"), col("node_kind").as("kind")))
+      Flatten.keyEdges(envelopes, nodeKinds(spark, kindStage))
         .hint("rebalance", col("from_kind"), col("to_kind"))
         .write.mode("overwrite").partitionBy("from_kind", "to_kind")
         .parquet(edgeStage)
+      kinds
     }
 
     // Each table's dir: its partition dir, or a schema-only one.
@@ -132,10 +144,8 @@ object Sync {
         empty
       }, schema)
     val kindDirs = partitionDirs(Paths.get(kindStage), "node_kind").toMap
-    val kindTables = kinds.zipWithIndex.map { case (k, i) =>
-      written(ModelCompiler.tableName(k.fqn),
-        nodes.schema(i + 1).dataType.asInstanceOf[StructType],
-        kindDirs.get(k.fqn))
+    val kindTables = kinds.map { case (k, schema) =>
+      written(ModelCompiler.tableName(k.fqn), schema, kindDirs.get(k.fqn))
     }.toMap
     // Pair dirs whose pair is not a link table stay in the stage.
     val pairDirs = (for {

@@ -61,6 +61,12 @@ object Flatten {
       // round-trip through JSON text instead ({} → empty map, absent →
       // null).
       case (m: MapType, _: StructType) => from_json(to_json(c), m)
+      // A complex property whose input column JSON inference merged to
+      // STRING (another kind declares the same name as a string): the
+      // complex values arrive as their JSON text, and Spark has no
+      // string→complex cast — parse it (a non-JSON value → null).
+      case (_: StructType | _: ArrayType | _: MapType, StringType) =>
+        from_json(c, out)
       case (o: StructType, i: StructType) =>
         val fields = o.fields.toSeq.map { f =>
           i.fields.find(_.name == f.name) match {

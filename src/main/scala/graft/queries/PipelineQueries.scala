@@ -3,17 +3,17 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
-import graft.ingest.Flatten
-import graft.model.{Kind, Model, ModelCompiler, Property}
-import graft.sink.TableSink
+import graft.model.{Kind, Model, Property}
 import graft.sources.GraphSource
 
 /** q_pipeline_e2e: the reference's whole sync path in one driver-checked
   * query — the §7.2 end-to-end slice. Node/edge envelopes (built here
-  * from the nation/region tables so the oracle can recompute the result
-  * relationally) flow through: model compile (P7) → node flatten with
-  * carz denormalization (P8) → edge flatten (P9) → per-table parquet
-  * write behind the staging→prod swap (P14+P12) → temp-view catalog →
+  * from the region and nation tables so the oracle can recompute the
+  * result relationally) flow through `Sync.toParquet`, the one sync
+  * path: model compile (P7) → the kind-table scan, node flatten with
+  * carz denormalization (P8) → the edge scan, region→nation edges keyed
+  * to their link table (P5/P9) → every table's dir moved into place
+  * behind the staging→prod swap (P14+P12) → temp-view catalog →
   * answered via spark.sql (P16). The oracle derives the same rows
   * straight from the base tables: the pipeline must be lossless.
   */
@@ -28,12 +28,23 @@ object PipelineQueries {
         Property("name", "string"),
         Property("kind", "string")),
       aggregateRoot = true),
+    Kind("infra_region", bases = Seq("resource")),
     Kind("infra_nation",
       bases = Seq("resource"),
       properties = Seq(Property("regionkey", "int32"))))
 
-  private def nodeEnvelopes(s: SparkSession, d: String): DataFrame =
-    t(s, d, "nation").select(
+  /** Region and nation nodes, each nation under its region's ancestor,
+    * and the region→nation edges, in one envelope relation. */
+  private def envelopes(s: SparkSession, d: String): DataFrame = {
+    val nation = t(s, d, "nation")
+    val regionNodes = t(s, d, "region").select(
+      lit("node").as("type"),
+      concat(lit("R"), col("r_regionkey")).as("id"),
+      struct(
+        lit("infra_region").as("kind"),
+        concat(lit("R"), col("r_regionkey")).as("id"),
+        col("r_name").as("name")).as("reported"))
+    val nationNodes = nation.select(
       lit("node").as("type"),
       concat(lit("N"), col("n_nationkey")).as("id"),
       struct(
@@ -44,12 +55,13 @@ object PipelineQueries {
       struct(
         struct(struct(concat(lit("R"), col("n_regionkey")).as("id"))
           .as("reported")).as("region")).as("ancestors"))
-
-  private def edgeEnvelopes(s: SparkSession, d: String): DataFrame =
-    t(s, d, "nation").select(
+    val edges = nation.select(
       lit("edge").as("type"),
       concat(lit("R"), col("n_regionkey")).as("from"),
       concat(lit("N"), col("n_nationkey")).as("to"))
+    nationNodes.unionByName(regionNodes, allowMissingColumns = true)
+      .unionByName(edges, allowMissingColumns = true)
+  }
 
   /** q_pipeline_scale's model: the e2e model plus a FACT-sized kind
     * (one node per customer) so the composed path has real volume. */
@@ -183,14 +195,8 @@ object PipelineQueries {
   val entries: Map[String, (Q, String)] = Map(
     "q_pipeline_e2e" -> ((
       (s: SparkSession, d: String) => {
-        val kind = model("infra_nation")
-        val nationTable = Flatten.flattenNodes(nodeEnvelopes(s, d), kind, model)
-        val linkTable = Flatten.flattenEdges(edgeEnvelopes(s, d))
         val base = s"${graft.Tables.scratchRoot}/graft_pipe_${graft.Tables.dirTag(d)}"
-        TableSink.writeAll(Map(
-          ModelCompiler.tableName(kind.fqn) -> nationTable,
-          ModelCompiler.linkTableName("infra_region", "infra_nation") ->
-            linkTable), base)
+        graft.Sync.toParquet(s, envelopes(s, d), model, base)
         s.sql(
           """SELECT l.from_id, l.to_id, n.name, n.regionkey, n.region
             |FROM link_infra_region_infra_nation l

@@ -582,38 +582,53 @@ object StreamQueries {
   }
 
   /** One micro-batch of the streaming sync front door
-    * (q_stream_pipeline): node envelopes FLATTEN immediately (the
-    * row-local half of the sync — per-kind table rows land delta-sized
-    * per batch), the batch's (id, kind) map and raw edge envelopes
-    * land as partials. Edge KEYING is deferred to the report: an edge
-    * may arrive before its endpoints' nodes, so keying per batch would
-    * either drop it or re-scan the accumulated id map every batch —
-    * one join over the FOLDED id domain at read time is both correct
+    * (q_stream_pipeline): node envelopes FLATTEN immediately through
+    * the sync's own kind-table scan (`Sync.writeKindTables`: every kind
+    * table of the batch in one job, into `kinds/batch=<id>`, one
+    * `node_kind=<fqn>` dir per kind), and the raw edge envelopes land
+    * in `edges/batch=<id>`: two write jobs per batch, whatever the kind
+    * count. The scan's projection holds every kind's columns, so its
+    * planning, paid once per batch, grows with the kind count. Edge
+    * KEYING is deferred to the report ([[pipelineReport]]): an edge may
+    * arrive before its endpoints' nodes, so keying per batch would
+    * either drop it or re-scan the accumulated node map every batch —
+    * one join over the FOLDED node domain at read time is both correct
     * under any arrival order and cheaper. */
   private[graft] def pipelineBatch(batch: DataFrame, root: String,
       batchId: Long): Unit = {
     import graft.queries.PipelineQueries.scaleModel
-    // K+2 independent write actions run below — cache the batch so
-    // its file is decoded ONCE, not once per kind table.
+    // Two write actions run below — cache the batch so its file is
+    // decoded ONCE; they are independent given the cached batch, so
+    // they overlap.
     val b = batch.persist()
-    try {
-      val nodes = b.filter(col("type") === "node")
-      // The K+2 artifacts are independent given the cached batch —
-      // overlap them (r19, guide §2.6: each tiny write is mostly
-      // serial driver/commit floor; concurrent actions back-fill it).
-      val kindWrites = graft.model.ModelCompiler.tableKinds(scaleModel)
-        .map { k =>
-          val tbl = s"tbl_${graft.model.ModelCompiler.tableName(k.fqn)}"
-          tbl -> (() => graft.ingest.Flatten.flattenNodes(nodes, k, scaleModel)
-            .write.mode("overwrite").parquet(batchDir(root, tbl, batchId)))
-        }
-      batchWrites(b.sparkSession)(kindWrites ++ Seq(
-        "ids" -> (() => nodes.select(col("id"), col("reported.kind").as("kind"))
-          .write.mode("overwrite").parquet(batchDir(root, "ids", batchId))),
-        "edges" -> (() => b.filter(col("type") === "edge")
-          .select("type", "from", "to")
-          .write.mode("overwrite").parquet(batchDir(root, "edges", batchId)))): _*)
-    } finally { b.unpersist(); () }
+    try batchWrites(b.sparkSession)(
+      "kinds" -> (() => { graft.Sync.writeKindTables(b, scaleModel,
+        batchDir(root, "kinds", batchId)); () }),
+      "edges" -> (() => b.filter(col("type") === "edge")
+        .select("type", "from", "to")
+        .write.mode("overwrite").parquet(batchDir(root, "edges", batchId))))
+    finally { b.unpersist(); () }
+  }
+
+  /** q_stream_pipeline's served answer over the batches
+    * [[pipelineBatch]] wrote under `root`: edges keyed against the
+    * folded node → kind map (`Sync.nodeKinds`), joined to the customer
+    * kind table read from its `node_kind` dirs with its table schema. */
+  private[graft] def pipelineReport(s: SparkSession, root: String): DataFrame = {
+    import graft.queries.PipelineQueries.scaleModel
+    val link = graft.ingest.Flatten.keyEdges(s.read.parquet(s"$root/edges"),
+        graft.Sync.nodeKinds(s, s"$root/kinds"))
+      .filter(col("from_kind") === "infra_nation" &&
+        col("to_kind") === "infra_customer")
+    val cust = s.read.schema(graft.model.ModelCompiler.tableSchema(
+        scaleModel("infra_customer"), scaleModel))
+      .parquet(s"$root/kinds").filter(col("node_kind") === "infra_customer")
+    link.join(cust, cust("_id") === link("to_id"))
+      .groupBy(col("from_id").as("nation_id"))
+      .agg(count(lit(1)).as("n_customers"),
+        min(col("name")).as("first_name"),
+        min(col("region")).as("region"))
+      .orderBy("nation_id")
   }
 
   /** One micro-batch of the streaming quarantine sink
@@ -1498,18 +1513,7 @@ object StreamQueries {
         }
         val root = freshRoot(d, "spipe")
         runBatches(fileStream(s, srcDir), root)(pipelineBatch(_, root, _))
-        val ids = s.read.parquet(s"$root/ids")
-        val edges = s.read.parquet(s"$root/edges")
-        val link = graft.ingest.Flatten.keyEdges(edges, ids)
-          .filter(col("from_kind") === "infra_nation" &&
-            col("to_kind") === "infra_customer")
-        val cust = s.read.parquet(s"$root/tbl_infra_customer")
-        link.join(cust, cust("_id") === link("to_id"))
-          .groupBy(col("from_id").as("nation_id"))
-          .agg(count(lit(1)).as("n_customers"),
-            min(col("name")).as("first_name"),
-            min(col("region")).as("region"))
-          .orderBy("nation_id")
+        pipelineReport(s, root)
       },
       PipelineQueries.PipelineScaleOracle)),
 

@@ -18,16 +18,17 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   */
 object TableSink {
 
-  /** Per-table jobs in flight during a sync (`forEachTable`'s default
-    * pool). A real resoto model has hundreds of kinds, and N sequential
-    * per-table write JOBS serialize cluster utilization at the sync
-    * front door: each small table's write occupies a handful of task
-    * slots while every other slot idles. Spark's scheduler is
-    * thread-safe, so submitting the per-table jobs from a bounded pool
-    * keeps ~8 jobs in flight — wall clock approaches max(largest table,
-    * total work / slots) instead of sum(per-table latency). Bounded
-    * (not tables.size) so a 500-kind model doesn't enqueue 500
-    * concurrent jobs' worth of driver/backend bookkeeping. */
+  /** Tables published at once ([[forEachTable]]'s default pool). A
+    * `Sync` runs no job per table: each table's publish moves its staged
+    * dir into place and registers its view over the new prod dir, all
+    * driver-side file-system work. Measured, not guessed: publishing a
+    * sync's dirs in a plain loop instead was slower on perfbench's
+    * sync_bulk in 4 of 4 alternating pairs on a 4-core host
+    * (freshness_s median 1.46 → 1.73 s, sql_ms 106 → 123 ms) and flat
+    * on sync_many_kinds (1.42 s both). Bounded (not tables.size) so a
+    * 500-kind model does not start 500 threads. A table passed as a
+    * DataFrame ([[writeAll]]'s `tables`, [[writeAllCsv]]) runs its write
+    * job on the pool. */
   private val SyncPool = 8
 
   /** Run `f` over the table map on a pool of at most `poolSize` workers,

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Crash-replay for the composed streaming front door
   * (q_stream_pipeline): the stream is killed MID-BATCH — after a torn
-  * table partial landed for that batch but before the rest of the
+  * kind-table dir landed for that batch but before the rest of the
   * batch's writes — and restarted from its checkpoint. The replayed
-  * batch overwrites the torn partial (every per-batch artifact is a
+  * batch overwrites the torn dir (every per-batch artifact is a
   * batch-id-keyed `mode("overwrite")` dir), so the served catalog
   * answer still equals the relational recompute — the streaming
   * rendition of the reference's one-transaction-per-sync atomicity
@@ -33,20 +33,19 @@ class StreamPipelineReplaySpec extends SparkSpecBase {
       StreamQueries.runBatches(StreamQueries.fileStream(spark, srcDir),
         root)(batchFn)
 
-    // Run 1: batch 1 crashes BETWEEN table-partial writes — one kind
-    // table's partial lands TORN (truncated rows) for that batch, then
-    // the sink dies before ids/edges/other kinds are written.
+    // Run 1: batch 1 crashes MID-WRITE of its kind tables — one kind
+    // table's partition dir lands TORN (truncated rows) for that batch,
+    // then the sink dies before the other kinds and the edges are
+    // written.
     @volatile var crashed = false
     val firstKind = graft.model.ModelCompiler.tableKinds(scaleModel).head
+    val torn = s"$root/kinds/batch=1/node_kind=${firstKind.fqn}"
     val crashing: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) => {
       if (id == 1L && !crashed) {
         crashed = true
-        graft.ingest.Flatten
-          .flattenNodes(b.filter(col("type") === "node"), firstKind,
-            scaleModel)
+        graft.ingest.Flatten.flattenNodes(b, firstKind, scaleModel)
           .limit(1)
-          .write.mode("overwrite").parquet(s"$root/tbl_${
-            graft.model.ModelCompiler.tableName(firstKind.fqn)}/batch=$id")
+          .write.mode("overwrite").parquet(torn)
         throw new RuntimeException("injected crash between table partials")
       }
       StreamQueries.pipelineBatch(b, root, id)
@@ -58,30 +57,17 @@ class StreamPipelineReplaySpec extends SparkSpecBase {
     assert(failed.getMessage.contains("injected crash") ||
       Option(failed.getCause).exists(_.getMessage
         .contains("injected crash")), failed.toString)
-    // Batch 0 committed; the torn batch-1 partial is on disk.
-    assert(Files.exists(java.nio.file.Paths.get(
-      s"$root/tbl_${graft.model.ModelCompiler.tableName(firstKind.fqn)}",
-      "batch=1")))
+    // Batch 0 committed; the torn batch-1 partition dir is on disk.
+    assert(Files.exists(java.nio.file.Paths.get(torn)))
 
     // Run 2: restart from the SAME checkpoint with the real sink —
-    // batch 1 replays under the same id (overwriting the torn partial)
-    // and the remaining batches run.
+    // batch 1 replays under the same id (its overwrite of
+    // kinds/batch=1 removes the torn dir) and the remaining batches run.
     run(StreamQueries.pipelineBatch(_, root, _))
 
-    // The served answer (the gate's exact report assembly: edge keying
-    // deferred to ONE join over the folded id domain).
-    val ids = spark.read.parquet(s"$root/ids")
-    val edges = spark.read.parquet(s"$root/edges")
-    val link = graft.ingest.Flatten.keyEdges(edges, ids)
-      .filter(col("from_kind") === "infra_nation" &&
-        col("to_kind") === "infra_customer")
-    val cust = spark.read.parquet(s"$root/tbl_infra_customer")
-    val served = link.join(cust, cust("_id") === link("to_id"))
-      .groupBy(col("from_id").as("nation_id"))
-      .agg(count(lit(1)).as("n_customers"),
-        min(col("name")).as("first_name"),
-        min(col("region")).as("region"))
-      .orderBy("nation_id")
+    // The served answer: the gate's own report (edge keying deferred to
+    // ONE join over the folded node domain).
+    val served = StreamQueries.pipelineReport(spark, root)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2),
         r.getString(3))).toSeq
 

@@ -258,6 +258,34 @@ class SyncE2ESpec extends SparkSpecBase {
     assert(spark.table("link_sized_disk_sized_bucket").count() == 1)
   }
 
+  test("a complex property inferred as a string parses its JSON text") {
+    // One kind declares `p` a string, another an array: JSON inference
+    // merges the column to a string holding the array's JSON text.
+    val m = Model(
+      Kind("resource", properties = Seq(
+        Property("id", "string"), Property("name", "string"),
+        Property("kind", "string"))),
+      Kind("k_a", bases = Seq("resource"),
+        properties = Seq(Property("p", "string"))),
+      Kind("k_b", bases = Seq("resource"),
+        properties = Seq(Property("p", "string[]"))))
+    val env = spark.read.json(spark.createDataset(Seq(
+      node("k_a", "a1", ""","p":"v""""),
+      node("k_b", "b1", ""","p":["x","y"]"""),
+      node("k_b", "b2", ""","p":"w"""")))(
+      org.apache.spark.sql.Encoders.STRING))
+    assert(env.schema("reported").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]("p").dataType ==
+      org.apache.spark.sql.types.StringType)
+    val base = Files.createTempDirectory("graft_sync_str_complex").toString
+    graft.Sync.toParquet(spark, env, m, base)
+    assert(spark.table("k_a").select("p").collect().map(_.getString(0))
+      .toSeq == Seq("v"))
+    val ps = spark.table("k_b").select("_id", "p").collect()
+      .map(r => r.getString(0) -> Option(r.getSeq[String](1))).toMap
+    assert(ps == Map("b1" -> Some(Seq("x", "y")), "b2" -> None))
+  }
+
   test("a sync leaves only prod tables in its base dir, also when it fails") {
     import spark.implicits._
     def env(ls: Seq[String]) = spark.read.json(spark.createDataset(ls))

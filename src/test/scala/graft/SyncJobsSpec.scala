@@ -10,7 +10,9 @@ import graft.streaming.ProgressFeedback
   * moves those dirs into place, so a graph with five observed kind
   * pairs syncs with as many jobs as one with a single pair, and a graph
   * over six table kinds with as many as one over two; a JDBC sync reads
-  * them, so its input reads grow only by the new edges. */
+  * them, so its input reads grow only by the new edges. A streaming
+  * sync's micro-batch writes its kind tables through the same one
+  * staging job, and its raw edges in one more. */
 class SyncJobsSpec extends SparkSpecBase {
 
   private val kinds = Seq("jc_a", "jc_b", "jc_c", "jc_d", "jc_e", "jc_f")
@@ -61,6 +63,31 @@ class SyncJobsSpec extends SparkSpecBase {
     val two = syncJobs(1, kinds.take(2))
     val six = syncJobs(1, kinds)
     assert(six == two, s"2 table kinds: $two jobs, 6 table kinds: $six jobs")
+  }
+
+  test("a streaming sync batch writes its kind tables and edges in two jobs") {
+    import spark.implicits._
+    import graft.queries.{PipelineQueries, StreamQueries}
+    // Three nations and six customers, enveloped by the gate's builder.
+    val sf = Files.createTempDirectory("graft_spipe_jobs_sf").toString
+    (0 until 3).map(n => (n, s"NATION$n", n % 2))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+      .write.parquet(s"$sf/nation.parquet")
+    (0 until 6).map(c => (c, s"Customer#$c", c % 3))
+      .toDF("c_custkey", "c_name", "c_nationkey")
+      .write.parquet(s"$sf/customer.parquet")
+    // The batch is read from parquet, as the stream reads it, so no job
+    // runs to compute it but the writes' own.
+    val src = Files.createTempDirectory("graft_spipe_jobs_src").toString
+    PipelineQueries.scaleEnvelopes(spark, sf)
+      .write.mode("overwrite").parquet(src)
+    val batch = spark.read.parquet(src)
+    val root = Files.createTempDirectory("graft_spipe_jobs").toString
+    val (_, snap) = ProgressFeedback.withProgress(spark)() {
+      StreamQueries.pipelineBatch(batch, root, 0L)
+    }
+    assert(snap.jobsStarted == 2, s"${snap.jobsStarted} jobs")
+    assert(new java.io.File(root).list().toSet == Set("kinds", "edges"))
   }
 
   /** Input records read by one `Sync.toJdbc` of [[graph]] into embedded

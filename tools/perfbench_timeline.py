@@ -10,7 +10,8 @@ prints one line per Spark job of the last timed cycle: the span it ran
 in, its start offset from the cycle's start, its wall time, its tasks,
 its executor run time and the first graft frame of its call site. The
 closing lines give each span's wall time and the part of it no job
-covers (driver-only time).
+covers (driver-only time), split into the time before its first job
+(planning), between its jobs and after its last job (publishing).
 """
 
 import json
@@ -64,16 +65,21 @@ def main():
             sum(s.get("tasks", 0) for s in stages),
             sum(s.get("run_ms", 0) for s in stages), call_site(tr, j)))
     print()
-    print("%-14s %8s %8s %6s" % ("span", "wall_ms", "gap_ms", "jobs"))
+    print("%-14s %8s %8s %8s %8s %8s %6s" % (
+        "span", "wall_ms", "gap_ms", "before", "between", "after", "jobs"))
     for sid in sorted(tr.subtree(root["id"])):
         s = tr.spans[sid]
         lo, hi = s["start_ms"], s["start_ms"] + s["dur_s"] * 1e3
         under = tr.jobs_under(sid)
-        covered = union_ms([(j["start_ms"], j["end_ms"]) for j in under],
-                           lo, hi)
-        print("%-14s %8.0f %8.0f %6d" % (s["name"], s["dur_s"] * 1e3,
-                                         s["dur_s"] * 1e3 - covered,
-                                         len(under)))
+        iv = [(j["start_ms"], j["end_ms"]) for j in under]
+        covered = union_ms(iv, lo, hi)
+        # The gap's parts: before the first job starts, uncovered between
+        # the first job's start and the last job's end, after that end.
+        first = min([max(a, lo) for a, _ in iv] + [hi])
+        last = max([min(b, hi) for _, b in iv] + [first])
+        print("%-14s %8.0f %8.0f %8.0f %8.0f %8.0f %6d" % (
+            s["name"], hi - lo, hi - lo - covered, first - lo,
+            last - first - covered, hi - last, len(under)))
 
 
 if __name__ == "__main__":
