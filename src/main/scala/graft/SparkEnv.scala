@@ -80,4 +80,21 @@ object SparkEnv {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with the SQL confs `confs` set on `s`, then put each
+    * key back as it was: its explicit session setting, or unset when it
+    * had none. (`conf.getOption` cannot tell the two apart: for an unset
+    * registered conf it returns the default, and restoring that by `set`
+    * would leave the key set.) Session-global: callers run one query at
+    * a time on the session. */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val explicit = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> explicit.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

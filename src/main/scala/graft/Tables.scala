@@ -196,10 +196,8 @@ object Tables {
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "Tables.events requires spark.sql.session.timeZone=UTC for " +
         "fixture-generation-independent instants")
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
+    SparkEnv.withConfs(spark,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
       raw.schema("ts").dataType match {
@@ -217,11 +215,6 @@ object Tables {
         case other => throw new IllegalStateException(
           s"events.parquet ts has unexpected type $other; expected " +
             "INT64 (nanos-as-long), TIMESTAMP_NTZ (micros) or TIMESTAMP")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
     }
   }

@@ -924,17 +924,10 @@ object ExtraQueries {
   }
 
   /** Run `body` with auto-broadcast disabled, restoring the previous
-    * threshold on exit (the StreamQueries scoped-conf protocol). */
-  private[graft] def withoutBroadcast[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "-1")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+    * threshold on exit. */
+  private[graft] def withoutBroadcast[A](s: SparkSession)(body: => A): A =
+    graft.SparkEnv.withConfs(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** Morton/Z-order bit-spread of the low 16 bits of a key: the
     * classic shift-or-mask cascade (0x00FF00FF / 0x0F0F0F0F /

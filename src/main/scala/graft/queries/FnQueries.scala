@@ -226,14 +226,9 @@ object FnQueries {
         val before = census()
         val batch = docs.filter(col("lang") === "en")
           .withColumn("n_chars", col("n_chars") + 1L)
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "dynamic")
-        try batch.write.mode("overwrite").partitionBy("lang").parquet(dir)
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
+        graft.SparkEnv.withConfs(s,
+            "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+          batch.write.mode("overwrite").partitionBy("lang").parquet(dir))
         val untouched = census() == before
         s.read.parquet(dir)
           .groupBy("lang", "source")

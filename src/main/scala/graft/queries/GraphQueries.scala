@@ -35,27 +35,12 @@ object GraphQueries {
     n.unionByName(c).unionByName(su)
   }
 
-  def reach(s: SparkSession, d: String, maxDepth: Int): DataFrame = {
-    val roots = t(s, d, "region")
-      .select(concat(lit("R"), col("r_regionkey")).as("node"),
-        lit(0).as("depth"))
-    var frontier = roots
-    var reached = roots
-    for (depth <- 1 to maxDepth) {
-      // Fresh edge lineage per step — re-using one DataFrame across a
-      // self-referencing iteration makes its attributes ambiguous.
-      val e = edges(s, d)
-      // distinct per level: on graphs with converging paths the
-      // per-path frontier multiplies exponentially with depth.
-      frontier = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"), lit(depth).as("depth"))
-        .distinct()
-      reached = reached.unionByName(frontier)
-    }
-    reached.groupBy("node").agg(min("depth").as("depth"))
+  def reach(s: SparkSession, d: String, maxDepth: Int): DataFrame =
+    graft.sources.GraphSource.reach(t(s, d, "region")
+        .select(concat(lit("R"), col("r_regionkey")).as("node")),
+      maxDepth, () => edges(s, d))
       .filter(col("depth") >= 2)
       .orderBy("node")
-  }
 
   /** Fixed-point integer PageRank (damping 0.85, `iters` rounds) over
     * the FK edge graph. Every step is the Pregel shape: join ranks to
@@ -228,8 +213,8 @@ object GraphQueries {
     labels.orderBy("node")
   }
 
-  /** The undirected FK edge list (fresh lineage per use — see reach()
-    * on self-join ambiguity). */
+  /** The undirected FK edge list (fresh lineage per use — see
+    * GraphSource.reach on self-join ambiguity). */
   private def und(s: SparkSession, d: String): DataFrame =
     undOf(edges(s, d))
 
@@ -538,29 +523,16 @@ object GraphQueries {
     * and is silently replanned at 4 partitions with AQE off. */
   private def withIterParts[T](s: SparkSession, stateRows: Long)
       (body: => T): T = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val iKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val aKey = "spark.sql.adaptive.enabled"
-    val prevP = s.conf.get(pKey)
-    val prevI = s.conf.getOption(iKey)
-    val prevA = s.conf.get(aKey, "true")
-    val parts = math.max(4L,
-      math.min(prevP.toLong, stateRows / 500000L + 4L))
-    s.conf.set(pKey, parts.toString)
-    s.conf.set(iKey, parts.toString)
+    val parts = math.max(4L, math.min(
+      s.conf.get("spark.sql.shuffle.partitions").toLong,
+      stateRows / 500000L + 4L)).toString
     // AQE re-plans every stage of every round — pure overhead once the
     // loop's shuffle width is already sized to the state; its runtime
     // decisions (coalesce, join flips) have nothing left to improve on
     // a 4-partition fixpoint step.
-    s.conf.set(aKey, "false")
-    try body finally {
-      s.conf.set(pKey, prevP)
-      s.conf.set(aKey, prevA)
-      prevI match {
-        case Some(v) => s.conf.set(iKey, v)
-        case None => s.conf.unset(iKey)
-      }
-    }
+    graft.SparkEnv.withConfs(s, "spark.sql.shuffle.partitions" -> parts,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> parts,
+      "spark.sql.adaptive.enabled" -> "false")(body)
   }
 
   /** Weighted directed edge list for SSSP — derived from the schema so

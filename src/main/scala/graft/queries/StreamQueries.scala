@@ -165,25 +165,14 @@ object StreamQueries {
     * ext4 is not the bottleneck). */
   private def withStreamGateConfs[T](s: SparkSession)(run: => T): T = {
     val parts = "4"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = Seq(partsKey, initKey, noDataKey, providerKey)
-      .map(k => k -> s.conf.getOption(k))
-    s.conf.set(partsKey, parts)
-    sys.props.get("graft.stream.initparts").getOrElse(parts) match {
-      case "off" => ()
-      case v => s.conf.set(initKey, v)
-    }
-    s.conf.set(noDataKey, "false")
-    sys.props.get("graft.stream.state.provider").filter(_.nonEmpty)
-      .foreach(s.conf.set(providerKey, _))
-    try run
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    val init = sys.props.get("graft.stream.initparts").getOrElse(parts)
+    val confs = Seq("spark.sql.shuffle.partitions" -> parts,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++
+      Some(init).filter(_ != "off").map(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> _) ++
+      sys.props.get("graft.stream.state.provider").filter(_.nonEmpty).map(
+        "spark.sql.streaming.stateStore.providerClass" -> _)
+    graft.SparkEnv.withConfs(s, confs: _*)(run)
   }
 
   /** A gate's scratch root `graft_<name>_<tag>`. */
@@ -245,12 +234,12 @@ object StreamQueries {
     * single-file write action costs ~110 ms of mostly serial
     * driver/commit floor, so a sink with k independent writes pays ~k×
     * that serially). Blocks until all complete. On the first failure
-    * the pool cancels the batch's Spark jobs and drains before
-    * rethrowing, so foreachBatch fails the batch loudly, the replay
-    * re-runs it whole, and no write outlives the failed attempt. */
-  private def batchWrites(s: SparkSession)(
-      writes: (String, () => Unit)*): Unit = {
-    graft.sink.TableSink.forEachTable(writes.toMap, Some(s), poolSize = 3)(
+    * the pool stops the batch's Spark jobs, and rethrows only once none
+    * of their tasks is active, so foreachBatch fails the batch loudly,
+    * the replay re-runs it whole, and no write outlives the failed
+    * attempt. */
+  private def batchWrites(writes: (String, () => Unit)*): Unit = {
+    graft.sink.TableSink.forEachTable(writes.toMap, poolSize = 3)(
       (_, write) => write())
     ()
   }
@@ -303,7 +292,7 @@ object StreamQueries {
           .join(s.read.parquet(priorDirs: _*).select("digest"),
             Seq("digest"), "left_anti")
       // The two artifacts are independent given obs — overlap them.
-      batchWrites(s)(
+      batchWrites(
         "obs" -> (() => obs.write.mode("overwrite")
           .parquet(batchDir(root, "obs", batchId))),
         "idx" -> (() => accepted.write.mode("overwrite")
@@ -343,7 +332,7 @@ object StreamQueries {
     // logged candidates are unchanged — StreamAnnSpec pins equality
     // with the batch-mode candidate set).
     val buck = VectorQueries.bucketsOf(vecs, bits).persist()
-    try batchWrites(s)(
+    try batchWrites(
       "idx" -> (() =>
         buck.write.mode("overwrite").parquet(batchDir(root, "idx", batchId))),
       "obs" -> (() => buck
@@ -565,7 +554,7 @@ object StreamQueries {
     val b = batch.persist()
     // The two artifacts are independent given the cached batch —
     // overlap them (r19, guide §2.6).
-    try batchWrites(b.sparkSession)(
+    try batchWrites(
       "sums" -> (() => writePartial(b.agg(
         sum(when(col("l_orderkey").isNull, 1L).otherwise(0L))
           .as("null_orderkey"),
@@ -601,7 +590,7 @@ object StreamQueries {
     // decoded ONCE; they are independent given the cached batch, so
     // they overlap.
     val b = batch.persist()
-    try batchWrites(b.sparkSession)(
+    try batchWrites(
       "kinds" -> (() => { graft.Sync.writeKindTables(b, scaleModel,
         batchDir(root, "kinds", batchId)); () }),
       "edges" -> (() => b.filter(col("type") === "edge")
@@ -645,7 +634,7 @@ object StreamQueries {
         Map("mode" -> "PERMISSIVE",
           "columnNameOfCorruptRecord" -> "_corrupt_record")).as("j"))
       .persist()
-    try batchWrites(batch.sparkSession)(
+    try batchWrites(
       // The quarantine and the clean census are independent given the
       // cached parse — overlap the two commits (r19, guide §2.6).
       "bad" -> (() => parsed.filter(col("j._corrupt_record").isNotNull)
@@ -962,7 +951,7 @@ object StreamQueries {
       .select("event_id", "us", "user_id", "event_type", "cents")
     // Data file and its manifest stats are independent given the batch
     // — overlap the two commits (r19, guide §2.6).
-    batchWrites(batch.sparkSession)(
+    batchWrites(
       "data" -> (() =>
         b.write.mode("overwrite").parquet(batchDir(root, "data", batchId))),
       "manifest" -> (() => b.agg(min("us").as("us_min"),

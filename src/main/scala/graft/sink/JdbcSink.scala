@@ -48,8 +48,9 @@ object JdbcSink {
     // SQLExceptions. Each table additionally retries transient
     // lock/deadlock errors a few times before failing the sync, so one
     // unlucky DDL collision does not cancel every in-flight table write.
-    TableSink.forEachTable(tables,
-        tables.values.headOption.map(_.sparkSession), poolSize = 4) {
+    // A table that fails for good stops every sibling's jobs, and a
+    // retry's, before the sync fails (the pool's stop protocol).
+    TableSink.forEachTable(tables, poolSize = 4) {
       (name, df) => retryTransient(name) {
         val w = TableSink.stringifyNested(df).write
           .mode("overwrite")

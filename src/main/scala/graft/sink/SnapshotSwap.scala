@@ -1,19 +1,20 @@
 package graft.sink
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Atomic staging→prod snapshot swap (P12) — the Spark-native analogue of
   * the reference's temp-table rename protocol (reference: sql.py:129-159:
   * write `tmp_*`, then ALTER TABLE RENAME into place inside one sync).
   *
-  * Protocol: stage the new snapshot at `<base>/_staging_<table>` —
-  * write it there (`write`; `TableSink.writeAllCsv` writes CSV through
-  * the same `swapIn`), or move a dir some earlier job already
-  * wrote there (`publishDir`: every table of a `Sync`, kind and link
+  * Protocol: the new snapshot is a complete parquet dir on the base
+  * dir's filesystem — written at `<base>/_staging_<table>` (`write`;
+  * `TableSink.writeAllCsv` writes CSV through the same `swapIn`), or
+  * left by some earlier job (every table of a `Sync`, kind and link
   * alike, is its partition dir of the sync's staging scans, or a
-  * schema-only dir for an empty table) — then atomically move it to
-  * `<base>/<table>` (previous
+  * schema-only dir for an empty table). `publishDir` is the one commit
+  * step: it atomically moves that dir to `<base>/<table>` (previous
   * snapshot moved aside and dropped only after the new one is in
   * place). A reader that resolves the prod path after the swap sees the
   * complete new snapshot — never a mix. A DataFrame or view resolved
@@ -24,6 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table was written or moved: a view is stale only between the two
   * steps, and a table whose swap never ran keeps serving its previous
   * snapshot.
+  *
+  * A failed write stops its jobs one way, here: [[stopJobsOnFailure]]
+  * around a caller's jobs, and [[stopTagged]] for `TableSink`'s pool,
+  * which tags its workers' jobs itself. Either waits until none of the
+  * stopped jobs' tasks is active, so no task outlives the failure.
   *
   * Directory rename is atomic on local/HDFS filesystems; on object stores
   * you would repoint a view/manifest instead (same contract, documented
@@ -54,21 +60,27 @@ object SnapshotSwap {
     swapIn(base, table)(stageParquet(df, _))
 
   /** Publish an already-written parquet dir as the new snapshot of
-    * `table`: moved into the staging dir, then swapped in like a written
-    * one; returns the prod path. `dir` must be on the same filesystem as
-    * `base`. */
-  def publishDir(dir: Path, base: String, table: String): String =
-    swapIn(base, table)(
-      Files.move(dir, _, StandardCopyOption.ATOMIC_MOVE))
+    * `table`: the previous snapshot is moved aside, `dir` is moved into
+    * its place, and the previous one is dropped. Returns the prod path.
+    * `dir` must be on the same filesystem as `base`, and `base` must
+    * exist. */
+  def publishDir(dir: Path, base: String, table: String): String = {
+    val prod = Paths.get(base, table)
+    val old = Paths.get(base, s"_old_$table")
+    rm(old)
+    if (Files.exists(prod))
+      Files.move(prod, old, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(dir, prod, StandardCopyOption.ATOMIC_MOVE)
+    rm(old)
+    prod.toString
+  }
 
-  /** Fill `<base>/_staging_<table>` with `stage`, then swap it in as
-    * `<base>/<table>`: the previous snapshot is moved aside and dropped
-    * only after the new one is in place. Returns the prod path. */
+  /** Fill `<base>/_staging_<table>` with `stage`, stopping its jobs if it
+    * fails, then publish it as `<base>/<table>` ([[publishDir]]). Returns
+    * the prod path. */
   private[sink] def swapIn(base: String, table: String)(stage: Path => Unit)
       : String = {
     val staging = Paths.get(base, s"_staging_$table")
-    val prod = Paths.get(base, table)
-    val old = Paths.get(base, s"_old_$table")
     Files.createDirectories(Paths.get(base))
     rm(staging)
     try stopJobsOnFailure(stage(staging))
@@ -78,13 +90,15 @@ object SnapshotSwap {
       scala.util.Try(rm(staging)).failed.foreach(t.addSuppressed)
       throw t
     }
-    rm(old)
-    if (Files.exists(prod))
-      Files.move(prod, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staging, prod, StandardCopyOption.ATOMIC_MOVE)
-    rm(old)
-    prod.toString
+    publishDir(staging, base, table)
   }
+
+  /** The SparkContext of the calling thread's session, else of the
+    * default one. Resolve it on the thread that starts the work: the
+    * active session is thread-local. */
+  private[sink] def context: Option[SparkContext] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
 
   /** Run `body` with a job tag of its own; if it throws, first stop
     * the jobs it started. A failed job returns while sibling tasks still
@@ -92,8 +106,7 @@ object SnapshotSwap {
     * re-create what the cleanup removed. A failure to stop them rides
     * along with the body's own error. */
   private[graft] def stopJobsOnFailure[T](body: => T): T = {
-    val sc = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val sc = context
     val tag = s"graft-swap-${java.util.UUID.randomUUID()}"
     sc.foreach(_.addJobTag(tag))
     try body
@@ -105,10 +118,11 @@ object SnapshotSwap {
   }
 
   /** Cancel the jobs tagged `tag` and wait, at most [[StopTimeoutMs]],
-    * until none of their tasks is active. The status tracker is fed by
-    * the listener bus, so each look follows a bus drain. */
-  private def stopTagged(sc: org.apache.spark.SparkContext, tag: String)
-      : Unit = {
+    * until none of their tasks is active. A job submitted after the
+    * cancellation runs: a caller whose threads may still submit calls
+    * this again until they have ended. The status tracker is fed by the
+    * listener bus, so each look follows a bus drain. */
+  private[sink] def stopTagged(sc: SparkContext, tag: String): Unit = {
     sc.cancelJobsWithTag(tag)
     val tracker = sc.statusTracker
     def activeTasks: Int = {

@@ -1,6 +1,9 @@
 package graft.sink
 
 import java.nio.file.Path
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+  ExecutorService, Executors, TimeUnit}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
@@ -28,115 +31,99 @@ object TableSink {
     * on sync_many_kinds (1.42 s both). Bounded (not tables.size) so a
     * 500-kind model does not start 500 threads. A table passed as a
     * DataFrame ([[writeAll]]'s `tables`, [[writeAllCsv]]) runs its write
-    * job on the pool. */
+    * job on the pool; if one fails, the pool stops its siblings'
+    * jobs as [[forEachTable]] states. */
   private val SyncPool = 8
 
   /** Run `f` over the table map on a pool of at most `poolSize` workers,
-    * preserving per-table failure (first exception rethrown after the
-    * pool drains). The items must not race on input or output: in a
-    * parquet sync each table moves its own partition dir out of Sync's
-    * staging scans. */
+    * preserving per-table failure. The items must not race on input or
+    * output: in a parquet sync each table moves its own partition dir
+    * out of Sync's staging scans.
+    *
+    * Every job a worker submits carries one job tag per call, and
+    * cancelling it interrupts its tasks (a JDBC write blocked in a
+    * socket call). On the first failure the queued items are dropped,
+    * and the tag's jobs are stopped ([[SnapshotSwap.stopTagged]]: no task
+    * of theirs still active) until every running item has ended, and
+    * once more after that: a worker between two actions (a JDBC retry
+    * in its backoff) submits its next job after an earlier stop. Only
+    * then is the failure rethrown, so a caller that cleans or retries
+    * the base dir never races a write of this call. Items that finished
+    * before the failure keep their effect: each table's swap is atomic
+    * and independent. A single item runs on the calling thread under
+    * [[SnapshotSwap.stopJobsOnFailure]], with the same guarantee. */
   private[graft] def forEachTable[A, B](tables: Map[String, A],
-      session: Option[SparkSession] = None, poolSize: Int = SyncPool)(
-      f: (String, A) => B): Map[String, B] = {
+      poolSize: Int = SyncPool)(f: (String, A) => B): Map[String, B] = {
     val items = tables.toSeq
     val bound = math.min(poolSize, math.max(1, items.size))
-    if (bound <= 1) return items.map { case (n, a) => n -> f(n, a) }.toMap
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(bound,
+    if (bound <= 1) return SnapshotSwap.stopJobsOnFailure(
+      items.map { case (n, a) => n -> f(n, a) }.toMap)
+    val sc = SnapshotSwap.context
+    val tag = s"graft-sync-write-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(bound,
       r => { val t = new Thread(r, "graft-sync-write"); t.setDaemon(true); t })
-    // One job group for the whole sync (thread-local, set per worker):
-    // cancellation must stop the SPARK JOBS, not just interrupt the
-    // submitting threads — an interrupted thread returns while its
-    // already-scheduled job keeps writing part- files into staging.
-    // The session is resolved ONCE on the calling thread (getActiveSession
-    // is thread-local and would be None inside the pool workers); callers
-    // that hold DataFrames pass their own session so cancellation works
-    // even when no default session is set.
-    val groupId = s"graft-sync-write-${java.util.UUID.randomUUID()}"
-    val sess = session
-      .orElse(org.apache.spark.sql.SparkSession.getActiveSession)
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    if (sess.isEmpty)
-      System.err.println("graft-sync-write: no SparkSession available; " +
-        "failure-path job cancellation is disabled for this sync")
     try {
       // Completion-ordered observation (ExecutorCompletionService), not
       // submission-ordered gets: the FIRST failing table surfaces as
-      // soon as it fails, so cancellation reaches still-running sibling
+      // soon as it fails, so the stop reaches still-running sibling
       // writes — with in-order gets, a failure in table k would go
-      // unobserved until tables 1..k-1 finished, and a 500-kind sync
-      // would run hundreds of doomed writes to completion first.
-      val ecs = new java.util.concurrent.ExecutorCompletionService[
-        (String, B)](pool)
+      // unobserved until tables 1..k-1 finished.
+      val ecs = new ExecutorCompletionService[(String, B)](pool)
       val futures = items.map { case (n, a) =>
-        ecs.submit(new java.util.concurrent.Callable[(String, B)] {
-          override def call(): (String, B) = {
-            sess.foreach(_.sparkContext.setJobGroup(groupId,
-              s"sync write $n", interruptOnCancel = true))
-            try n -> f(n, a)
-            finally sess.foreach(_.sparkContext.clearJobGroup())
-          }
+        ecs.submit(() => {
+          // Thread-local, on threads that end with this call.
+          sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+          n -> f(n, a)
         })
       }
-      try {
-        val out = Map.newBuilder[String, B]
-        var taken = 0
-        while (taken < items.size) {
-          val fu = ecs.take(); taken += 1
-          out += (try fu.get()
-                  catch { case e: java.util.concurrent.ExecutionException =>
-                    throw e.getCause })
-        }
-        out.result()
-      } catch { case t: Throwable =>
-        // A failed sync must not keep writing OTHER tables in the
-        // background: cancel the group's running AND FUTURE Spark jobs
-        // first (cancelJobGroupAndFutureJobs — plain cancelJobGroup
-        // only kills jobs active at call time, so a worker that was
-        // BETWEEN actions, e.g. sleeping in a JDBC retry backoff,
-        // would submit fresh jobs under the dead group and run its
-        // whole write to completion), then drop queued work, and DRAIN
-        // the pool before surfacing the first failure. Workers blocked
-        // inside a write action are NOT thread-interrupted
-        // (cancel(false)): they must stay blocked until their Spark
-        // job actually terminates with the cancellation error, so pool
-        // drain is equivalent to job termination and a caller that
-        // catches and cleans/retries the base dir never races a zombie
-        // write. Tables that COMPLETED before the failure surfaced
-        // stay published — each table's staging->prod swap is atomic
-        // and independent by design.
-        sess.foreach(_.sparkContext.cancelJobGroupAndFutureJobs(groupId))
+      try Seq.fill(items.size)(
+        try ecs.take().get()
+        catch { case e: ExecutionException => throw e.getCause }).toMap
+      catch { case t: Throwable =>
+        // cancel(false): a running item is not interrupted; it ends
+        // when its job is stopped.
         futures.foreach(_.cancel(false))
         pool.shutdown()
-        // A failed/interrupted drain must NEVER report "drained": the
-        // caller would clean/retry the base dir while sibling writes
-        // are still landing part- files.
-        val drained =
-          try pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-          catch { case _: InterruptedException =>
-            Thread.currentThread().interrupt(); false }
-        if (!drained) {
-          val e = new IllegalStateException(
-            "graft-sync-write pool failed to drain (timeout or caller " +
-              "interrupt) after job-group cancellation; staging dirs may " +
-              "still be receiving writes — do NOT clean/retry the base dir")
-          e.addSuppressed(t)
-          throw e
-        }
+        scala.util.Try(stopUntilDrained(pool, sc, tag)).failed.foreach {
+          e => e.addSuppressed(t); throw e }
         throw t
       }
     } finally pool.shutdown()
   }
 
+  /** Stop the jobs tagged `tag` until `pool` has terminated, then once
+    * more. Throws if the pool has not drained after 10 minutes, or the
+    * caller is interrupted: its writes may still be landing. */
+  private def stopUntilDrained(pool: ExecutorService,
+      sc: Option[SparkContext], tag: String): Unit = {
+    def stop(): Unit = sc.foreach(SnapshotSwap.stopTagged(_, tag))
+    val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(10)
+    val drained =
+      try {
+        stop()
+        while (!pool.awaitTermination(20, TimeUnit.MILLISECONDS) &&
+               System.nanoTime() < deadline) stop()
+        if (pool.isTerminated) stop()
+        pool.isTerminated
+      } catch { case _: InterruptedException =>
+        Thread.currentThread().interrupt(); false }
+    if (!drained)
+      throw new IllegalStateException(
+        "graft-sync-write pool failed to drain (timeout or caller " +
+          "interrupt) after its jobs were cancelled; staging dirs may " +
+          "still be receiving writes — do NOT clean/retry the base dir")
+  }
+
   /** A parquet dir some earlier write left, on the base dir's
     * filesystem, with the schema of its files. [[writeAll]] publishes it
-    * by moving it into the table's staging dir. */
+    * by moving it into place. */
   final case class WrittenDir(dir: Path, schema: StructType)
 
   /** Publish every table; returns the prod path per table. Publishing
     * one table is one pooled task: swap it in — `tables` are written
-    * (`SnapshotSwap.write`), `written` dirs moved into place
-    * (`SnapshotSwap.publishDir`), so they cost no Spark job; every table
+    * (`SnapshotSwap.write`: staged, then published), `written` dirs
+    * moved into place (`SnapshotSwap.publishDir`: no staging dir, no
+    * Spark job, no job tag); every table
     * of a `Sync`, kind and link alike, is such a dir — then register its
     * temp view over the new prod dir with the known schema, so no
     * schema-inference job runs, and no view is left listing files the
@@ -151,7 +138,7 @@ object TableSink {
     val entries: Map[String, Either[DataFrame, WrittenDir]] =
       tables.map { case (n, df) => n -> Left(df) } ++
         written.map { case (n, d) => n -> Right(d) }
-    forEachTable(entries, Some(spark)) { (name, entry) =>
+    forEachTable(entries) { (name, entry) =>
       val (prod, schema) = entry match {
         case Left(df) => (SnapshotSwap.write(df, base, name), df.schema)
         case Right(d) => (SnapshotSwap.publishDir(d.dir, base, name), d.schema)
@@ -182,12 +169,11 @@ object TableSink {
     * text automatically. Each table is staged and swapped in like a
     * parquet one, so a failed write keeps its previous snapshot. */
   def writeAllCsv(tables: Map[String, DataFrame], base: String): Unit = {
-    forEachTable(tables, tables.values.headOption.map(_.sparkSession)) {
-      (name, df) =>
-        SnapshotSwap.swapIn(base, name) { staging =>
-          stringifyNested(df).write.option("header", "true")
-            .csv(staging.toString)
-        }
+    forEachTable(tables) { (name, df) =>
+      SnapshotSwap.swapIn(base, name) { staging =>
+        stringifyNested(df).write.option("header", "true")
+          .csv(staging.toString)
+      }
     }
     ()
   }

@@ -431,34 +431,27 @@ object GraphSource {
     case TruePred => lit(true)
   }
 
-  /** Node ids whose shortest distance from `roots` (a single `node`
-    * column) along default edges lies in [hop.min, effective max] — a
-    * bounded iterative frontier join with per-level distinct so the
-    * frontier is bounded by the node count on converging/cyclic
-    * graphs. */
-  private def reach(envelopes: DataFrame, roots: DataFrame,
-      hop: Traversal, depthCap: Int): DataFrame = {
-    val effMax = hop.max.getOrElse(depthCap)
-    require(hop.min <= effMax,
-      s"traversal min ${hop.min} exceeds max depth $effMax")
+  /** Every node within `maxDepth` hops of `roots` (a single `node`
+    * column) along the `src` → `dst` edges `edges` builds, with its
+    * shortest distance (`node`, `depth`; a root is at depth 0) — a
+    * bounded iterative frontier join with per-level distinct, so the
+    * frontier is bounded by the node count on converging/cyclic graphs.
+    * `edges` is called once per level: after the first join the
+    * frontier carries the edge relation's lineage, and reusing one
+    * DataFrame instance on both sides trips Spark's ambiguous-self-join
+    * detection. */
+  private[graft] def reach(roots: DataFrame, maxDepth: Int,
+      edges: () => DataFrame): DataFrame = {
     var frontier = roots.select(col("node"), lit(0).as("depth"))
     var reached = frontier
-    for (depth <- 1 to effMax) {
-      // Rebuilt per level: after the first join the frontier carries
-      // the edge relation's lineage, and reusing one DataFrame instance
-      // on both sides trips Spark's ambiguous-self-join detection.
-      val e0 = edges(envelopes)
-      val e =
-        if (hop.reverse) e0.select(col("to").as("src"), col("from").as("dst"))
-        else e0.select(col("from").as("src"), col("to").as("dst"))
+    for (depth <- 1 to maxDepth) {
+      val e = edges()
       frontier = frontier.join(e, frontier("node") === e("src"))
         .select(e("dst").as("node"), lit(depth).as("depth"))
         .distinct()
       reached = reached.unionByName(frontier)
     }
-    reached.groupBy("node").agg(min(col("depth")).as("d"))
-      .filter(col("d") >= hop.min && col("d") <= effMax)
-      .select("node")
+    reached.groupBy("node").agg(min(col("depth")).as("depth"))
   }
 
   /** Evaluate a parsed chain against node envelopes: filter nodes by
@@ -471,8 +464,15 @@ object GraphSource {
     val n = nodes(envelopes)
     var current = n.filter(predColumn(chain.steps.head))
     chain.hops.zip(chain.steps.tail).foreach { case (hop, step) =>
-      val roots = current.select(col("id").as("node"))
-      val within = reach(envelopes, roots, hop, depthCap)
+      // The nodes whose shortest distance along default edges lies in
+      // [hop.min, effective max].
+      val effMax = hop.max.getOrElse(depthCap)
+      require(hop.min <= effMax,
+        s"traversal min ${hop.min} exceeds max depth $effMax")
+      val (src, dst) = if (hop.reverse) ("to", "from") else ("from", "to")
+      val within = reach(current.select(col("id").as("node")), effMax,
+        () => edges(envelopes).select(col(src).as("src"), col(dst).as("dst")))
+        .filter(col("depth") >= hop.min).select("node")
       current = n.join(within, n("id") === within("node")).drop("node")
         .filter(predColumn(step))
     }

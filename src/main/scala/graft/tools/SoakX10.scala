@@ -644,11 +644,9 @@ object SoakX10 {
     // (long-nanos or micros — Tables.events adapts), offset user/event
     // ids per copy so the streaming operators' STATE cardinality
     // scales with the rows.
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    spark.conf.set(key, "true")
-    val ev =
-      try spark.read.parquet(s"$baseSf/events.parquet")
-      finally spark.conf.unset(key)
+    val ev = graft.SparkEnv.withConfs(spark,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true")(
+      spark.read.parquet(s"$baseSf/events.parquet"))
     val nUser = ev.agg(max("user_id")).head().getLong(0) + 1
     val nEv = ev.agg(max("event_id")).head().getLong(0) + 1
     val evCols = ev.columns.toSeq.map {

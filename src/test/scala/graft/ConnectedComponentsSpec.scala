@@ -83,4 +83,27 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       assert(inc == full, s"seed $seed: incremental != full")
     }
   }
+
+  test("the fixpoint loop leaves the confs it scopes as it found them") {
+    // A key with no session setting before the loop has none after it
+    // (not one set to its default); a set key keeps its value.
+    import spark.implicits._
+    val unsetKeys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    val before = spark.conf.getAll
+    unsetKeys.foreach(spark.conf.unset)
+    try {
+      val e = Seq(("a", "b"), ("b", "a"), ("c", "d"), ("d", "c"))
+        .toDF("src", "dst")
+      graft.queries.GraphQueries.ccLoop(spark, e, 3).collect()
+      val after = spark.conf.getAll
+      unsetKeys.foreach(k => assert(after.get(k).isEmpty,
+        s"$k was unset before the loop and is set after it"))
+      assert(after.get("spark.sql.shuffle.partitions") ==
+        before.get("spark.sql.shuffle.partitions"))
+    } finally unsetKeys.foreach(k => before.get(k) match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
+    })
+  }
 }

@@ -10,7 +10,8 @@ import graft.sink.{JdbcSink, TableSink}
   * timeout / deadlock / transaction rollback — Derby 40XL1/40XL2), the
   * cause-chain walk with its cycle guard, the retry/fail-fast split,
   * and the exhausted-retry interaction with the pooled sync front door
-  * (TableSink.forEachTable sibling cancellation). Reference anchor:
+  * (TableSink.forEachTable: it stops its siblings' tagged jobs and
+  * drains before it rethrows). Reference anchor:
   * the per-dialect batch updater this path wraps (sql.py:264-272).
   *
   * The end-to-end case goes through Spark's real JDBC write via a
@@ -127,8 +128,8 @@ class JdbcRetrySpec extends SparkSpecBase {
     // sibling that STARTED has also FINISHED (cancel(false) + drain —
     // no zombie body still running when the caller catches), including
     // the long in-flight one. (A queued sibling MAY still start — the
-    // freed worker races the cancel — but its Spark jobs die under
-    // cancelJobGroupAndFutureJobs, covered by SyncPoolFailureSpec; the
+    // freed worker races the cancel — but the pool stops its tagged
+    // jobs until it has drained, covered by SinkPoolStopSpec; the
     // drain guarantee below is what makes that race harmless.)
     val badAttempts = new AtomicInteger(0)
     val started = new AtomicInteger(0)
@@ -136,7 +137,7 @@ class JdbcRetrySpec extends SparkSpecBase {
     val slowDone = new AtomicBoolean(false)
     val tables = Map("bad" -> 0, "slow" -> 1, "queued" -> 2)
     val thrown = intercept[Throwable] {
-      TableSink.forEachTable(tables, session = None, poolSize = 2) {
+      TableSink.forEachTable(tables, poolSize = 2) {
         (name, _) =>
           name match {
             case "bad" => JdbcSink.retryTransient(name) {

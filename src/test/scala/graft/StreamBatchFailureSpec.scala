@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Failure path of a micro-batch's concurrent writes (the pool the
   * per-batch sinks share with the sync, TableSink.forEachTable): when
   * one write fails while a sibling write's Spark job is still running,
-  * the batch must not return its failure until the sibling is stopped.
+  * the batch must not return its failure until the sibling is stopped
+  * (the pool cancels its tagged jobs and waits until none of their
+  * tasks is active).
   * Otherwise foreachBatch replays the batch while a stale writer is
   * still landing files in the same batch=N dir — a concurrent writer in
   * the exactly-once overwrite protocol. Driven through expectBatch,

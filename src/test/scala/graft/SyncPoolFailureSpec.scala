@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * (TableSink.forEachTable): one table's write fails mid-sync while
   * sibling writes are in flight on the pool. The contract under test is
   * the one a caller that catches-and-retries depends on — by the time
-  * the failure surfaces, the job group is cancelled and the pool is
-  * DRAINED, so no zombie Spark job is still landing part- files into
+  * the failure surfaces, the pool's tagged jobs are stopped (no task of
+  * theirs still active) and the pool is DRAINED, so no zombie Spark job
+  * is still landing part- files into
   * any staging dir, and a retry of the same sync into the same base
   * succeeds cleanly (reference anchor: the one-transaction-per-sync
   * atomicity contract, collect_plugins.py:193-194).
@@ -129,7 +130,7 @@ class SyncPoolFailureSpec extends SparkSpecBase {
       m != null && m.contains("injected sync failure")), thrown.toString)
 
     // (a) No zombie writes: by rethrow time the pool has drained and
-    // the job group is cancelled, so the on-disk census is STABLE —
+    // its tagged jobs are stopped, so the on-disk census is STABLE —
     // no part- file appears or grows afterwards (poll-until-stable,
     // not a fixed sleep).
     val before = census(base)
